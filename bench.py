@@ -141,7 +141,7 @@ HEADLINE = [
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     import __spark_entry__ as entrymod
 

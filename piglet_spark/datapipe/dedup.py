@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .text import normalize_text, fingerprint, text_ngrams
-from .util import spread as _spread, cached_parquet
+from .util import SPREAD_MIN_BYTES, spread as _spread, cached_parquet
 
 # Mersenne prime for the universal-hash family h_i(x) = (a_i x + b_i) mod p
 _P = (1 << 31) - 1  # Mersenne prime 2^31-1 (see _hash_params)
@@ -92,7 +92,7 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
                 id_col: str = "doc_id") -> DataFrame:
     """Keep the lowest-id document per exact (normalized) text
     fingerprint. Returns (keep_id, n_copies)."""
-    return (_spread(df, id_col, min_bytes=2 * 1024 * 1024)
+    return (_spread(df, id_col, min_bytes=SPREAD_MIN_BYTES)
             # normalize+md5 map pass on a 1-row-group local scan
             # otherwise runs on 1 core; tiny inputs stay put (r11)
             .select(F.col(id_col), fingerprint(F.col(text_col)).alias("fp"))
@@ -1215,18 +1215,24 @@ def _bloom_build(bench_df: DataFrame, text_col: str, k: int,
                   .alias("_p"))
               .distinct())                      # ≤ m_bits rows, bounded
     try:
+        import numpy as np
+        import pyarrow  # noqa: F401  (toArrow needs it)
+    except ImportError:
+        np = None
+    if np is not None:
         # Arrow transfer + vectorized bitmap fill (r11): the py4j
         # row collect + per-row Python loop cost ~1 s at 300k set
         # positions; toArrow + numpy bitwise_or build the identical
-        # bitmap (pinned equal in the A/B) in ~0.25 s.
-        import numpy as np
-        arr = (pos_df.toArrow()["_p"]
-               .to_numpy(zero_copy_only=False).astype(np.int64))
+        # bitmap (pinned equal in the A/B) in ~0.25 s. A failed job
+        # raises here — it is never retried through the row path.
+        col = pos_df.toArrow()["_p"]
+        assert col.null_count == 0, "bloom probe positions are never null"
+        arr = col.to_numpy(zero_copy_only=False).astype(np.int64)
         bm = np.zeros(m_bits // 8, dtype=np.uint8)
         np.bitwise_or.at(bm, arr // 8,
                          (1 << (arr % 8)).astype(np.uint8))
         bitmap = bytearray(bm.tobytes())
-    except Exception:  # no pyarrow/numpy → row path, same values
+    else:  # no pyarrow/numpy → row path, same values
         bitmap = bytearray(m_bits // 8)
         for r in pos_df.collect():
             p = r["_p"]

@@ -685,8 +685,8 @@ def attach_binary_payload(df: DataFrame, text_col: str = "text",
     """Build a synthetic binary column from text (test fixture for the
     multimodal path: real datasets carry bytes in parquet the same
     way)."""
-    from .util import spread as _spread
-    df = _spread(df, id_col, min_bytes=2 * 1024 * 1024)  # downstream
+    from .util import SPREAD_MIN_BYTES, spread as _spread
+    df = _spread(df, id_col, min_bytes=SPREAD_MIN_BYTES)  # downstream
     # decode is a Python pass — 1 worker on a 1-row-group local scan
     # otherwise (r11, guide §6)
     return df.select(

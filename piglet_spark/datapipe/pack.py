@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .text import normalize_text, ws_token_count
+from .util import SPREAD_MIN_BYTES, prefix_rank, spread
 
 
 def _hash32(col: Column, salt: str = "") -> Column:
@@ -37,23 +38,9 @@ def _hash32(col: Column, salt: str = "") -> Column:
     return F.conv(F.substring(F.md5(v), 1, 8), 16, 10).cast("bigint")
 
 
-def _pid_offsets(base: DataFrame, weight: Column) -> DataFrame:
-    """(__pid, __off): exclusive prefix sum of ``weight`` across range
-    partitions — ≤ numPartitions rows, broadcast into the downstream
-    cumsum/rank join. Thin wrapper over the shared driver-side
-    TeraSort phase-2 helper (datapipe.util.cum_offsets) also used by
-    :func:`dsir_resample` and the executor's RANK / ZIP WITH INDEX.
-    ``base`` is checkpointed by the caller, so the helper's collect
-    doesn't recompute the upstream."""
-    from .util import cum_offsets
-    stats = base.groupBy("__pid").agg(F.sum(weight).alias("__cnt"))
-    return cum_offsets(stats)[0]
-
-
 def chunk_pack(df: DataFrame, text_col: str = "text",
                id_col: str = "doc_id", seq_len: int = 2048,
-               token_col: Optional[str] = None,
-               small_rows: int = 2_000_000) -> DataFrame:
+               token_col: Optional[str] = None) -> DataFrame:
     """Concat-and-chunk sequence packing: documents concatenated in
     ``id_col`` order and split into fixed ``seq_len``-token training
     sequences. Returns one row per document:
@@ -62,55 +49,25 @@ def chunk_pack(df: DataFrame, text_col: str = "text",
     chunk are the training-sequence ids it lands in, and chunk_offset
     is its position inside the first chunk.
 
-    Scale shape: the global prefix sum is the TeraSort two-phase
-    pattern (same as RANK, executor.py): range-partition on the id,
-    per-partition window cumsum, plus a broadcast of per-partition
-    totals (≤ numPartitions rows collected — never the data). One
-    shuffle; no single-partition global window.
+    Scale shape: start_tok is :func:`datapipe.util.prefix_rank` of
+    the token counts in id order over a pinned narrow (id, n_tokens)
+    projection — one window up to ``util.SMALL_ROWS`` rows, the
+    TeraSort two-phase rank above.
 
     Token counts default to whitespace tokens of ``text_col``; pass
     ``token_col`` to use a precomputed count (e.g. a real tokenizer's
     output carried in the table).
     """
-    from pyspark.sql.window import Window
-
-    spark = df.sparkSession
     toks = (F.col(token_col) if token_col
             else ws_token_count(F.col(text_col))).cast("long")
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # tokenize once: repartitionByRange's range-bounds sampling job
-    # would re-run the token-count scan over the full text otherwise.
+    # tokenize once: the regime count and the range sampler would
+    # re-run the token-count scan over the full text otherwise.
     # spread first — the tokenize on a 1-row-group local scan
     # otherwise runs on 1 core (r11, guide §6; no-op at scale)
-    from .util import spread as _spread
-    counted = _spread(df, min_bytes=2 * 1024 * 1024).select(
+    counted = spread(df, min_bytes=SPREAD_MIN_BYTES).select(
         F.col(id_col), toks.alias("n_tokens")).localCheckpoint()
-    # small-input regime (r11, the take_top_frac/dsir_resample gate):
-    # up to ``small_rows`` (exact count on the already-pinned narrow
-    # checkpoint) the IDENTICAL prefix sum comes from one
-    # constant-key window — the TeraSort machinery's extra eager
-    # checkpoint + offsets collect are pure driver latency there.
-    # Large inputs keep the two-phase rank (a global cumsum of a
-    # 100 TB corpus must never single-partition).
-    if counted.count() <= int(small_rows):
-        w1 = (Window.partitionBy(F.lit(0)).orderBy(id_col)
-              .rowsBetween(Window.unboundedPreceding, -1))
-        out = counted.select(
-            F.col(id_col), F.col("n_tokens"),
-            F.coalesce(F.sum("n_tokens").over(w1), F.lit(0))
-            .alias("start_tok"))
-    else:
-        base = (counted.repartitionByRange(nparts, F.col(id_col))
-                .withColumn("__pid", F.spark_partition_id())
-                .localCheckpoint())  # pin partitioning: stats + cumsum
-        # branches must see the SAME partition ids (rank pattern)
-        offsets = _pid_offsets(base, F.col("n_tokens"))
-        w = (Window.partitionBy("__pid").orderBy(id_col)
-             .rowsBetween(Window.unboundedPreceding, -1))
-        start = (F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-                 + F.col("__off")).alias("start_tok")
-        out = (base.join(F.broadcast(offsets), on="__pid")
-               .select(F.col(id_col), F.col("n_tokens"), start))
+    out, _ = prefix_rank(counted, [F.col(id_col)], F.col("n_tokens"),
+                         "start_tok")
     end = F.col("start_tok") + F.col("n_tokens") - 1
     return out.select(
         id_col, "n_tokens", "start_tok",
@@ -124,8 +81,7 @@ def chunk_pack(df: DataFrame, text_col: str = "text",
 
 def global_shuffle(df: DataFrame, id_col: str = "doc_id",
                    seed: int = 42,
-                   pos_col: str = "shuffle_pos",
-                   small_rows: int = 2_000_000) -> DataFrame:
+                   pos_col: str = "shuffle_pos") -> DataFrame:
     """Deterministic global shuffle: every row gets a reproducible
     pseudo-random global position ``pos_col`` (0-based, dense), the
     order a training run reads the corpus in. Same seed → the same
@@ -142,60 +98,32 @@ def global_shuffle(df: DataFrame, id_col: str = "doc_id",
     id would fan out its rows) — the same precondition every dedup/
     pack operator in this module carries.
 
-    Scale shape: the TeraSort two-phase rank shared with RANK /
-    chunk_pack / dsir_resample — positions are computed on a
-    CHECKPOINTED NARROW (id, key) projection (range partition on the
-    key, per-partition row_number, driver-side ≤nparts-row offset
-    table broadcast back), then hash-joined to the full rows by id.
-    Two data-sized shuffles total (the narrow rank + the join-back),
-    never a single-partition global window, and the wide payload is
-    neither checkpointed nor range-sampled twice.
+    Scale shape: positions are :func:`datapipe.util.prefix_rank` with
+    weight 1 on a CHECKPOINTED NARROW (id, key) projection, then
+    hash-joined to the full rows by id — the wide payload is neither
+    checkpointed nor range-sampled.
 
     No counterpart in the reference (its ORDER BY is value-order
     only, op/OrderBy.scala); recipe is standard pretraining practice
     (shuffle-before-pack)."""
-    from pyspark.sql.window import Window
-
     for c in (pos_col, "__key", "__pid", "__off"):
         if c in df.columns:
             raise ValueError(
                 f"global_shuffle: input already has a {c!r} column — "
                 "rename it first")
-    spark = df.sparkSession
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     keyed = (df.select(
         F.col(id_col),
         F.md5(F.concat(F.lit(f"{seed}:"),
                        F.col(id_col).cast("string"))).alias("__key"))
         .localCheckpoint())  # narrow: range sampler re-scans ~32 B/row
-    # small-input regime (r11, the take_top_frac gate): up to
-    # ``small_rows`` (exact count on the pinned narrow projection)
-    # the IDENTICAL permutation comes from one constant-key
-    # row_number window — skipping the second eager checkpoint and
-    # the offsets collect, which are pure driver latency there.
-    # Large inputs keep the TeraSort two-phase rank.
-    if keyed.count() <= int(small_rows):
-        rn1 = F.row_number().over(
-            Window.partitionBy(F.lit(0)).orderBy("__key", id_col))
-        pos = keyed.select(F.col(id_col), (rn1 - 1).alias(pos_col))
-        return df.join(pos, on=id_col)
-    base = (keyed.repartitionByRange(nparts, F.col("__key"),
-                                     F.col(id_col))
-            .withColumn("__pid", F.spark_partition_id())
-            .localCheckpoint())  # pin partition ids across branches
-    offsets = _pid_offsets(base, F.lit(1))
-    rn = F.row_number().over(
-        Window.partitionBy("__pid").orderBy("__key", id_col))
-    pos = (base.join(F.broadcast(offsets), on="__pid")
-           .select(F.col(id_col),
-                   (rn + F.col("__off") - 1).alias(pos_col)))
-    return df.join(pos, on=id_col)
+    pos, _ = prefix_rank(keyed, [F.col("__key"), F.col(id_col)],
+                         F.lit(1), pos_col)
+    return df.join(pos.select(id_col, pos_col), on=id_col)
 
 
 def take_top_frac(df: DataFrame, by_col: str, frac: float,
                   id_col: str = "doc_id",
-                  ascending: bool = False,
-                  small_rows: int = 2_000_000) -> DataFrame:
+                  ascending: bool = False) -> DataFrame:
     """Quality gate: keep exactly ``ceil(frac · n)`` rows — the best
     by ``by_col`` (descending by default; ``ascending=True`` keeps
     the smallest, e.g. a perplexity score). The rank-based form of
@@ -209,13 +137,10 @@ def take_top_frac(df: DataFrame, by_col: str, frac: float,
     ``id_col`` must be unique (join-back key; a duplicated id would
     fan out its rows and defeat the exact-count contract).
 
-    Scale shape: the shared TeraSort two-phase rank on a checkpointed
-    narrow (id, score) projection — range partition on (score, id),
-    per-partition row_number + broadcast ≤nparts-row offsets, then
-    one hash join back to the full rows. No global window, no
-    driver-side data, the wide payload never range-sampled."""
-    from pyspark.sql.window import Window
-
+    Scale shape: the rank is :func:`datapipe.util.prefix_rank` with
+    weight 1 on a checkpointed narrow (id, score) projection, kept
+    where < k, then one hash join back to the full rows — the wide
+    payload is never range-sampled."""
     if not 0.0 <= frac <= 1.0:
         raise ValueError(f"take_top_frac: frac must be in [0,1], "
                          f"got {frac}")
@@ -224,8 +149,6 @@ def take_top_frac(df: DataFrame, by_col: str, frac: float,
             raise ValueError(
                 f"take_top_frac: input already has a {c!r} column — "
                 "rename it first")
-    spark = df.sparkSession
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     key = F.round(F.col(by_col).cast("double"), 6)
     keyed = (df.select(F.col(id_col), key.alias("__key"))
              .localCheckpoint())  # narrow (id, score) projection
@@ -235,29 +158,9 @@ def take_top_frac(df: DataFrame, by_col: str, frac: float,
     order = [F.col("__key").asc_nulls_last() if ascending
              else F.col("__key").desc_nulls_last(),
              F.col(id_col).asc()]
-    # small-input regime (r10, the dsir_resample gate): up to
-    # ``small_rows`` (exact count on the pinned narrow projection)
-    # the identical kept-set is one TakeOrderedAndProject job over
-    # the same total order — the TeraSort machinery's ~4 eager jobs
-    # are pure latency there. Large inputs keep the two-phase rank.
-    total = keyed.count()
-    if total <= int(small_rows):
-        k = int(math.ceil(frac * total))
-        kept = keyed.orderBy(*order).limit(k).select(id_col)
-        return df.join(kept, on=id_col)
-    base = (keyed.repartitionByRange(nparts, *order)
-            .withColumn("__pid", F.spark_partition_id())
-            .localCheckpoint())  # pin partition ids across branches
-    from .util import cum_offsets
-    stats = base.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
-    off_df, total = cum_offsets(stats)
+    ranked, total = prefix_rank(keyed, order, F.lit(1), "__rk")
     k = int(math.ceil(frac * total))
-    rn = F.row_number().over(
-        Window.partitionBy("__pid").orderBy(*order))
-    kept = (base.join(F.broadcast(off_df), on="__pid")
-            .withColumn("__rk", rn + F.col("__off"))
-            .filter(F.col("__rk") <= k)
-            .select(id_col))
+    kept = ranked.filter(F.col("__rk") < k).select(id_col)
     return df.join(kept, on=id_col)
 
 
@@ -383,14 +286,13 @@ def dsir_weights(raw: DataFrame, target: DataFrame,
     data-sized shuffle is the per-document sum on the id.
     """
     def buckets_of(d: DataFrame) -> DataFrame:
-        from .util import spread as _spread
         tok = F.explode(F.split(normalize_text(F.col(text_col)),
                                 " ")).alias("_tok")
         # project the token string away immediately: only the bucket id
         # survives, so the pinned raw-side relation is two ints per
         # token. spread first: the normalize+explode+md5 pass on a
         # 1-row-group local scan otherwise runs on 1 core (r11).
-        return (_spread(d, id_col, min_bytes=2 * 1024 * 1024)
+        return (spread(d, id_col, min_bytes=SPREAD_MIN_BYTES)
                 .select(F.col(id_col).alias("_id"), tok)
                 .filter(F.col("_tok") != "")
                 .select("_id",
@@ -458,8 +360,7 @@ def dsir_resample(raw: DataFrame, target: DataFrame,
                   text_col: str = "text", id_col: str = "doc_id",
                   n_buckets: int = 4096, frac: float = 0.1,
                   seed: int = 42, alpha: float = 1.0,
-                  method: str = "gumbel",
-                  small_rows: int = 2_000_000) -> DataFrame:
+                  method: str = "gumbel") -> DataFrame:
     """DSIR resampling (the paper's step after weighting): keep the
     ``ceil(frac · n)`` most target-like documents. Returns
     (id, dsir_logw, sel_key) of the kept docs.
@@ -475,14 +376,13 @@ def dsir_resample(raw: DataFrame, target: DataFrame,
     the id) so the selected set is identical across engines whose
     ``ln`` differs in the last ulp — the correctness-oracle contract.
 
-    Scale shape: selection is the TeraSort two-phase rank (range
-    partition on the sort key, per-partition row_number, broadcast
-    per-partition counts) — no single-partition global window, one
-    shuffle over (id, key) pairs only; the weights themselves come
-    from :func:`dsir_weights` (broadcast bucket tables)."""
-    from pyspark.sql.window import Window
-
-    spark = raw.sparkSession
+    Scale shape: selection is :func:`take_top_frac`'s top-k — the
+    rows whose :func:`datapipe.util.prefix_rank` in (sel_key desc, id)
+    order is < k — taken directly on the pinned (id, logw, key)
+    relation: it is already narrow, so take_top_frac's join back to
+    full rows would only add an exchange (measured +18% on the sf0.1
+    cell, local[4]). The weights themselves come from :func:`dsir_weights`
+    (broadcast bucket tables)."""
     w = dsir_weights(raw, target, text_col, id_col,
                      n_buckets=n_buckets, alpha=alpha)
     if method == "gumbel":
@@ -493,41 +393,15 @@ def dsir_resample(raw: DataFrame, target: DataFrame,
         key = F.round(F.col("dsir_logw"), 6)
     else:
         raise ValueError(f"unknown dsir_resample method {method!r}")
-    # materialize the 3-column weights ONCE before range partitioning:
-    # repartitionByRange runs a sampling job over its input to pick
-    # range bounds, which would otherwise re-execute the entire
-    # weights pipeline (measured 2.6× the whole query at sf10)
+    # materialize the 3-column weights ONCE: the regime count, the
+    # range sampler and the rank would otherwise each re-execute the
+    # whole weights pipeline (measured 2.6× the whole query at sf10)
     keyed = w.select(F.col(id_col), F.col("dsir_logw"),
                      key.alias("sel_key")).localCheckpoint()
-    # small-input regime (r10): the TeraSort two-phase rank costs ~4
-    # sequential eager jobs (range-sampling, partition-id pin,
-    # offset collect) — pure driver latency when the keyed relation
-    # is small. Up to 2M rows (exact count on the already-pinned
-    # checkpoint) the identical selection is one TakeOrderedAndProject
-    # job: top-k by the same (sel_key desc, id asc) TOTAL order is
-    # exactly rank ≤ k. Larger inputs keep the TeraSort plan — a
-    # global top-k at 10% of a 100 TB corpus must never single-merge.
-    total = keyed.count()
-    if total <= int(small_rows):
-        k = int(math.ceil(frac * total))
-        return (keyed.orderBy(F.col("sel_key").desc(),
-                              F.col(id_col).asc())
-                .limit(k).select(id_col, "dsir_logw", "sel_key"))
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    base = (keyed.repartitionByRange(nparts, F.col("sel_key").desc(),
-                                     F.col(id_col).asc())
-            .withColumn("__pid", F.spark_partition_id())
-            .localCheckpoint())  # pin partition ids across branches
-    from .util import cum_offsets
-    stats = base.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
-    off_df, total = cum_offsets(stats)  # ≤ nparts rows — never the data
+    order = [F.col("sel_key").desc(), F.col(id_col).asc()]
+    ranked, total = prefix_rank(keyed, order, F.lit(1), "__rk")
     k = int(math.ceil(frac * total))
-    rn = F.row_number().over(
-        Window.partitionBy("__pid")
-        .orderBy(F.col("sel_key").desc(), F.col(id_col).asc()))
-    return (base.join(F.broadcast(off_df), on="__pid")
-            .withColumn("__rk", rn + F.col("__off"))
-            .filter(F.col("__rk") <= k)
+    return (ranked.filter(F.col("__rk") < k)
             .select(id_col, "dsir_logw", "sel_key"))
 
 
@@ -537,8 +411,7 @@ def token_budget_sample(df: DataFrame,
                         text_col: str = "text",
                         id_col: str = "doc_id",
                         token_col: Optional[str] = None,
-                        seed: int = 42,
-                        small_rows: int = 2_000_000) -> DataFrame:
+                        seed: int = 42) -> DataFrame:
     """Deterministic TOKEN-budget mixture sampling: per group, keep
     documents in seeded md5-hash order while the group's running
     token total (EXCLUSIVE of the current doc) is under the budget —
@@ -552,18 +425,12 @@ def token_budget_sample(df: DataFrame,
     ``budgets``: one int for every group, or a dict {group: budget}
     — groups absent from the dict get budget 0 (excluded).
 
-    Scale shape: the per-group running sum is the TeraSort two-phase
-    pattern (:func:`chunk_pack`): range-partition on (group, key),
-    per-(partition, group) window cumsum — every window is bounded
-    by a partition — plus a driver-side exclusive prefix over the
-    per-(partition, group) totals (≤ partitions × groups rows
-    collected, never data). A plain per-group window would land each
-    group on ONE reducer: 10 sources × 100 TB on 10 reducers. Token
-    counts default to whitespace tokens; pass ``token_col`` for a
-    real tokenizer's counts carried in the table."""
-    from pyspark.sql.window import Window
-
-    spark = df.sparkSession
+    Scale shape: the per-group running sum is
+    :func:`datapipe.util.prefix_rank` of the token counts grouped by
+    ``group_col`` — above ``util.SMALL_ROWS`` rows its two-phase
+    regime keeps a 100 TB group off a single reducer. Token counts
+    default to whitespace tokens; pass ``token_col`` for a real
+    tokenizer's counts carried in the table."""
     toks = (F.col(token_col) if token_col
             else ws_token_count(F.col(text_col))).cast("long")
     if isinstance(budgets, dict):
@@ -579,69 +446,17 @@ def token_budget_sample(df: DataFrame,
         budget = F.lit(int(budgets))
     key = F.md5(F.concat(F.lit(f"{seed}:"),
                          F.col(id_col).cast("string")))
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # tokenize once (chunk_pack lesson: repartitionByRange's sampling
-    # job would re-run the token scan otherwise); spread first — the
-    # tokenize pass on a 1-row-group local scan otherwise runs on 1
-    # core (r11, guide §6; no-op at scale)
-    from .util import spread as _spread
-    counted = (_spread(df, min_bytes=2 * 1024 * 1024)
+    # tokenize once (chunk_pack lesson: the regime count and the range
+    # sampler would re-run the token scan otherwise); spread first —
+    # the tokenize pass on a 1-row-group local scan otherwise runs on
+    # 1 core (r11, guide §6; no-op at scale)
+    counted = (spread(df, min_bytes=SPREAD_MIN_BYTES)
                .select(F.col(group_col), F.col(id_col),
                        toks.alias("_tok"))
                .withColumn("_k", key).localCheckpoint())
-    # small-input regime (r11, the take_top_frac gate): up to 2M rows
-    # (exact count on the pinned narrow checkpoint) the IDENTICAL
-    # greedy prefix comes from one per-GROUP window (each group fits
-    # one reducer comfortably at this size) — the second eager
-    # checkpoint and the per-(pid, group) offsets collect are pure
-    # driver latency there. Large inputs keep the two-phase pattern
-    # (a 100 TB group must never land on one reducer).
-    if counted.count() <= int(small_rows):
-        ws = (Window.partitionBy(group_col).orderBy("_k", id_col)
-              .rowsBetween(Window.unboundedPreceding, -1))
-        picked = (counted
-                  .withColumn("_cb", F.coalesce(F.sum("_tok").over(ws),
-                                                F.lit(0)))
-                  .filter(F.col("_cb") < budget)
-                  .select(id_col))
-        return df.join(picked, on=id_col).select(*df.columns)
-    base = (counted.repartitionByRange(nparts, F.col(group_col),
-                                       F.col("_k"))
-            .withColumn("__pid", F.spark_partition_id())
-            .localCheckpoint())  # pin partition ids across branches
-    stats = (base.groupBy("__pid", group_col)
-             .agg(F.sum("_tok").alias("_cnt")).collect())
-    # exclusive prefix of earlier partitions' totals WITHIN the group
-    # — range partitioning orders pids by (group, key), so a group's
-    # rows occupy a contiguous pid run
-    by_group: dict = {}
-    for r in sorted(stats, key=lambda r: r["__pid"]):
-        g = r[group_col]
-        run = by_group.setdefault(g, [0])
-        run.append(run[-1] + r["_cnt"])
-    off_rows, seen = [], {}
-    for r in sorted(stats, key=lambda r: r["__pid"]):
-        g = r[group_col]
-        i = seen.get(g, 0)
-        off_rows.append((r["__pid"], g, by_group[g][i]))
-        seen[g] = i + 1
-    from pyspark.sql import types as _T
-    g_type = df.schema[group_col].dataType
-    offsets = spark.createDataFrame(
-        off_rows, schema=_T.StructType([
-            _T.StructField("__pid", _T.IntegerType()),
-            _T.StructField(group_col, g_type),
-            _T.StructField("__goff", _T.LongType())]))
-    w = (Window.partitionBy("__pid", group_col)
-         .orderBy("_k", id_col)
-         .rowsBetween(Window.unboundedPreceding, -1))
-    cum_before = (F.coalesce(F.sum("_tok").over(w), F.lit(0))
-                  + F.col("__goff"))
-    picked = (base.join(F.broadcast(offsets),
-                        on=["__pid", group_col])
-              .withColumn("_cb", cum_before)
-              .filter(F.col("_cb") < budget)
-              .select(id_col))
+    ranked, _ = prefix_rank(counted, [F.col("_k"), F.col(id_col)],
+                            F.col("_tok"), "_cb", groups=[group_col])
+    picked = ranked.filter(F.col("_cb") < budget).select(id_col)
     return df.join(picked, on=id_col).select(*df.columns)
 
 

@@ -793,8 +793,8 @@ def corpus_report(df: DataFrame, group_col: str = "source",
     (group, fingerprint) rollup for the duplicate rate. Everything is
     whole-stage codegen; shuffle width is bounded by
     |groups| x |langs| and |distinct texts|, never rows x rows."""
-    from .util import spread as _spread
-    df = _spread(df, id_col, min_bytes=2 * 1024 * 1024)  # the
+    from .util import SPREAD_MIN_BYTES, spread as _spread
+    df = _spread(df, id_col, min_bytes=SPREAD_MIN_BYTES)  # the
     # tokens/quality/fingerprint map pass is ~15× the scan cost —
     # never leave it on 1 core; sf0.1 A/B says gate tiny inputs (r11)
     t = F.col(text_col)
@@ -979,8 +979,8 @@ def compression_ratio(df: DataFrame, text_col: str = "text",
     import pandas as pd  # noqa: F401 (document the dependency)
     from pyspark.sql import types as T
 
-    from .util import spread as _spread
-    df = _spread(df, id_col, min_bytes=2 * 1024 * 1024)  # DEFLATE on
+    from .util import SPREAD_MIN_BYTES, spread as _spread
+    df = _spread(df, id_col, min_bytes=SPREAD_MIN_BYTES)  # DEFLATE on
     # 1 Python worker otherwise (sf1 documents = one row group;
     # no-op at scale and on tiny inputs — r11)
     out_schema = T.StructType([

@@ -22,6 +22,15 @@ from pyspark.sql import Column, DataFrame
 # cache and is re-resolved.
 _PARQUET_HANDLES: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
+# Row count at or under which :func:`prefix_rank` computes a global
+# prefix with one window instead of the TeraSort two-phase rank.
+SMALL_ROWS = 2_000_000
+
+# On-disk input size under which the size-gated :func:`spread` sites
+# skip their repartition: the sf0.1 A/B showed the added exchange
+# costing more than the parallelism buys on tiny inputs (r11).
+SPREAD_MIN_BYTES = 2 * 1024 * 1024
+
 
 def _path_fingerprint(path: str) -> tuple:
     try:
@@ -138,8 +147,8 @@ def spread(df: DataFrame, *key_cols: str,
     ``min_bytes`` (r11): also a no-op below this many ON-DISK input
     bytes — for map passes where the sf0.1 A/B showed the added
     exchange costing more than the parallelism buys on tiny inputs
-    (the new r11 call sites pass 2 MB; the 29 pre-r11 sites keep the
-    unconditional probe their rounds measured).
+    (the r11 call sites pass :data:`SPREAD_MIN_BYTES`; the 29 pre-r11
+    sites keep the unconditional probe their rounds measured).
 
     With ``key_cols``, hash-partition on those columns so a downstream
     groupBy/join on the same keys reuses this exchange instead of
@@ -226,32 +235,104 @@ def pin_if_wide(df: DataFrame) -> DataFrame:
     return df
 
 
-def cum_offsets(stats: DataFrame,
-                count_col: str = "__cnt") -> tuple[DataFrame, int]:
-    """(offsets_df, total): exclusive prefix sum of ``count_col`` over
-    a per-range-partition stats table keyed by ``__pid`` — the shared
-    second phase of the TeraSort two-phase rank used by RANK /
-    ZIP WITH INDEX (executor), chunk_pack and dsir_resample (pack.py).
+def cum_offsets(stats: DataFrame, count_col: str = "__cnt",
+                groups: "tuple[str, ...] | list[str]" = ()) -> DataFrame:
+    """(__pid, *groups, __off): exclusive prefix sum of ``count_col``
+    over a per-range-partition stats table keyed by ``__pid`` (and
+    ``groups``) — the shared second phase of the TeraSort two-phase
+    rank used by RANK / ZIP WITH INDEX (executor) and
+    :func:`prefix_rank`. With ``groups`` the prefix restarts per
+    group: range partitioning on (groups, order) puts each group on a
+    contiguous run of partition ids.
 
     Computed DRIVER-side from the collected stats rows: the table is
-    ≤ spark.sql.shuffle.partitions rows by construction (never the
-    data), and the driver loop replaces a global ``Window.orderBy``
-    over it — same result, but no single-partition WindowExec and no
+    ≤ partitions × groups rows by construction (never the data), and
+    the driver loop replaces a global ``Window.orderBy`` over it —
+    same result, but no single-partition WindowExec and no
     "No Partition Defined" warning to alarm operators at scale
-    (r06, VERDICT item 4). The collected total comes back for free
-    (dsir_resample's top-k needs it — saves its second agg job).
+    (r06, VERDICT item 4).
 
     Callers must pass stats derived from a PINNED (checkpointed)
     base so this eager collect doesn't recompute the upstream."""
-    rows = stats.select("__pid",
+    from pyspark.sql import types as T
+    rows = stats.select("__pid", *groups,
                         stats[count_col].alias("__c")).collect()
-    spark = stats.sparkSession
-    cum, data = 0, []
+    cum: dict = {}
+    data = []
     for r in sorted(rows, key=lambda r: r["__pid"]):
-        data.append((int(r["__pid"]), int(cum)))
-        cum += int(r["__c"] or 0)
-    off = spark.createDataFrame(data, "__pid int, __off long")
-    return off, cum
+        g = tuple(r[c] for c in groups)
+        data.append((int(r["__pid"]), *g, cum.get(g, 0)))
+        cum[g] = cum.get(g, 0) + int(r["__c"] or 0)
+    schema = T.StructType(
+        [T.StructField("__pid", T.IntegerType())]
+        + [stats.schema[c] for c in groups]
+        + [T.StructField("__off", T.LongType(), nullable=False)])
+    return stats.sparkSession.createDataFrame(data, schema)
+
+
+def prefix_rank(rel: DataFrame, order: list, weight: Column,
+                out_col: str,
+                groups: "tuple[str, ...] | list[str]" = ()
+                ) -> "tuple[DataFrame, int]":
+    """(``rel`` + ``out_col``, row count): ``out_col`` is the
+    EXCLUSIVE running sum of ``weight`` in ``order``, restarting per
+    ``groups`` — BIGINT, never null; with ``F.lit(1)`` it is the
+    0-based row rank. The global prefix behind chunk_pack,
+    global_shuffle, take_top_frac/dsir_resample and
+    token_budget_sample (pack.py).
+
+    ``rel`` must be PINNED (checkpointed) and narrow: the exact
+    ``count()`` that picks the regime, the range sampler and both
+    branches of the scale path all re-read it. This is the one place
+    that decides "small or scale" for these operators:
+
+    - at most :data:`SMALL_ROWS` rows: one window keyed by the groups
+      (or a constant key, fed straight from the pinned input to its
+      single task) — the two-phase plan's extra eager
+      checkpoint and offsets collect are pure driver latency there
+      (r10/r11 A/B);
+    - above it: the TeraSort two-phase rank — range partition on
+      (groups, order), pin ``__pid``, per-(partition, group) totals
+      through :func:`cum_offsets` (≤ partitions × groups rows
+      collected, never data), broadcast back, then a window bounded
+      by one partition. A 100 TB prefix never lands on one reducer.
+
+    Both regimes return the identical schema and values."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    total = rel.count()
+    before = (Window.unboundedPreceding, -1)
+    if total <= SMALL_ROWS:
+        if not groups:
+            # the constant-key window is one task either way: reading
+            # the pinned input into it directly skips a shuffle stage
+            rel = rel.coalesce(1)
+        keys = [F.col(g) for g in groups] or [F.lit(0)]
+        w = Window.partitionBy(*keys).orderBy(*order).rowsBetween(*before)
+        run = F.coalesce(F.sum(weight).over(w), F.lit(0))
+        return rel.withColumn(out_col, run.cast("long")), total
+    nparts = int(rel.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # pin the partition ids: the stats and window branches must see the
+    # SAME ids, and AQE may coalesce two copies of the exchange apart
+    base = (rel.repartitionByRange(nparts, *[F.col(g) for g in groups],
+                                   *order)
+            .withColumn("__pid", F.spark_partition_id())
+            .localCheckpoint())
+    stats = base.groupBy("__pid", *groups).agg(F.sum(weight).alias("__cnt"))
+    off = F.broadcast(cum_offsets(stats, groups=groups))
+    w = (Window.partitionBy("__pid", *groups).orderBy(*order)
+         .rowsBetween(*before))
+    ranked = base.withColumn(
+        "__run", F.coalesce(F.sum(weight).over(w), F.lit(0)))
+    # null-safe on the groups: a null group is a group of its own, as
+    # in the small regime's window
+    on = [ranked["__pid"] == off["__pid"]] + [
+        ranked[g].eqNullSafe(off[g]) for g in groups]
+    out = ranked.join(off, on).select(
+        *[ranked[c] for c in rel.columns],
+        (ranked["__run"] + off["__off"]).cast("long").alias(out_col))
+    return out, total
 
 
 def salted_join(big: DataFrame, dim: DataFrame, on: str | list[str],

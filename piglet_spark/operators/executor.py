@@ -898,9 +898,8 @@ class Executor:
             # on-disk input: below it the extra exchange costs more
             # than the parallelism buys (sf0.1 A/B 0.6 -> 0.9 s;
             # sf1 A/B 2.6-2.8 -> 1.9-2.1 s) (r11, guide §6).
-            from ..datapipe.util import input_bytes, spread as _spread
-            if input_bytes(df) >= 2 * 1024 * 1024:
-                df = _spread(df)
+            from ..datapipe.util import SPREAD_MIN_BYTES, spread as _spread
+            df = _spread(df, min_bytes=SPREAD_MIN_BYTES)
         ctx = self.ctx(df)
         sel: list[Column] = []
         names: list[Optional[str]] = []
@@ -1726,7 +1725,7 @@ class Executor:
         # pin a wide upstream first: repartitionByRange's range-bounds
         # sampling job would execute it a second time (datapipe.util
         # .pin_if_wide; measured on dsir_resample, SCALE.md r05)
-        from ..datapipe.util import pin_if_wide
+        from ..datapipe.util import cum_offsets, pin_if_wide
         base = (pin_if_wide(df).repartitionByRange(nparts, *order)
                 .withColumn("__pid", F.spark_partition_id())
                 .localCheckpoint())
@@ -1735,8 +1734,7 @@ class Executor:
             # struct() so an all-NULL key still counts as one group
             aggs.append(F.count_distinct(F.struct(*keys)).alias("__dcnt"))
         stats = base.groupBy("__pid").agg(*aggs)
-        offsets = self._cum_offsets(stats,
-                                    "__dcnt" if op.dense else "__cnt")
+        offsets = cum_offsets(stats, "__dcnt" if op.dense else "__cnt")
         w = Window.partitionBy("__pid").orderBy(*order)
         ranker = F.dense_rank() if op.dense else F.rank()
         ranked = (base.join(F.broadcast(offsets), on="__pid")
@@ -1799,16 +1797,6 @@ class Executor:
 
     # -------------------------------------------------------------- zip
 
-    @staticmethod
-    def _cum_offsets(stats: DataFrame, count_col: str) -> DataFrame:
-        """Per-partition stats → (__pid, __off): cumulative count of
-        earlier partitions, computed driver-side from the collected
-        stats rows (≤ numPartitions — never the data) via the shared
-        TeraSort phase-2 helper. Callers pass stats over a pinned
-        base, so the eager collect doesn't recompute upstream."""
-        from ..datapipe.util import cum_offsets
-        return cum_offsets(stats, count_col)[0]
-
     def _with_index(self, df: DataFrame) -> DataFrame:
         """Distributed 0-based dense index (no single-partition sort):
         monotonically_increasing_id encodes (partition, row#); add
@@ -1816,7 +1804,7 @@ class Executor:
         pinned (pin_if_wide) so the offsets collect and the main job
         see identical partitioning — mid values must agree between
         the two passes."""
-        from ..datapipe.util import pin_if_wide
+        from ..datapipe.util import cum_offsets, pin_if_wide
         mid = F.monotonically_increasing_id()
         df = pin_if_wide(df).withColumn("__mid", mid)
         # exact bit arithmetic — double division loses precision past
@@ -1825,7 +1813,7 @@ class Executor:
         row_in_part = F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1))
         df = df.withColumn("__pid", pid).withColumn("__row", row_in_part)
         counts = df.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
-        offsets = self._cum_offsets(counts, "__cnt")
+        offsets = cum_offsets(counts)
         out = df.join(F.broadcast(offsets), on="__pid", how="inner")
         out = out.withColumn("index", (F.col("__off") + F.col("__row"))
                              .cast("long"))

@@ -2317,6 +2317,19 @@ def test_bloom_write_load_matches_direct(spark, sf_dir, tmp_path):
         dedup.bloom_decontaminate(corpus, None)
 
 
+def test_bloom_build_job_failure_propagates(spark, monkeypatch):
+    """A failed bitmap-fill job surfaces; it is not retried through
+    the row-collect path."""
+    bench = spark.createDataFrame([(0, "the quick brown fox jumps")],
+                                  ["doc_id", "text"])
+
+    def boom(self):
+        raise RuntimeError("job failed")
+    monkeypatch.setattr(type(bench), "toArrow", boom)
+    with pytest.raises(RuntimeError, match="job failed"):
+        dedup.bloom_decontaminate(bench, bench, k=2, m_bits=1 << 14)
+
+
 def test_bloom_decontaminate_auto_sizing(spark):
     """m_bits='auto' sizes the bitmap from the measured benchmark
     (next pow2 >= 16 bits/shingle, floor 2^14) and behaves like the

@@ -8,7 +8,7 @@ import re
 
 import pytest
 
-from piglet_spark.datapipe import pack
+from piglet_spark.datapipe import pack, util
 
 
 def _h32(s: str) -> int:
@@ -257,19 +257,30 @@ def test_dsir_resample_gumbel_matches_bruteforce(corpus):
         assert kept[i]["sel_key"] == pytest.approx(keys[i], abs=2e-6)
 
 
-def test_dsir_resample_regimes_agree(corpus):
-    """r10: the small-input TakeOrdered path (default gate) and the
-    TeraSort two-phase rank (small_rows=0 forces it) select the
-    identical set with identical keys."""
+def _assert_regimes_agree(monkeypatch, run):
+    """``run()`` returns the same schema (dtypes and nullability) and
+    the same rows under the default ``util.SMALL_ROWS`` gate and with
+    the TeraSort two-phase rank forced."""
+    def result():
+        df = run()
+        return df.schema, sorted(tuple(r) for r in df.collect())
+    small = result()
+    with monkeypatch.context() as m:
+        m.setattr(util, "SMALL_ROWS", 0)
+        tera = result()
+    assert small[0] == tera[0]
+    assert small[1] == tera[1] and len(small[1]) > 0
+
+
+def test_dsir_resample_regimes_agree(corpus, monkeypatch):
+    """The one-window regime (default gate) and the TeraSort
+    two-phase rank (util.SMALL_ROWS = 0 forces it) select the
+    identical set with identical keys and schema."""
     from pyspark.sql import functions as F
     raw = corpus.filter(F.col("source") != "src0")
     tgt = corpus.filter(F.col("source") == "src0")
-    small = sorted(tuple(r) for r in pack.dsir_resample(
-        raw, tgt, n_buckets=64, frac=0.3, seed=9).collect())
-    tera = sorted(tuple(r) for r in pack.dsir_resample(
-        raw, tgt, n_buckets=64, frac=0.3, seed=9,
-        small_rows=0).collect())
-    assert small == tera and len(small) > 0
+    _assert_regimes_agree(monkeypatch, lambda: pack.dsir_resample(
+        raw, tgt, n_buckets=64, frac=0.3, seed=9))
 
 
 def test_dsir_resample_topk_prefers_target_like(corpus, spark):
@@ -422,16 +433,14 @@ def test_take_top_frac_matches_bruteforce(corpus):
     assert set(out.columns) == {"doc_id", "text", "source", "score"}
 
 
-def test_take_top_frac_regimes_agree(corpus):
-    """r10: the small-input TakeOrdered path and the TeraSort rank
-    (small_rows=0) keep the identical set, both directions."""
+def test_take_top_frac_regimes_agree(corpus, monkeypatch):
+    """The one-window regime and the TeraSort rank
+    (util.SMALL_ROWS = 0) keep the identical rows with the identical
+    schema, both directions."""
     df = corpus.withColumn("score", pack.F.length("text"))
     for asc in (False, True):
-        small = sorted(r["doc_id"] for r in pack.take_top_frac(
-            df, "score", 0.3, ascending=asc).collect())
-        tera = sorted(r["doc_id"] for r in pack.take_top_frac(
-            df, "score", 0.3, ascending=asc, small_rows=0).collect())
-        assert small == tera and len(small) > 0
+        _assert_regimes_agree(monkeypatch, lambda: pack.take_top_frac(
+            df, "score", 0.3, ascending=asc))
 
 
 def test_take_top_frac_ascending_and_nulls(spark):
@@ -540,27 +549,17 @@ S = STREAM D THROUGH split_assign('train:0.8,val:0.2', 7);
     assert got == direct
 
 
-def test_pack_small_window_regimes_agree(corpus):
-    """r11: the small-input single-window regimes (default gate) and
-    the TeraSort two-phase plans (small_rows=0 forces them) produce
-    identical rows for chunk_pack, global_shuffle and
-    token_budget_sample."""
-    small = sorted(tuple(r) for r in
-                   pack.chunk_pack(corpus, seq_len=8).collect())
-    tera = sorted(tuple(r) for r in
-                  pack.chunk_pack(corpus, seq_len=8,
-                                  small_rows=0).collect())
-    assert small == tera and len(small) > 0
-
-    s2 = sorted(tuple(r) for r in
-                pack.global_shuffle(corpus, seed=5).collect())
-    t2 = sorted(tuple(r) for r in
-                pack.global_shuffle(corpus, seed=5,
-                                    small_rows=0).collect())
-    assert s2 == t2 and len(s2) > 0
-
-    s3 = sorted(tuple(r) for r in pack.token_budget_sample(
-        corpus, 20, seed=5).collect())
-    t3 = sorted(tuple(r) for r in pack.token_budget_sample(
-        corpus, 20, seed=5, small_rows=0).collect())
-    assert s3 == t3 and len(s3) > 0
+def test_pack_small_window_regimes_agree(corpus, monkeypatch):
+    """The single-window regime (default gate) and the TeraSort
+    two-phase plan (util.SMALL_ROWS = 0 forces it) produce identical
+    rows AND identical schemas (dtypes, nullability) for chunk_pack,
+    global_shuffle and token_budget_sample — shuffle_pos is BIGINT in
+    both. A null group is a group of its own in both regimes."""
+    _assert_regimes_agree(
+        monkeypatch, lambda: pack.chunk_pack(corpus, seq_len=8))
+    _assert_regimes_agree(
+        monkeypatch, lambda: pack.global_shuffle(corpus, seed=5))
+    with_null = corpus.union(corpus.sparkSession.createDataFrame(
+        [(51, "alpha beta", None), (52, "gamma", None)], corpus.schema))
+    _assert_regimes_agree(monkeypatch, lambda: pack.token_budget_sample(
+        with_null, 20, seed=5))

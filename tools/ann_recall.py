@@ -11,6 +11,7 @@ Usage: python tools/ann_recall.py [sf_dir] [n_queries] [k]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -23,7 +24,8 @@ def main():
     n_q = int(sys.argv[2]) if len(sys.argv) > 2 else 20
     k = int(sys.argv[3]) if len(sys.argv) > 3 else 10
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))))
     from piglet_spark.datapipe import similarity as sim
 
     spark = (SparkSession.builder.master("local[32]")

@@ -23,7 +23,8 @@ from pyspark.sql import functions as F
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     only = set(sys.argv[2:])
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")

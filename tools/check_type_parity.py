@@ -10,6 +10,7 @@ Usage: python tools/check_type_parity.py [sf_dir]
 """
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
@@ -21,7 +22,8 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
 
     spark = (SparkSession.builder.master("local[8]")

@@ -30,7 +30,8 @@ def force(df):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf1"
     only = sys.argv[2:] or QUERIES
-    sys.path.insert(0, "/root/repo")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, root)
     import re
 
     import __spark_entry__ as entrymod
@@ -46,7 +47,7 @@ def main():
              .config("spark.ui.showConsoleProgress", "false")
              .appName("ckpt-ab").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
-    src = open("/root/repo/__spark_entry__.py").read()
+    src = open(os.path.join(root, "__spark_entry__.py")).read()
     const_of = dict(re.findall(r'"(\w+)":\s*_pig\((\w+),\s*"\w+"\)', src))
     result_of = dict(re.findall(r'"(\w+)":\s*_pig\(\w+,\s*"(\w+)"\)', src))
 

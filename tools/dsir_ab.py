@@ -8,6 +8,7 @@ Usage: python tools/dsir_ab.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -17,7 +18,8 @@ from pyspark.sql import functions as F
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))))
     from piglet_spark.datapipe import pack as dp_pack
     from piglet_spark.datapipe.text import normalize_text
     from piglet_spark.datapipe.pack import _hash32

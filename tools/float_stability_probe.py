@@ -10,6 +10,7 @@ Usage: python tools/float_stability_probe.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
@@ -35,7 +36,8 @@ def norm(v):
 def main():
     sf_dir = sys.argv[1]
     names = sys.argv[2:]
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
 
     con = duckdb.connect()

@@ -10,6 +10,7 @@ Usage: python tools/simhash_ab.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -19,7 +20,8 @@ from pyspark.sql import functions as F
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))))
     from piglet_spark.datapipe import dedup
     from piglet_spark.datapipe.dedup import (_SIMHASH_BITS, _spread,
                                              token_hash60, tokens_of)
