@@ -8,6 +8,8 @@ import pytest
 import piglet_spark as pg
 from piglet_spark.codegen import CodegenUnsupported
 
+from .test_reference_conformance import REF, needs_reference
+
 
 def _exec_code(spark, code):
     ns = {"spark": spark}
@@ -137,9 +139,7 @@ def test_codegen_csv_load_split_union_sample(spark, data_dir):
         assert _rows(ns[alias]) == _rows(eng.df(alias)), alias
 
 
-REF = "/root/reference/src/it/resources"
-
-
+@needs_reference
 @pytest.mark.parametrize("script,aliases", [
     ("filter.pig", ["B"]),
     ("foreach1.pig", ["B"]),
@@ -150,13 +150,12 @@ def test_codegen_reference_scripts_match_engine(spark, tmp_path, script,
     """Generated PySpark for the reference's OWN integration scripts
     executes and matches the engine's results alias-for-alias (the
     judge's 'Done' bar for the generated-code API)."""
-    import os
-    src = open(os.path.join(REF, script)).read()
+    src = (REF / script).read_text()
     eng = pg.PigEngine(spark, params={
-        "inbase": REF, "outfile": str(tmp_path / "engine_out")})
+        "inbase": str(REF), "outfile": str(tmp_path / "engine_out")})
     eng.run(src)
     gen = pg.PigEngine(spark, params={
-        "inbase": REF, "outfile": str(tmp_path / "gen_out")})
+        "inbase": str(REF), "outfile": str(tmp_path / "gen_out")})
     ns = _exec_code(spark, gen.to_code(src))
     for alias in aliases:
         assert _rows(ns[alias]) == _rows(eng.df(alias)), alias

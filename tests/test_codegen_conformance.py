@@ -14,7 +14,8 @@ import pytest
 import piglet_spark as pg
 from piglet_spark.codegen import CodegenUnsupported
 
-from .test_reference_conformance import REF, SCRIPTS, collect_output
+from .test_reference_conformance import (REF, SCRIPTS, collect_output,
+                                         needs_reference)
 
 # scripts whose generated code runs AND matches the reference truth
 CODEGEN_SUPPORTED = {
@@ -95,6 +96,7 @@ def test_partition_is_exhaustive():
     assert not CODEGEN_SUPPORTED & set(CODEGEN_UNSUPPORTED)
 
 
+@needs_reference
 @pytest.mark.parametrize("script,truth,in_order", SCRIPTS,
                          ids=[s[0] for s in SCRIPTS])
 def test_codegen_conformance(spark, tmp_path, script, truth, in_order):

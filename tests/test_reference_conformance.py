@@ -17,6 +17,12 @@ import piglet_spark as pg
 
 REF = pathlib.Path("/root/reference/src/it/resources")
 
+# Tests that read the reference's scripts, ``$inbase`` inputs or truth
+# files skip where that tree is absent, and run wherever it exists.
+needs_reference = pytest.mark.skipif(
+    not REF.is_dir(),
+    reason=f"reference integration tree {REF} is absent")
+
 # (script, truth, in_order) — from SparkCompileIt.scala, minus entries
 # whose prerequisites don't exist here (jdbc: H2 driver; rscript: R).
 SCRIPTS = [
@@ -89,6 +95,7 @@ def collect_output(outdir: pathlib.Path) -> list[str]:
             for line in f.read_text().splitlines()]
 
 
+@needs_reference
 @pytest.mark.parametrize("script,truth,in_order",
                          SCRIPTS, ids=[s[0] for s in SCRIPTS])
 def test_reference_script(spark, tmp_path, script, truth, in_order):
@@ -113,7 +120,10 @@ def test_jdbc_storage_roundtrip(spark, tmp_path):
     AS (col1:int, col2:chararray); STORE. The reference uses the H2
     driver; this container has no H2 jar, so the same flow runs on
     Derby (embedded, pure-Java, ships inside Spark's own jars) with
-    the truth file's exact table content."""
+    the truth file's exact table content. A no-USING STORE is
+    comma-delimited (sources/storage.py ``store``), so the expected
+    lines follow from ``rows``; where the reference tree exists, its
+    truth file must hold the same lines."""
     url = f"jdbc:derby:{tmp_path}/jdbcdb;create=true"
     driver = "org.apache.derby.jdbc.EmbeddedDriver"
     rows = [(1, "One"), (2, "Two"), (3, "Three"),
@@ -129,8 +139,10 @@ A = LOAD 'data' USING JdbcStorage('{driver}', '{url}') AS (col1: int, col2:chara
 STORE A INTO '{out}';
 """)
     got = sorted(collect_output(out))
-    truth = sorted((REF / "truth" / "jdbc-data.data")
-                   .read_text().splitlines())
-    assert got == truth
+    expected = sorted(f"{c1},{c2}" for c1, c2 in rows)
+    assert got == expected
+    truth = REF / "truth" / "jdbc-data.data"
+    if truth.is_file():
+        assert sorted(truth.read_text().splitlines()) == expected
     # the AS schema names must be live (reference Load.scala schema)
     assert eng.df("A").columns == ["col1", "col2"]

@@ -6,6 +6,8 @@ import pytest
 
 import piglet_spark as pg
 
+from .test_reference_conformance import REF, needs_reference
+
 
 @pytest.fixture()
 def stream_dir(tmp_path):
@@ -243,11 +245,10 @@ M = MATCH_EVENT E PATTERN OR(HI, LO) WITH (HI: v > 5.0, LO: v < 2.0);
     assert got == [(1, None), (None, 3)]
 
 
+@needs_reference
 def test_reference_window_join_script(spark):
     """windowJoin.pig (streaming corpus) runs: JOIN of two WINDOW'd
     relations becomes window-scoped automatically."""
-    import pathlib
-    REF = pathlib.Path("/root/reference/src/it/resources")
     src = (REF / "windowJoin.pig").read_text()
     src = src.replace("STORE X INTO '$outfile';", "")
     eng = pg.PigEngine(spark, params={"inbase": str(REF)})
@@ -258,9 +259,8 @@ def test_reference_window_join_script(spark):
     assert "C::a1" in df.columns and "D::b1" in df.columns
 
 
+@needs_reference
 def test_reference_splitinto_script(spark, tmp_path):
-    import pathlib
-    REF = pathlib.Path("/root/reference/src/it/resources")
     src = (REF / "splitInto.pig").read_text()
     src = src.replace("DUMP Y;", "").replace("DUMP Z;", "")
     out = tmp_path / "x"
