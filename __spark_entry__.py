@@ -779,14 +779,14 @@ DOC_QUALITY_SQL = """
 SELECT lang, COUNT(*) AS n_docs, ROUND(SUM(q), 4) AS sum_quality,
        SUM(CASE WHEN q >= 0.5 THEN 1 ELSE 0 END)::BIGINT AS n_good
 FROM (
-  SELECT lang, ROUND(
+  SELECT lang, floor((
       0.4 * LEAST(length(text) / 500.0, 1.0)
     + 0.3 * (CASE WHEN length(text) > 0
              THEN length(regexp_replace(text, '[^A-Za-z]', '', 'g'))::DOUBLE
                   / length(text) ELSE 0.0 END)
     + 0.3 * (CASE WHEN ntok > 0
                    AND (length(text) - nspace)::DOUBLE / ntok BETWEEN 3 AND 10
-             THEN 1.0 ELSE 0.0 END), 6) AS q
+             THEN 1.0 ELSE 0.0 END)) * 1e6 + 0.5) / 1e6 AS q
   FROM (
     SELECT lang, text,
            CASE WHEN length(trim(text)) = 0 THEN 0
@@ -811,7 +811,7 @@ WITH base AS (
            CASE WHEN length(trim(COALESCE(text, ''))) = 0 THEN 0
                 ELSE len(string_split_regex(trim(COALESCE(text, '')),
                                             '\\s+')) END AS tok,
-           ROUND(
+           floor((
                0.4 * LEAST(length(text) / 500.0, 1.0)
              + 0.3 * (CASE WHEN length(text) > 0
                       THEN length(regexp_replace(text, '[^A-Za-z]', '',
@@ -820,7 +820,7 @@ WITH base AS (
              + 0.3 * (CASE WHEN ntok > 0
                            AND (length(text) - nspace)::DOUBLE / ntok
                                BETWEEN 3 AND 10
-                      THEN 1.0 ELSE 0.0 END), 6) AS q,
+                      THEN 1.0 ELSE 0.0 END)) * 1e6 + 0.5) / 1e6 AS q,
            md5(trim(regexp_replace(regexp_replace(lower(text),
                '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS fp
     FROM (

@@ -25,7 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .text import normalize_text, fingerprint, text_ngrams
-from .util import SPREAD_MIN_BYTES, spread as _spread, cached_parquet
+from . import util
+from .util import spread as _spread, cached_parquet
 
 # Mersenne prime for the universal-hash family h_i(x) = (a_i x + b_i) mod p
 _P = (1 << 31) - 1  # Mersenne prime 2^31-1 (see _hash_params)
@@ -92,7 +93,7 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
                 id_col: str = "doc_id") -> DataFrame:
     """Keep the lowest-id document per exact (normalized) text
     fingerprint. Returns (keep_id, n_copies)."""
-    return (_spread(df, id_col, min_bytes=SPREAD_MIN_BYTES)
+    return (_spread(df, id_col)
             # normalize+md5 map pass on a 1-row-group local scan
             # otherwise runs on 1 core; tiny inputs stay put (r11)
             .select(F.col(id_col), fingerprint(F.col(text_col)).alias("fp"))
@@ -541,7 +542,11 @@ def lsh_compact_index(spark, path: str,
         meta = _json.load(fh)
     n = max(1, int(files_per_band))
     b = cached_parquet(spark, f"{path}/buckets")
-    (b.repartition(n * int(meta["bands"]), "_band", "_bucket")
+    # n distinct keys per band: each band directory gets at most n
+    # files (keying on the raw bucket would scatter every band over
+    # all n·bands tasks, one file each)
+    (b.repartition(n * int(meta["bands"]), "_band",
+                   F.pmod(F.hash("_bucket"), F.lit(n)))
      .write.mode("overwrite").partitionBy("_band")
      .parquet(f"{path}/buckets_compact"))
     s = cached_parquet(spark, f"{path}/shingles")
@@ -926,7 +931,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
              [0][0])
         max_df = max(16, min(256, int(p or 256)))
     use_prefix = method == "prefix"
-    if use_prefix and (n_docs or 0) >= 1_000_000:
+    if use_prefix and (n_docs or 0) >= util.JACCARD_BIG_DOCS:
         # r10: the prefix plan DIED at sf100 (5M dup-dense docs) —
         # its per-candidate verify join spilled shuffle until a
         # 252 GB disk filled. Its regime is many-candidates-few-
@@ -981,7 +986,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     # ---- scale plumbing (engages only on a KNOWN-big corpus; with
     # n_docs unknown or < 1M the plan below is the r08 single-pass
     # one — oracle-gate scales never see slices or width overrides)
-    big = n_docs is not None and int(n_docs) >= 1_000_000
+    big = n_docs is not None and int(n_docs) >= util.JACCARD_BIG_DOCS
     if n_slices == "auto":
         n_slices = (max(2, min(8, -(-int(n_docs) // 2_000_000)))
                     if big else 1)
@@ -1037,7 +1042,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
                        F.col("_n").alias("_nb"),
                        *([F.col("_nh").alias("_nhb")]
                          if doc_hot is not None else []))
-    if big and int(n_docs) <= 20_000_000:
+    if big and int(n_docs) <= util.JACCARD_BROADCAST_DOCS:
         sd_a, sd_b = F.broadcast(sd_a), F.broadcast(sd_b)
 
     def _finish(shared: DataFrame) -> DataFrame:
@@ -1518,8 +1523,6 @@ def neardup_clusters(df: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id",
                      pairs: DataFrame | None = None,
                      max_iters: int = 24,
-                     driver_cc_threshold: int = 1_000_000,
-                     driver_cc_max_bytes: int = 256 * 1024 ** 2,
                      **lsh_kwargs) -> DataFrame:
     """Connected components over near-duplicate candidate pairs →
     one row per document ``(doc_id, cluster_id, is_canonical)``.
@@ -1533,7 +1536,9 @@ def neardup_clusters(df: DataFrame, text_col: str = "text",
     Algorithm, two regimes keyed on the edge count (the broadcast-
     threshold philosophy):
 
-    - ``|E| <= driver_cc_threshold`` (default 1M): union-find ON THE
+    - ``|E| <=`` :data:`~piglet_spark.datapipe.util.DRIVER_CC_EDGES`
+      (1M) and estimated driver memory ``<=``
+      :data:`~piglet_spark.datapipe.util.DRIVER_CC_BYTES`: union-find ON THE
       DRIVER. The LSH pair set is a vanishing fraction of the corpus
       — that is LSH's whole point — so even a billion-document run
       usually lands here; 1M edges cost a one-off collect plus a
@@ -1586,9 +1591,9 @@ def neardup_clusters(df: DataFrame, text_col: str = "text",
     # string doc ids (URLs, UUID paths — the common corpus case) 1M
     # collected edges can be 10-50× larger on the driver than the
     # ~16 B/edge the numeric-id sizing assumed (r04, VERDICT r03)
-    if (n_edges <= driver_cc_threshold
+    if (n_edges <= util.DRIVER_CC_EDGES
             and _edge_bytes_estimate(pairs, n_edges)
-            <= driver_cc_max_bytes):
+            <= util.DRIVER_CC_BYTES):
         labels = _driver_union_find(spark, pairs)
     else:
         labels = _distributed_cc(pairs, max_iters, _ckpt)
@@ -1622,7 +1627,7 @@ def _driver_union_find(spark, pairs: DataFrame) -> DataFrame:
     """Exact connected components of a SMALL edge list via driver-side
     union-find with path halving; labels = min id per component,
     identical to the distributed path. Bounded by
-    ``driver_cc_threshold`` edges AND ``driver_cc_max_bytes`` of
+    ``util.DRIVER_CC_EDGES`` edges AND ``util.DRIVER_CC_BYTES`` of
     estimated driver memory (see ``_edge_bytes_estimate``)."""
     parent: dict = {}
 
@@ -1635,7 +1640,7 @@ def _driver_union_find(spark, pairs: DataFrame) -> DataFrame:
         return r
 
     # one collect, not toLocalIterator: the edge set is bounded by
-    # driver_cc_threshold (~16 MB at the 1M default) and a per-
+    # util.DRIVER_CC_EDGES (~16 MB at 1M numeric edges) and a per-
     # partition fetch pays 32× the round-trip latency
     for r in pairs.collect():
         ra, rb = find(r[0]), find(r[1])

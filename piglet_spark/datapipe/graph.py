@@ -27,27 +27,16 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _half_up(c: Column, scale: float) -> Column:
-    """HALF_UP rounding of a non-negative double as explicit IEEE ops:
-    ``floor(x·scale + 0.5)/scale``. Used instead of ``F.round`` so the
-    ENGINE and the DuckDB oracle evaluate the *same* double
-    expression bit-for-bit: on a value that lands exactly on a
-    rounding tie (round-12 grid values CAN tie at the final round-9 —
-    2 of 15999 sf0.1 ranks did), Spark's BigDecimal HALF_UP and
-    DuckDB's double ``round`` disagree; two engines running this one
-    formulation cannot (r11)."""
-    return F.floor(c * F.lit(scale) + F.lit(0.5)) / F.lit(scale)
+from . import util
+from .util import half_up
 
 
 def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
              src_col: str = "src", dst_col: str = "dst",
-             persist_edges: "bool | None" = None,
-             broadcast_nodes: int = 2_000_000,
-             kernel_edges: int = 2_000_000) -> DataFrame:
+             persist_edges: "bool | None" = None) -> DataFrame:
     """Fixed-``iters`` PageRank on a directed edge list (duplicate
     edges act as weight — the natural semantics when edges come from
     an interaction log). Returns ``(node, pagerank)`` for every node
@@ -81,11 +70,13 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
 
     Three physical regimes, decided from EXACT counts (never
     estimates), all value-identical (pytest cross-regime pin +
-    DuckDB oracle): edge lists at most ``kernel_edges`` run the
+    DuckDB oracle): edge lists at most
+    :data:`~piglet_spark.datapipe.util.PAGERANK_KERNEL_EDGES` run the
     whole loop as ONE single-task Arrow pass
     (:func:`_pagerank_kernel` — small graphs are dominated by
     driver job latency, not data); node counts at most
-    ``broadcast_nodes`` broadcast the rank relation into the
+    :data:`~piglet_spark.datapipe.util.PAGERANK_BROADCAST_NODES`
+    broadcast the rank relation into the
     per-iteration joins (no rank exchange); larger graphs keep the
     shuffle plan with edges pre-partitioned on the join key."""
     iters = int(iters)
@@ -97,7 +88,8 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
     e = edges.select(F.col(src_col).alias("_s"),
                      F.col(dst_col).alias("_t"))
     same_type = e.schema["_s"].dataType == e.schema["_t"].dataType
-    kernel_probe = same_type and int(kernel_edges) > 0
+    max_kernel = util.PAGERANK_KERNEL_EDGES
+    kernel_probe = same_type and max_kernel > 0
     persisted = []
     do_persist = (persist_edges if persist_edges is not None
                   else iters > 2)
@@ -128,13 +120,13 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
             F.sum((F.col("_s").isNull() | F.col("_t").isNull())
                   .cast("bigint")).alias("nulls")).collect()[0]
         if (int(st["nulls"] or 0) == 0
-                and 0 < int(st["m"]) <= int(kernel_edges)):
+                and 0 < int(st["m"]) <= max_kernel):
             # eager checkpoint (bounded: one row per node) so the
             # edge cache can be dropped before returning
             out = _pagerank_kernel(e, iters, d).localCheckpoint()
             for p in persisted:
                 p.unpersist()
-            return out.select("node", _half_up(F.col("_pr"), 1e9)
+            return out.select("node", half_up(F.col("_pr"), 1e9)
                               .alias("pagerank"))
     # r10 restructure (same values, fewer exchanges and jobs/iter):
     # the out-degree rides ON the rank relation — so each iteration
@@ -189,7 +181,7 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
     # the join-order change in the float sums, re-proven by the
     # DuckDB value-hash oracle at two SFs). Graphs beyond the
     # threshold keep the shuffle plan unchanged.
-    bcast = 0 < n_nodes <= int(broadcast_nodes)
+    bcast = 0 < n_nodes <= util.PAGERANK_BROADCAST_NODES
     if not bcast and do_persist:
         # big-graph shuffle regime: re-establish the _s partitioning
         # the per-iteration rank joins reuse (r10c moved it out of
@@ -234,7 +226,7 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
                              on="node", how="left")
                 .crossJoin(F.broadcast(dang))
                 .select("node", "_deg",
-                        _half_up(
+                        half_up(
                             F.lit(teleport)
                             + F.lit(d)
                             * (F.coalesce(F.col("_in"), F.lit(0.0))
@@ -244,7 +236,7 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
     for p in persisted:  # final rank is an eager checkpoint
         p.unpersist()
     return rank.select("node",
-                       _half_up(F.col("_pr"), 1e9).alias("pagerank"))
+                       half_up(F.col("_pr"), 1e9).alias("pagerank"))
 
 
 def _pagerank_kernel(e: DataFrame, iters: int, d: float) -> DataFrame:
@@ -254,9 +246,10 @@ def _pagerank_kernel(e: DataFrame, iters: int, d: float) -> DataFrame:
     builds + checkpoint) whose fixed latency dominates small graphs
     (measured: 3.4 → 1.9 s at 600k edges / 16k nodes, sf0.1).
 
-    Gated by the caller on an EXACT edge count (``kernel_edges``,
-    default 2M ≈ tens of MB in one task), same-typed null-free node
-    ids. Arithmetic is step-for-step identical to the loop plan:
+    Gated by the caller on an EXACT edge count
+    (``util.PAGERANK_KERNEL_EDGES``, 2M ≈ tens of MB in one task),
+    same-typed null-free node ids. Arithmetic is step-for-step
+    identical to the loop plan:
     same node/out-degree derivation (bincount ≡ the explode+sum
     discovery), same IEEE update expression
     ``teleport + d·(contrib + dm·base)``, and the same per-step

@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .util import spread as _spread
+
 IMAGE_META_SCHEMA = T.StructType([
     T.StructField("width", T.IntegerType()),
     T.StructField("height", T.IntegerType()),
@@ -685,10 +687,9 @@ def attach_binary_payload(df: DataFrame, text_col: str = "text",
     """Build a synthetic binary column from text (test fixture for the
     multimodal path: real datasets carry bytes in parquet the same
     way)."""
-    from .util import SPREAD_MIN_BYTES, spread as _spread
-    df = _spread(df, id_col, min_bytes=SPREAD_MIN_BYTES)  # downstream
-    # decode is a Python pass — 1 worker on a 1-row-group local scan
-    # otherwise (r11, guide §6)
+    # downstream decode is a Python pass — 1 worker on a 1-row-group
+    # local scan otherwise (r11, guide §6)
+    df = _spread(df, id_col)
     return df.select(
         F.col(id_col),
         F.encode(F.col(text_col), "utf-8").alias("payload"),

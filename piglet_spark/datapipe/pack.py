@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .text import normalize_text, ws_token_count
-from .util import SPREAD_MIN_BYTES, prefix_rank, spread
+from .util import prefix_rank, spread
 
 
 def _hash32(col: Column, salt: str = "") -> Column:
@@ -64,7 +64,7 @@ def chunk_pack(df: DataFrame, text_col: str = "text",
     # re-run the token-count scan over the full text otherwise.
     # spread first — the tokenize on a 1-row-group local scan
     # otherwise runs on 1 core (r11, guide §6; no-op at scale)
-    counted = spread(df, min_bytes=SPREAD_MIN_BYTES).select(
+    counted = spread(df).select(
         F.col(id_col), toks.alias("n_tokens")).localCheckpoint()
     out, _ = prefix_rank(counted, [F.col(id_col)], F.col("n_tokens"),
                          "start_tok")
@@ -292,7 +292,7 @@ def dsir_weights(raw: DataFrame, target: DataFrame,
         # survives, so the pinned raw-side relation is two ints per
         # token. spread first: the normalize+explode+md5 pass on a
         # 1-row-group local scan otherwise runs on 1 core (r11).
-        return (spread(d, id_col, min_bytes=SPREAD_MIN_BYTES)
+        return (spread(d, id_col)
                 .select(F.col(id_col).alias("_id"), tok)
                 .filter(F.col("_tok") != "")
                 .select("_id",
@@ -450,7 +450,7 @@ def token_budget_sample(df: DataFrame,
     # sampler would re-run the token scan otherwise); spread first —
     # the tokenize pass on a 1-row-group local scan otherwise runs on
     # 1 core (r11, guide §6; no-op at scale)
-    counted = (spread(df, min_bytes=SPREAD_MIN_BYTES)
+    counted = (spread(df)
                .select(F.col(group_col), F.col(id_col),
                        toks.alias("_tok"))
                .withColumn("_k", key).localCheckpoint())

@@ -19,7 +19,7 @@ import logging
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .util import SPREAD_MIN_BYTES, spread as _spread, cached_parquet
+from .util import spread as _spread, cached_parquet
 
 _LOG = logging.getLogger(__name__)
 
@@ -749,7 +749,7 @@ def quantize_embeddings(df: DataFrame, vec_col: str = "embedding",
     fold-order-sensitive sums (mse, cosine) are rounded far above
     ulp noise."""
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    df = _spread(df, min_bytes=SPREAD_MIN_BYTES)  # HOF projections on
+    df = _spread(df)  # HOF projections on
     # a 1-row-group local scan otherwise run on 1 core (r11, §6)
     base = (df.select(F.col(id_col), v.alias("_v"))
             .filter(F.size("_v") > 0)

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .util import half_up, spread as _spread
+
 # BPE-ish tokenization: word pieces or single non-space punctuation.
 # Same regex is valid RE2 (DuckDB) and Java (Spark) syntax.
 TOKEN_RE = r"[A-Za-z0-9_]+|[^A-Za-z0-9_\s]"
@@ -79,9 +81,9 @@ def quality_score(text: Column) -> Column:
     mwl = F.when(ntok > 0, (n - st["n_space"]) / ntok).otherwise(F.lit(0.0))
     mwl_score = F.when((mwl >= 3) & (mwl <= 10), F.lit(1.0)).otherwise(
         F.lit(0.0))
-    return F.round(
+    return half_up(
         F.lit(0.4) * length_score + F.lit(0.3) * alpha_ratio
-        + F.lit(0.3) * mwl_score, 6)
+        + F.lit(0.3) * mwl_score, 1e6)
 
 
 def lang_scores(text: Column) -> dict[str, Column]:
@@ -140,7 +142,6 @@ def doc_stats(df: DataFrame, text_col: str = "text",
     r11: spread — sf1 documents arrive as ONE row group, so this
     regex/translate map pass ran on 1 of 32 cores (guide §6 scan
     parallelism; a no-op at scale)."""
-    from .util import spread as _spread
     df = _spread(df, id_col)
     t = F.col(text_col)
     st = char_stats(t)
@@ -331,7 +332,6 @@ def repetition_stats(df: DataFrame, text_col: str = "text",
 
     Thresholds are the caller's choice; :func:`gopher_repetition_ok`
     applies the published Gopher cut-offs."""
-    from .util import spread as _spread
     df = _spread(df, id_col)  # few-split local inputs: the 3 n-gram
     # regex passes are the map-side cost; see util.spread
     ex = _repetition_exprs(F.col(text_col))
@@ -392,7 +392,6 @@ def quality_filter_chain(df: DataFrame, text_col: str = "text",
     arithmetic over one text scan; ``repetition`` adds
     :func:`repetition_stats`'s one (doc, gram) partial-agg shuffle
     and joins back on the id. No UDFs, no collect."""
-    from .util import spread as _spread
     df = _spread(df, id_col)  # regex-heavy map pass: don't let a
     # few-row-group parquet layout cap task parallelism (util.spread)
     text = F.coalesce(F.col(text_col), F.lit(""))
@@ -497,8 +496,6 @@ def winnow_fingerprints(df: DataFrame, text_col: str = "text",
     reproduces fingerprints value-for-value."""
     from pyspark.sql.window import Window
 
-    from .util import spread as _spread
-
     grams = (_spread(df, id_col).select(
         F.col(id_col).alias("_id"),
         F.posexplode(text_ngrams(normalize_text(F.col(text_col)), k))
@@ -535,7 +532,6 @@ def chunk_text(df: DataFrame, text_col: str = "text",
         # negative overlap (stride > size) would silently skip tokens
         # between chunks, violating the every-token-covered guarantee
         raise ValueError("overlap must be in [0, size)")
-    from .util import spread as _spread
     df = _spread(df, id_col)  # 1-row-group local scans: the split +
     # slice + explode pass otherwise runs on 1 core (r11, guide §6)
     stride = size - overlap
@@ -579,7 +575,6 @@ def tfidf_top_terms(df: DataFrame, text_col: str = "text",
     window over the (doc, term) partitioning, never a global sort.
     The tf ⋈ df join shuffles on term; at corpus scale the df side is
     vocabulary-sized and AQE picks broadcast when it fits."""
-    from .util import spread as _spread
     df = _spread(df, id_col)
     toks = (df.select(F.col(id_col).alias("_id"),
                       F.explode(F.split(normalize_text(F.col(text_col)),
@@ -650,7 +645,6 @@ def lm_perplexity(df: DataFrame, train_df: DataFrame | None = None,
     keyed aggregation. No Python, no window over the data."""
     if not 0.0 < alpha <= 1.0:
         raise ValueError("alpha must be in (0, 1]")
-    from .util import spread as _spread
     train = train_df if train_df is not None else df
     tnorm = normalize_text(F.col(text_col))
     ttoks = (train.select(F.explode(F.split(tnorm, " ")).alias("_w"))
@@ -737,7 +731,6 @@ def duplicate_spans(df: DataFrame, text_col: str = "text",
     still detected because all its k-grams collide."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    from .util import spread as _spread
     df = _spread(df, id_col)
     grams = (df.select(
         F.col(id_col).alias("_id"),
@@ -793,8 +786,7 @@ def corpus_report(df: DataFrame, group_col: str = "source",
     (group, fingerprint) rollup for the duplicate rate. Everything is
     whole-stage codegen; shuffle width is bounded by
     |groups| x |langs| and |distinct texts|, never rows x rows."""
-    from .util import SPREAD_MIN_BYTES, spread as _spread
-    df = _spread(df, id_col, min_bytes=SPREAD_MIN_BYTES)  # the
+    df = _spread(df, id_col)  # the
     # tokens/quality/fingerprint map pass is ~15× the scan cost —
     # never leave it on 1 core; sf0.1 A/B says gate tiny inputs (r11)
     t = F.col(text_col)
@@ -887,7 +879,6 @@ def bm25_topk(df: DataFrame, queries: list[tuple[int, str]],
     At 100 TB this is one corpus scan + two bounded shuffles."""
     if not queries:
         raise ValueError("bm25_topk needs at least one (id, text) query")
-    from .util import spread as _spread
     spark = df.sparkSession
     qterms = sorted({(int(qid), w)
                      for qid, qtext in queries
@@ -979,8 +970,7 @@ def compression_ratio(df: DataFrame, text_col: str = "text",
     import pandas as pd  # noqa: F401 (document the dependency)
     from pyspark.sql import types as T
 
-    from .util import SPREAD_MIN_BYTES, spread as _spread
-    df = _spread(df, id_col, min_bytes=SPREAD_MIN_BYTES)  # DEFLATE on
+    df = _spread(df, id_col)  # DEFLATE on
     # 1 Python worker otherwise (sf1 documents = one row group;
     # no-op at scale and on tiny inputs — r11)
     out_schema = T.StructType([
@@ -1035,7 +1025,6 @@ def vocab_coverage(df: DataFrame, vocab_size: int = 1000,
     stream, and the per-doc rollup partial-aggregates, so the second
     shuffle carries one row per document. Two bounded shuffles per
     100 TB scan; no window over data."""
-    from .util import spread as _spread
     df = _spread(df, id_col)
     toks = (df.select(F.col(id_col).alias("_id"),
                       F.explode(F.split(normalize_text(F.col(text_col)),
@@ -1080,7 +1069,6 @@ def token_entropy(df: DataFrame, text_col: str = "text",
     partial-agg rollup (one row per document) — the same two-shuffle
     bound as vocab_coverage; everything stays in whole-stage codegen.
     """
-    from .util import spread as _spread
     df = _spread(df, id_col)
     toks = (df.select(F.col(id_col).alias("_id"),
                       F.explode(F.split(normalize_text(F.col(text_col)),

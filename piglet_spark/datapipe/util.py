@@ -2,8 +2,10 @@
 
 from __future__ import annotations
 
+import math
 import os
 import weakref
+from urllib.parse import urlparse
 
 from pyspark.sql import Column, DataFrame
 
@@ -22,14 +24,48 @@ from pyspark.sql import Column, DataFrame
 # cache and is re-resolved.
 _PARQUET_HANDLES: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
+# ------------------------------------------------------------------
+# Size gates: every threshold that picks a physical regime lives here.
+# Input sizes come from the one probe, :func:`input_bytes`; an input it
+# cannot size is unknown and every gate takes its at-scale side. Tests
+# force a regime with ``monkeypatch.setattr(util, NAME, value)``, so
+# callers read these as ``util.NAME`` at call time.
+
 # Row count at or under which :func:`prefix_rank` computes a global
 # prefix with one window instead of the TeraSort two-phase rank.
 SMALL_ROWS = 2_000_000
 
-# On-disk input size under which the size-gated :func:`spread` sites
-# skip their repartition: the sf0.1 A/B showed the added exchange
-# costing more than the parallelism buys on tiny inputs (r11).
+# On-disk input size under which :func:`spread` skips its repartition:
+# the sf0.1 A/B showed the added exchange costing more than the
+# parallelism buys on tiny inputs (r11).
 SPREAD_MIN_BYTES = 2 * 1024 * 1024
+
+# On-disk input size at which a shared reduction-point alias is pinned
+# with a non-eager localCheckpoint (Executor.df): below it recompute
+# per consumer is cheaper than the materialization barrier (measured
+# 0.78-0.91x at sf0.1, ~17 MB of input; 1.43x/1.15x at sf1 on q21/q15).
+SHARED_CKPT_MIN_BYTES = 64 * 1024 * 1024
+
+# graph.pagerank: edge lists at most this many rows run the whole loop
+# as one single-task Arrow kernel; node counts at most the second
+# broadcast the rank relation (~50 B/node, ~100 MB at 2M) into the
+# per-iteration joins. Exact counts, never estimates.
+PAGERANK_KERNEL_EDGES = 2_000_000
+PAGERANK_BROADCAST_NODES = 2_000_000
+
+# dedup.neardup_clusters: connected components run as driver
+# union-find when the pair set has at most DRIVER_CC_EDGES edges AND
+# its estimated driver memory is at most DRIVER_CC_BYTES (string ids
+# can be 10-50x larger than the ~16 B/edge numeric sizing, r04).
+DRIVER_CC_EDGES = 1_000_000
+DRIVER_CC_BYTES = 256 * 1024 ** 2
+
+# dedup.ngram_jaccard_pairs: a corpus KNOWN (n_docs hint or the
+# max_df='scale' count) to hold at least JACCARD_BIG_DOCS documents
+# gets the sliced, widened scale plan; up to JACCARD_BROADCAST_DOCS
+# the per-doc size table (≤20 B/doc) broadcasts into the pair joins.
+JACCARD_BIG_DOCS = 1_000_000
+JACCARD_BROADCAST_DOCS = 20_000_000
 
 
 def _path_fingerprint(path: str) -> tuple:
@@ -90,25 +126,29 @@ def memo_on_df(df: DataFrame, key: str, fn):
     return memo[key]
 
 
-def input_bytes(df: DataFrame) -> int:
-    """Total on-disk bytes of the DataFrame's input files (local
-    paths; unknown schemes/errors conservatively count 0 — size-gated
-    optimizations then stay on their lazy/small side). Metadata only,
-    no job. The datapipe twin of the engine's ``_paths_bytes`` gate
-    helper (r11)."""
-    import os
-    from urllib.parse import urlparse
-    total = 0
+def input_bytes(df: DataFrame) -> float:
+    """Total on-disk bytes of the DataFrame's input files — the one
+    input-size probe behind every size gate. Metadata only, no job.
+
+    Returns ``math.inf`` (unknown) when ``inputFiles()`` raises, a file
+    is not on a local (``file:``) path, or a file cannot be stat'ed:
+    every ``input_bytes(df) < THRESHOLD`` gate then takes its at-scale
+    side, so an unsized (remote) input never quietly picks the
+    small-input plan. A plan with no input files (in-memory rows)
+    sizes to 0."""
     try:
-        for f in df.inputFiles():
-            p = urlparse(f)
-            if p.scheme in ("", "file"):
-                try:
-                    total += os.path.getsize(p.path)
-                except OSError:
-                    pass
+        files = df.inputFiles()
     except Exception:
-        return 0
+        return math.inf
+    total = 0
+    for f in files:
+        p = urlparse(f)
+        if p.scheme not in ("", "file"):
+            return math.inf
+        try:
+            total += os.stat(p.path).st_size
+        except OSError:
+            return math.inf
     return total
 
 
@@ -137,18 +177,13 @@ def _plan_has(plan: str, nodes) -> bool:
     return pat.search(plan) is not None
 
 
-def spread(df: DataFrame, *key_cols: str,
-           min_bytes: int = 0) -> DataFrame:
+def spread(df: DataFrame, *key_cols: str) -> DataFrame:
     """Repartition up to the cluster's parallelism when the scan
     produced too few splits (small local files → 1 partition → any
     CPU-heavy map stage runs on one core). A no-op at scale, where
-    scans already have ≥ defaultParallelism splits.
-
-    ``min_bytes`` (r11): also a no-op below this many ON-DISK input
-    bytes — for map passes where the sf0.1 A/B showed the added
-    exchange costing more than the parallelism buys on tiny inputs
-    (the r11 call sites pass :data:`SPREAD_MIN_BYTES`; the 29 pre-r11
-    sites keep the unconditional probe their rounds measured).
+    scans already have ≥ defaultParallelism splits, and below
+    :data:`SPREAD_MIN_BYTES` of on-disk input, where the added
+    exchange costs more than the parallelism buys.
 
     With ``key_cols``, hash-partition on those columns so a downstream
     groupBy/join on the same keys reuses this exchange instead of
@@ -161,7 +196,7 @@ def spread(df: DataFrame, *key_cols: str,
     jobs are then thrown away and re-run by the real action), and its
     parallelism is already spark.sql.shuffle.partitions."""
     from pyspark.sql import functions as F
-    if min_bytes and input_bytes(df) < min_bytes:
+    if input_bytes(df) < SPREAD_MIN_BYTES:
         return df
     try:
         plan = df._jdf.queryExecution().optimizedPlan().toString()
@@ -333,6 +368,20 @@ def prefix_rank(rel: DataFrame, order: list, weight: Column,
         *[ranked[c] for c in rel.columns],
         (ranked["__run"] + off["__off"]).cast("long").alias(out_col))
     return out, total
+
+
+def half_up(c: Column, scale: float) -> Column:
+    """HALF_UP rounding of a non-negative double as explicit IEEE ops:
+    ``floor(x·scale + 0.5)/scale``. Used instead of ``F.round`` so the
+    ENGINE and the DuckDB oracle evaluate the *same* double
+    expression bit-for-bit: on a value that lands exactly on a
+    rounding tie (round-12 grid values CAN tie at the final round-9 —
+    2 of 15999 sf0.1 ranks did), Spark's BigDecimal HALF_UP and
+    DuckDB's double ``round`` disagree; two engines running this one
+    formulation cannot (r11). Shared by graph.pagerank and
+    text.quality_score."""
+    from pyspark.sql import functions as F
+    return F.floor(c * F.lit(scale) + F.lit(0.5)) / F.lit(scale)
 
 
 def salted_join(big: DataFrame, dim: DataFrame, on: str | list[str],

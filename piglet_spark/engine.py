@@ -19,39 +19,6 @@ from .plans import parser as P
 from .plans import rewrite as R
 
 
-_SIZE_CACHE: dict[str, int] = {}
-
-
-def _paths_bytes(paths) -> int:
-    """Total on-disk bytes of the LOAD paths feeding a shared subplan
-    (file or directory; globs/remote schemes conservatively count 0 —
-    unknown size stays lazy). Cached per path: stat'ing the same
-    parquet dir for every script in a session is wasted syscalls, and
-    a bench run replays the same script many times."""
-    import os
-    total = 0
-    for p in paths:
-        if p in _SIZE_CACHE:
-            total += _SIZE_CACHE[p]
-            continue
-        n = 0
-        try:
-            if os.path.isfile(p):
-                n = os.path.getsize(p)
-            elif os.path.isdir(p):
-                for root, _dirs, files in os.walk(p):
-                    for f in files:
-                        try:
-                            n += os.path.getsize(os.path.join(root, f))
-                        except OSError:
-                            pass
-        except OSError:
-            n = 0
-        _SIZE_CACHE[p] = n
-        total += n
-    return total
-
-
 class PigEngine:
     def __init__(self, spark: SparkSession,
                  params: Optional[dict[str, str]] = None,
@@ -122,18 +89,14 @@ class PigEngine:
             # shapes re-executed a grouped join 3-4×; ckpt_ab.py
             # measured 1.43×/1.15× at sf1 on q21/q15). The input-size
             # gate keeps small inputs lazy, where the recompute is
-            # cheaper than the materialization barrier (measured
-            # 0.78-0.91× at sf0.1 ≈ 17 MB of input). localCheckpoint —
-            # unlike persist — leaves the session CacheManager alone,
-            # so a later identical query never silently reads this
-            # run's result. Opt out with options={"auto_cache": False};
-            # tune the gate with options={"shared_ckpt_min_bytes": N}.
-            min_bytes = int(self.executor.options.get(
-                "shared_ckpt_min_bytes", 64 * 1024 * 1024))
-            self.executor.ckpt_aliases = {
-                a for a, paths in
-                R.checkpoint_candidates(ops, counts).items()
-                if _paths_bytes(paths) >= min_bytes}
+            # cheaper than the materialization barrier; Executor.df
+            # applies it (datapipe.util.SHARED_CKPT_MIN_BYTES).
+            # localCheckpoint — unlike persist — leaves the session
+            # CacheManager alone, so a later identical query never
+            # silently reads this run's result. Opt out with
+            # options={"auto_cache": False}.
+            self.executor.ckpt_aliases = R.checkpoint_candidates(
+                ops, counts)
         self.executor.mm_spliced = set()  # fresh per run()
         self.executor.bound_this_run = set()  # scope mm profiling to this run
         self._maybe_init_mm(ops)

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
+from ..datapipe import util as dp_util
 from ..plans import ast as A
 from ..plans import schema as S
 from ..plans.exprs import Ctx, compile_expr, static_dtype
@@ -613,11 +614,17 @@ class Executor:
             # every consumer reads the stored partitions, and (unlike
             # persist) nothing is registered in the CacheManager, so a
             # later identical plan in the same session recomputes.
+            # Decided once per alias on the bound plan's input bytes:
+            # small inputs stay lazy.
             if (isinstance(rel, DataFrame) and not rel.isStreaming
-                    and alias not in self._loads):
+                    and alias not in self._loads
+                    and dp_util.input_bytes(rel)
+                    >= dp_util.SHARED_CKPT_MIN_BYTES):
                 rel = rel.localCheckpoint(eager=False)
                 self.env[alias] = rel
                 self._cached.add(alias)
+            else:
+                self.ckpt_aliases.discard(alias)
         return rel
 
     def rel(self, alias: str) -> Relation:
@@ -893,13 +900,10 @@ class Executor:
             # local scan with fewer splits than cores (sf1 documents
             # arrive as ONE row group) the whole tokenize+explode runs
             # on 1-2 cores. spread() is a metadata-only probe that
-            # repartitions only in that case and is a no-op at scale
-            # or on already-shuffled inputs. Size-gated at 2 MB of
-            # on-disk input: below it the extra exchange costs more
-            # than the parallelism buys (sf0.1 A/B 0.6 -> 0.9 s;
-            # sf1 A/B 2.6-2.8 -> 1.9-2.1 s) (r11, guide §6).
-            from ..datapipe.util import SPREAD_MIN_BYTES, spread as _spread
-            df = _spread(df, min_bytes=SPREAD_MIN_BYTES)
+            # repartitions only in that case: a no-op at scale, on
+            # already-shuffled inputs and below its size gate (sf1 A/B
+            # 2.6-2.8 -> 1.9-2.1 s; r11, guide §6).
+            df = dp_util.spread(df)
         ctx = self.ctx(df)
         sel: list[Column] = []
         names: list[Optional[str]] = []

@@ -216,8 +216,7 @@ _NARROW_OPS = (A.Foreach, A.Filter, A.Limit, A.Sample)
 
 
 def checkpoint_candidates(ops: list[A.Op],
-                          counts: dict[str, int]
-                          ) -> dict[str, set[str]]:
+                          counts: dict[str, int]) -> set[str]:
     """Aliases worth pinning with a non-eager localCheckpoint: consumed
     by 2+ downstream operators AND a reduction point — an aggregate/
     distinct output (possibly behind narrow ops). Without the pin,
@@ -227,10 +226,10 @@ def checkpoint_candidates(ops: list[A.Op],
     per-consumer column pruning makes the duplicated exchanges
     structurally different).
 
-    Returns {alias: load paths in its lineage} — the caller gates each
-    candidate on total input bytes (materialization has a fixed cost
-    that only pays off once the recomputed subtree reads enough data;
-    measured crossover in tools/ckpt_ab.py).
+    The executor gates each candidate on its input bytes when it is
+    first read (materialization has a fixed cost that only pays off
+    once the recomputed subtree reads enough data; measured crossover
+    in tools/ckpt_ab.py).
 
     localCheckpoint (NOT persist): persist registers the analyzed plan
     in the session CacheManager, so a *later identical query* would
@@ -255,23 +254,7 @@ def checkpoint_candidates(ops: list[A.Op],
             return is_reduction(op.inputs[0], hops + 1)
         return False
 
-    loads_memo: dict[str, set[str]] = {}
-
-    def lineage_loads(alias: str) -> set[str]:
-        if alias in loads_memo:
-            return loads_memo[alias]
-        loads_memo[alias] = set()  # rebind-cycle guard (A = FILTER A …)
-        op = producers.get(alias)
-        paths: set[str] = set()
-        if isinstance(op, A.Load):
-            paths.add(op.path)
-        elif op is not None:
-            for i in op.inputs:
-                paths |= lineage_loads(i)
-        loads_memo[alias] = paths
-        return paths
-
-    return {a: lineage_loads(a) for a, n in counts.items()
+    return {a for a, n in counts.items()
             if n >= 2 and is_reduction(a)}
 
 

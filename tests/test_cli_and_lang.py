@@ -276,7 +276,8 @@ U = UNION X, Y;
     assert "InMemoryTableScan" in plan
 
 
-def test_default_shared_shuffle_checkpoint(spark, data_dir):
+def test_default_shared_shuffle_checkpoint(spark, data_dir, monkeypatch):
+    from piglet_spark.datapipe import util as dp_util
     # r10 default sharing: a shared REDUCTION point (aggregate output
     # with 2+ consumers) over enough input bytes is pinned with a
     # non-eager localCheckpoint, so the grouped subtree executes once,
@@ -291,7 +292,8 @@ X = FILTER S BY tot > 6;
 Y = FILTER S BY tot <= 6;
 U = UNION X, Y;
 """
-    eng = pg.PigEngine(spark, options={"shared_ckpt_min_bytes": 0})
+    monkeypatch.setattr(dp_util, "SHARED_CKPT_MIN_BYTES", 0)
+    eng = pg.PigEngine(spark)
     eng.run(script)
     assert rows(eng.df("U")) == [(1, 7), (4, 6), (7, 9)]
     assert "S" in eng.executor._cached       # pinned …
@@ -301,12 +303,14 @@ U = UNION X, Y;
     assert "InMemoryTableScan" not in plan   # NOT the persist path
     # size gate: with the default 64 MB floor this tiny input stays
     # lazy — the materialization barrier costs more than recompute
+    monkeypatch.undo()
     eng2 = pg.PigEngine(spark)
     eng2.run(script)
     assert rows(eng2.df("U")) == [(1, 7), (4, 6), (7, 9)]
     assert "S" not in eng2.executor._cached
     # non-reduction shared subplans (narrow projection) stay lazy too
-    eng3 = pg.PigEngine(spark, options={"shared_ckpt_min_bytes": 0})
+    monkeypatch.setattr(dp_util, "SHARED_CKPT_MIN_BYTES", 0)
+    eng3 = pg.PigEngine(spark)
     eng3.run(f"""
 A = LOAD '{data_dir}/t.csv' USING PigStorage(',') AS (f1:int, f2:int, f3:int);
 E = FOREACH A GENERATE f1, f2 + f3 AS s;

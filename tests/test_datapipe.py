@@ -6,7 +6,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from piglet_spark.datapipe import dedup, multimodal, similarity, text
+from piglet_spark.datapipe import dedup, multimodal, similarity, text, util
 
 
 @pytest.fixture(scope="module")
@@ -447,11 +447,12 @@ def test_audio_frame_sampling(docs):
     assert frames.groupBy("doc_id").count().distinct().collect()[0]["count"] == 4
 
 
-def test_spread_skips_wide_plans(spark):
+def test_spread_skips_wide_plans(spark, monkeypatch):
     """Review regression: spread() must not probe (and thereby
     execute, under AQE) plans that already contain a shuffle — it
-    returns them unchanged."""
+    returns them unchanged, also with the size gate off."""
     from piglet_spark.datapipe.util import spread
+    monkeypatch.setattr(util, "SPREAD_MIN_BYTES", 0)
     df = spark.createDataFrame([(1, "a")], ["id", "t"])
     wide = df.groupBy("t").count()
     assert spread(wide) is wide
@@ -513,7 +514,7 @@ def test_neardup_clusters_union_find(spark):
     assert got[5] == (5, True)  # singleton
 
 
-def test_neardup_clusters_long_chain(spark):
+def test_neardup_clusters_long_chain(spark, monkeypatch):
     """Pointer jumping: a 40-link chain (diameter 40) converges well
     inside the default round cap, in one cluster; an absurdly low cap
     raises instead of silently splitting the component."""
@@ -524,17 +525,21 @@ def test_neardup_clusters_long_chain(spark):
                                   ["id_a", "id_b"])
     # both regimes (r03: driver union-find below the edge threshold,
     # distributed label propagation above it) give identical labels
+    # and an identical schema
+    schemas = []
     for thr in (1_000_000, 0):
-        out = dedup.neardup_clusters(docs, pairs=pairs,
-                                     driver_cc_threshold=thr)
+        monkeypatch.setattr(util, "DRIVER_CC_EDGES", thr)
+        out = dedup.neardup_clusters(docs, pairs=pairs)
+        schemas.append(out.schema)
         got = {r["doc_id"]: (r["cluster_id"], r["is_canonical"])
                for r in out.collect()}
         assert all(got[i] == (0, i == 0) for i in range(n)), thr
+    assert schemas[0] == schemas[1]
     # an absurdly low round cap raises on the DISTRIBUTED path; the
     # driver path needs no rounds at all
+    monkeypatch.setattr(util, "DRIVER_CC_EDGES", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.neardup_clusters(docs, pairs=pairs, max_iters=2,
-                               driver_cc_threshold=0)
+        dedup.neardup_clusters(docs, pairs=pairs, max_iters=2)
 
 
 def test_neardup_clusters_byte_aware_driver_gate(spark, monkeypatch):
@@ -567,11 +572,13 @@ def test_neardup_clusters_byte_aware_driver_gate(spark, monkeypatch):
     monkeypatch.setattr(dedup, "_driver_union_find", spy_uf)
     monkeypatch.setattr(dedup, "_distributed_cc", spy_cc)
 
-    def labels(**kw):
-        out = dedup.neardup_clusters(docs, pairs=pairs, **kw)
+    def labels():
+        out = dedup.neardup_clusters(docs, pairs=pairs)
         return {r["doc_id"]: r["cluster_id"] for r in out.collect()}
 
-    small_budget = labels(driver_cc_max_bytes=1000)  # over budget
+    with monkeypatch.context() as m:
+        m.setattr(util, "DRIVER_CC_BYTES", 1000)
+        small_budget = labels()  # over budget
     assert calls == {"driver": 0, "dist": 1}
     big_budget = labels()  # default 256 MB: comfortably within
     assert calls == {"driver": 1, "dist": 1}
@@ -724,10 +731,10 @@ def test_neardup_clusters_one_action_per_round(spark, monkeypatch):
     pairs = spark.createDataFrame(
         [(0, 1, 1.0), (1, 2, 1.0), (3, 4, 1.0)],
         ["id_a", "id_b", "jaccard"])
-    # driver_cc_threshold=0 forces the distributed path (the regime
+    # DRIVER_CC_EDGES=0 forces the distributed path (the regime
     # this test guards; small graphs take the union-find shortcut)
-    out = dedup.neardup_clusters(docs, pairs=pairs,
-                                 driver_cc_threshold=0)
+    monkeypatch.setattr(util, "DRIVER_CC_EDGES", 0)
+    out = dedup.neardup_clusters(docs, pairs=pairs)
     rowsout = {r["doc_id"]: r["cluster_id"] for r in out.collect()}
     assert rowsout == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 5}
     # exactly ONE count — the edge-size regime probe — and no
@@ -2117,6 +2124,10 @@ def test_lsh_compact_index_preserves_queries(spark, sf_dir, tmp_path):
     n_before = nf()
     dedup.lsh_compact_index(spark, idx)
     assert nf() < n_before
+    # the files_per_band contract (default 1): one file per band dir
+    bands = glob.glob(f"{idx}/buckets/_band=*")
+    assert bands and all(
+        len(glob.glob(f"{d}/*.parquet")) <= 1 for d in bands)
     after = sorted(map(key, dedup.minhash_cross_index(
         spark, idx, new, threshold=0.2).collect()))
     assert after == before and after

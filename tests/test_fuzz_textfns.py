@@ -24,7 +24,7 @@ from __future__ import annotations
 import duckdb
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -119,7 +119,18 @@ def test_token_and_char_stats_match_duckdb(spark, vals):
     """)
 
 
+# a quality score that lands on a round-6 tie (0.5051625): Spark's
+# decimal round and DuckDB's double round split it, the shared
+# floor(x·1e6+0.5)/1e6 formulation cannot
+_TIE_TEXT = (
+    "+4915112345678-und  x-und. 123-45-6789. Hello, 10.1.2.3the "
+    "256.1.1.112-34 7 555-123-4567. 4111 1111 1111 1111 the. "
+    "the123-456-789, !!!a1b2c3  the, quux !!!  of 123-456-789, !!! "
+    "+4915112345678 ")
+
+
 @given(texts)
+@example([_TIE_TEXT])
 @settings(max_examples=15 * _FSCALE, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_quality_fingerprint_langid_match_duckdb(spark, vals):
@@ -146,7 +157,7 @@ def test_quality_fingerprint_langid_match_duckdb(spark, vals):
         "fp": dp_text.fingerprint(t),
         "lang": dp_text.lang_id(t),
     }, f"""
-       ROUND(
+       floor((
          0.4 * LEAST(length(text) / 500.0, 1.0)
        + 0.3 * (CASE WHEN length(text) > 0
                 THEN length(regexp_replace(text, '[^A-Za-z]', '', 'g'))::DOUBLE
@@ -159,7 +170,7 @@ def test_quality_fingerprint_langid_match_duckdb(spark, vals):
                      / (CASE WHEN length(trim(text)) = 0 THEN 0
                         ELSE len(string_split_regex(trim(text), '\\s+')) END)
                      BETWEEN 3 AND 10
-                THEN 1.0 ELSE 0.0 END), 6),
+                THEN 1.0 ELSE 0.0 END)) * 1e6 + 0.5) / 1e6,
        md5(trim(regexp_replace(regexp_replace(lower(text),
            '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))),
        {lang_expr}

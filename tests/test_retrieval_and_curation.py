@@ -471,23 +471,53 @@ def test_pagerank_brute_force(spark):
         dpg.pagerank(edges, damping=1.5)
 
 
-def test_pagerank_kernel_matches_loop_regime(spark):
-    """r10: the single-task Arrow kernel regime (small graphs) must
-    equal the Spark loop plan (kernel_edges=0 forces it) exactly —
-    duplicate edges, dangling nodes, source-only nodes, string ids."""
-    import random
+def _pagerank_regime(spark, monkeypatch, rows, **gates):
+    """pagerank over ``rows`` with util's regime gates set to
+    ``gates`` for this call: (schema, sorted rows)."""
     from piglet_spark.datapipe import graph as dpg
+    from piglet_spark.datapipe import util as dp_util
+    edges = spark.createDataFrame(rows, "src string, dst string")
+    with monkeypatch.context() as m:
+        for name, v in gates.items():
+            m.setattr(dp_util, name, v)
+        out = dpg.pagerank(edges, iters=3)
+        return out.schema, sorted(tuple(r) for r in out.collect())
+
+
+def test_pagerank_kernel_matches_loop_regime(spark, monkeypatch):
+    """r10: the single-task Arrow kernel regime (small graphs) must
+    equal the Spark loop plan (PAGERANK_KERNEL_EDGES=0 forces it)
+    exactly, schema included — duplicate edges, dangling nodes,
+    source-only nodes, string ids."""
+    import random
     rng = random.Random(11)
     for trial, n in [(0, 12), (1, 60), (2, 200)]:
         rows = [(f"n{rng.randrange(n)}", f"n{rng.randrange(n)}")
                 for _ in range(4 * n)]
-        edges = spark.createDataFrame(rows, "src string, dst string")
-        kern = sorted(tuple(r) for r in
-                      dpg.pagerank(edges, iters=3).collect())
-        loop = sorted(tuple(r) for r in
-                      dpg.pagerank(edges, iters=3,
-                                   kernel_edges=0).collect())
-        assert kern == loop, f"trial {trial}"
+        kern = _pagerank_regime(spark, monkeypatch, rows)
+        loop = _pagerank_regime(spark, monkeypatch, rows,
+                                PAGERANK_KERNEL_EDGES=0)
+        assert kern[0] == loop[0], f"trial {trial}"
+        assert kern[1] == loop[1], f"trial {trial}"
+
+
+def test_pagerank_broadcast_matches_shuffle_regime(spark, monkeypatch):
+    """The loop plan's broadcast regime (rank relation broadcast into
+    the per-iteration joins) and its shuffle regime (edges
+    repartitioned on the join key) return the same schema and rows;
+    PAGERANK_BROADCAST_NODES=0 forces the shuffle regime."""
+    import random
+    rng = random.Random(5)
+    n = 80
+    rows = [(f"n{rng.randrange(n)}", f"n{rng.randrange(n)}")
+            for _ in range(4 * n)]
+    bcast = _pagerank_regime(spark, monkeypatch, rows,
+                             PAGERANK_KERNEL_EDGES=0)
+    shuffle = _pagerank_regime(spark, monkeypatch, rows,
+                               PAGERANK_KERNEL_EDGES=0,
+                               PAGERANK_BROADCAST_NODES=0)
+    assert bcast[0] == shuffle[0]
+    assert bcast[1] == shuffle[1] and len(bcast[1]) > 1
 
 
 def test_pagerank_via_stream_through(spark, tmp_path):

@@ -28,8 +28,9 @@ def main():
         os.path.dirname(os.path.abspath(__file__))))
     from piglet_spark.datapipe import similarity as sim
 
-    spark = (SparkSession.builder.master("local[32]")
-             .config("spark.sql.shuffle.partitions", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
+    spark = (SparkSession.builder.master(f"local[{cpus}]")
+             .config("spark.sql.shuffle.partitions", cpus)
              .config("spark.ui.enabled", "false")
              .appName("ann_recall").getOrCreate())
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet") \

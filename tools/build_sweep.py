@@ -27,7 +27,7 @@ def main():
         os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     spark = (SparkSession.builder.master(f"local[{cpus}]")
              .config("spark.sql.shuffle.partitions", cpus)
              .config("spark.ui.enabled", "false")

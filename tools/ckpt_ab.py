@@ -37,7 +37,7 @@ def main():
     import __spark_entry__ as entrymod
     import piglet_spark as pg
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     spark = (SparkSession.builder.master(f"local[{cpus}]")
              .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
              .config("spark.sql.adaptive.enabled", "true")

@@ -24,8 +24,9 @@ def main():
     from piglet_spark.datapipe.text import normalize_text
     from piglet_spark.datapipe.pack import _hash32
 
-    spark = (SparkSession.builder.master("local[32]")
-             .config("spark.sql.shuffle.partitions", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
+    spark = (SparkSession.builder.master(f"local[{cpus}]")
+             .config("spark.sql.shuffle.partitions", cpus)
              .config("spark.sql.adaptive.enabled", "true")
              .config("spark.ui.enabled", "false")
              .config("spark.ui.showConsoleProgress", "false")

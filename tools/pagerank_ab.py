@@ -25,9 +25,9 @@ def main():
         os.path.abspath(__file__))))
     from piglet_spark.datapipe import graph as dp_graph
 
-    spark = (SparkSession.builder.master(
-        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.shuffle.partitions", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
+    spark = (SparkSession.builder.master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.driver.memory", "24g")
         .config("spark.ui.enabled", "false")

@@ -26,8 +26,9 @@ def main():
     from piglet_spark.datapipe.dedup import (_SIMHASH_BITS, _spread,
                                              token_hash60, tokens_of)
 
-    spark = (SparkSession.builder.master("local[32]")
-             .config("spark.sql.shuffle.partitions", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
+    spark = (SparkSession.builder.master(f"local[{cpus}]")
+             .config("spark.sql.shuffle.partitions", cpus)
              .config("spark.sql.adaptive.enabled", "true")
              .config("spark.ui.enabled", "false")
              .config("spark.ui.showConsoleProgress", "false")
