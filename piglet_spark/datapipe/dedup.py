@@ -3,9 +3,10 @@ Jaccard, embedding-cosine near-dup.
 
 Scale design (the point of each algorithm):
 - exact: one hash-shuffle on a 128-bit fingerprint, never on raw text.
-- MinHash/LSH: signature computation is per-row (map-only, JVM
-  higher-order functions); the only shuffle is the band-bucket
-  self-join, and buckets are tiny by construction. No O(n²) stage.
+- MinHash/LSH: one pipeline for every entry point — shingle base →
+  signatures (min aggregates, map-side partial aggregation; streams
+  use the equal-valued Arrow kernel) → band buckets → (band, bucket)
+  join, buckets tiny by construction → exact Jaccard. No O(n²) stage.
 - verification joins fetch candidate pairs only (semi-join pattern).
 
 All hash math uses portable md5-prefix hashes (``conv(substr(md5(x),
@@ -20,6 +21,8 @@ the last few percent if oracle parity is not needed.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -32,27 +35,19 @@ from .util import spread as _spread, cached_parquet
 _P = (1 << 31) - 1  # Mersenne prime 2^31-1 (see _hash_params)
 
 
-
-# Multi-consumer stage materialization mode:
-#   "auto" (default) — picked per-session by _resolve_mode:
-#       * a reliable checkpoint dir is configured  -> "reliable"
-#       * master is local[*] (single-JVM, no executor loss) -> "checkpoint"
-#       * real cluster master                       -> "persist"
-#   "checkpoint" — lazy localCheckpoint: fastest measured locally
-#       (persist's cached plan adds unified-memory pressure: cluster
-#       query 4.2s vs 6.5s at sf0.1), but truncated lineage means an
-#       executor loss after materialization fails the job. Never the
-#       auto choice off-local for exactly that reason.
-#   "persist" — recomputable on executor loss; the cluster-safe default.
-#   "reliable" — sparkContext checkpoint dir (HDFS/S3): survives
-#       executor loss AND truncates lineage; best for multi-hour runs.
-#   "none" — no materialization (each consumer recomputes the stage).
-MATERIALIZE_MODE = "auto"
-
-
 def _resolve_mode(spark) -> str:
-    if MATERIALIZE_MODE != "auto":
-        return MATERIALIZE_MODE
+    """How a multi-consumer stage materializes, picked per session:
+      - a reliable checkpoint dir is configured → ``"reliable"``
+        (sparkContext checkpoint dir, HDFS/S3): survives executor
+        loss AND truncates lineage; best for multi-hour runs;
+      - master is local[*] (single JVM, no executor loss) →
+        ``"checkpoint"``: localCheckpoint, fastest measured locally
+        (persist's cached plan adds unified-memory pressure: cluster
+        query 4.2s vs 6.5s at sf0.1), but truncated lineage means an
+        executor loss after materialization fails the job — never the
+        choice off-local for exactly that reason;
+      - real cluster master → ``"persist"``: recomputable on executor
+        loss."""
     sc = spark.sparkContext
     try:
         ckdir = sc.getCheckpointDir()
@@ -67,8 +62,6 @@ def _resolve_mode(spark) -> str:
 
 def _materialize(df: DataFrame) -> DataFrame:
     mode = _resolve_mode(df.sparkSession)
-    if mode == "none":
-        return df
     if mode == "persist":
         # intentionally not unpersisted here: the returned plan
         # references the persisted relation lazily, so eager cleanup
@@ -243,23 +236,36 @@ def shingle_hash32(s: Column) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
 
 
+def _shingle_base(df: DataFrame, text_col: str, id_col: str,
+                  shingle_k: int) -> DataFrame:
+    """(_id, _sh): each document's distinct word k-shingles — the one
+    relation every MinHash-LSH step starts from (signatures, the
+    exact-Jaccard verify, the persisted index's shingle table)."""
+    return _spread(df, id_col).select(
+        F.col(id_col).alias("_id"),
+        shingles_of(F.col(text_col), shingle_k).alias("_sh"))
+
+
 def minhash_signatures(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", num_hashes: int = 32,
-                       shingle_k: int = 3,
-                       keep_shingles: bool = False,
-                       base_df: DataFrame | None = None) -> DataFrame:
-    """(id, [shingles,] signature).
+                       shingle_k: int = 3) -> DataFrame:
+    """(_id, _sig): ``df``'s MinHash signatures (:func:`_signatures`)."""
+    return _signatures(_shingle_base(df, text_col, id_col, shingle_k),
+                       num_hashes)
+
+
+def _signatures(base: DataFrame, num_hashes: int) -> DataFrame:
+    """(_id, _sig) of a (_id, _sh) shingle base — the batch signature
+    kernel.
 
     Formulation: explode shingle hashes → num_hashes plain min()
     aggregates → array. All whole-stage-codegen (regular column
     expressions); map-side partial aggregation means the shuffle
     carries only num_hashes longs per document. Measured ~20× faster
     than per-row transform() lambdas (higher-order functions are
-    interpreted per element). ``base_df``: optional precomputed
-    (_id, _sh) shingle relation to share with other stages."""
-    base = base_df if base_df is not None else _spread(df, id_col).select(
-        F.col(id_col).alias("_id"),
-        shingles_of(F.col(text_col), shingle_k).alias("_sh"))
+    interpreted per element). Streams cannot run an aggregate; they
+    use the Arrow kernel :func:`_rowwise_banded_pandas`, which yields
+    the same values."""
     # hash ONCE in its own projection — inlined in each agg, md5
     # would recompute per HASH FUNCTION (no cross-aggregate CSE)
     exploded = (base
@@ -277,10 +283,7 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     arr = "array(" + ",".join(
         f"coalesce(min((_x * {a}L + {b}L) % {_P}L), {_P}L)"
         for a, b in _hash_params(num_hashes)) + ")"
-    sigs = exploded.groupBy("_id").agg(F.expr(arr).alias("_sig"))
-    if keep_shingles:
-        return base.join(sigs, on="_id", how="inner")
-    return sigs
+    return exploded.groupBy("_id").agg(F.expr(arr).alias("_sig"))
 
 
 def _cap_buckets(bucketed: DataFrame, keys: list[str],
@@ -328,8 +331,10 @@ def _split_hot_clusters(df: DataFrame, cid_col: str, id_col: str,
 
 
 def _check_bands(bands: int, num_hashes: int) -> int:
-    """rows-per-band, refusing degenerate banding (see
-    minhash_lsh_pairs for the r05 rationale)."""
+    """rows-per-band, refusing degenerate banding: bands > num_hashes
+    degenerates to rows_per_band=0 (every doc collides, _cap_buckets
+    drops everything → silent ZERO pairs, r05 review); non-divisible
+    values silently ignore trailing hashes."""
     if bands > num_hashes or num_hashes % bands != 0:
         raise ValueError(
             f"bands ({bands}) must divide num_hashes ({num_hashes}); "
@@ -338,13 +343,13 @@ def _check_bands(bands: int, num_hashes: int) -> int:
     return num_hashes // bands
 
 
-def _band_buckets(sigs: DataFrame, bands: int,
-                  rows_per_band: int) -> DataFrame:
-    """(_id, _band, _bucket): one row per (doc, band) — the portable
-    md5-prefix band-bucket construction shared by the self-join and
-    cross-corpus LSH pair generators (keeps the two reproducing the
-    SAME buckets, so an incremental ingest finds exactly the pairs a
-    full re-run would)."""
+def _band_buckets(sigs: DataFrame, bands: int, rows_per_band: int,
+                  keep: tuple[str, ...] = ()) -> DataFrame:
+    """(_id, *keep, _band, _bucket): one row per (doc, band) — the
+    portable md5-prefix band-bucket construction of every batch LSH
+    path (self-join, cross-corpus, persisted index, first-seen), so an
+    incremental ingest finds exactly the pairs a full re-run would.
+    ``keep`` names ``sigs`` columns to carry along (``_sig``)."""
     # one SQL-string expression for the whole band array (r10: the
     # per-band Column-builder loop was ~0.6 s of py4j per plan build)
     band_exprs = []
@@ -356,9 +361,119 @@ def _band_buckets(sigs: DataFrame, bands: int,
         band_exprs.append(
             f"cast(conv(substring(md5({piece}), 1, 15), 16, 10) as bigint)")
     return sigs.selectExpr(
-        "_id",
+        "_id", *keep,
         "posexplode(array(" + ",".join(band_exprs)
         + ")) as (_band, _bucket)")
+
+
+def _lsh_buckets(base: DataFrame, num_hashes: int, bands: int,
+                 keep: tuple[str, ...] = ()) -> DataFrame:
+    """(_id, *keep, _band, _bucket) of a (_id, _sh) shingle base:
+    aggregated signatures, then band buckets."""
+    rows_per_band = _check_bands(bands, num_hashes)
+    return _band_buckets(_signatures(base, num_hashes), bands,
+                         rows_per_band, keep)
+
+
+def _bucket_pairs(left: DataFrame, right: DataFrame,
+                  self_join: bool = False) -> DataFrame:
+    """(id_a, id_b) candidates: a ``left`` and a ``right`` document
+    sharing a (band, bucket), once however many bands they share.
+    ``self_join`` keeps only id_a < id_b. Only (id, band, bucket)
+    travels through this shuffle — the shingle arrays stay out."""
+    on = [F.col("l._band") == F.col("r._band"),
+          F.col("l._bucket") == F.col("r._bucket")]
+    if self_join:
+        on.append(F.col("l._id") < F.col("r._id"))
+    return (left.alias("l").join(right.alias("r"), on=on, how="inner")
+            .select(F.col("l._id").alias("id_a"),
+                    F.col("r._id").alias("id_b"))
+            .dropDuplicates(["id_a", "id_b"]))
+
+
+def _jaccard(sh_a: str, sh_b: str) -> Column:
+    """Exact Jaccard of two shingle-set columns, rounded to 6 places
+    (0.0 when both are empty)."""
+    inter = F.size(F.array_intersect(sh_a, sh_b)).cast("double")
+    union = F.size(F.array_union(sh_a, sh_b)).cast("double")
+    return F.round(F.when(union > 0, inter / union).otherwise(F.lit(0.0)),
+                   6)
+
+
+def _verify_jaccard_pairs(cand: DataFrame, base: DataFrame,
+                          threshold: float,
+                          base_b: DataFrame | None = None) -> DataFrame:
+    """Exact-Jaccard verify of (id_a, id_b) candidates against the
+    (_id, _sh) shingle relation — shared by the MinHash-LSH and
+    prefix-filter plans so a fix to the verify math lands in both.
+    ``base_b``: separate shingle relation for the id_b side (the
+    cross-corpus generator — sides may reuse id values)."""
+    out = (cand
+           .join(base.select(F.col("_id").alias("id_a"),
+                             F.col("_sh").alias("sh_a")), on="id_a")
+           .join((base_b if base_b is not None else base)
+                 .select(F.col("_id").alias("id_b"),
+                         F.col("_sh").alias("sh_b")), on="id_b"))
+    return (out.select("id_a", "id_b",
+                       _jaccard("sh_a", "sh_b").alias("jaccard"))
+            .filter(F.col("jaccard") >= threshold))
+
+
+_BUCKET_KEYS = ["_band", "_bucket"]
+
+
+def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
+                      id_col: str = "doc_id", num_hashes: int = 32,
+                      bands: int = 8, shingle_k: int = 3,
+                      threshold: float = 0.5,
+                      max_bucket: int | None = 1024) -> DataFrame:
+    """Near-duplicate pairs via MinHash banding + exact Jaccard verify.
+
+    signature (map-side partial aggregate) → explode bands → bucket
+    self-join (the only shuffle) → exact Jaccard on candidates →
+    filter ≥ threshold. Returns (id_a, id_b, jaccard) with
+    id_a < id_b. ``max_bucket`` bounds the per-bucket quadratic
+    blowup (see ``_cap_buckets``).
+    """
+    # NOT materialized (r03): the shared-shingle checkpoint was the
+    # one r02 bench regression (2.14 -> 2.53 s) — minhash's verify
+    # join touches only the tiny candidate subset, so re-running the
+    # shingle regex for it costs less than writing the full shingle
+    # relation to block storage. ngram_jaccard keeps its _materialize
+    # (5 consumers over the full relation, measured 3.2 -> 1.8 s).
+    base = _shingle_base(df, text_col, id_col, shingle_k)
+    # r10: the bucket relation is materialized ONCE (narrow: id + two
+    # ints per band row — carrying _sig here would write 32 longs per
+    # band row). Its consumers — the hot-bucket stats, the cap anti-
+    # join, and BOTH sides of the candidate self-join — previously
+    # each re-ran the scan → shingle regex → 32-min signature
+    # aggregation subtree (the broadcast join gives ReuseExchange
+    # nothing to dedupe): 6 corpus scans in the plan, now 3 (one
+    # here, two in the candidate-only verify, which the r03
+    # measurement showed is cheaper left unmaterialized).
+    bucketed = _lsh_buckets(base, num_hashes,
+                            bands).localCheckpoint(eager=False)
+    banded = _cap_buckets(bucketed, _BUCKET_KEYS, max_bucket)
+    # exact-Jaccard verification only for candidate pairs, on the
+    # shingle strings themselves (candidates are a tiny subset, so
+    # the string arrays in this join are cheap; hash the shingles
+    # first if verify-shuffle volume ever matters)
+    return _verify_jaccard_pairs(
+        _bucket_pairs(banded, banded, self_join=True), base, threshold)
+
+
+def _cross_pairs(base_n: DataFrame, banded_c: DataFrame,
+                 base_c: DataFrame, num_hashes: int, bands: int,
+                 threshold: float) -> DataFrame:
+    """(id_new, id_old, jaccard) of a new batch's (_id, _sh) shingle
+    base against a corpus's (capped) band buckets and shingle sets —
+    the fused and the index-served cross generators differ only in
+    where the corpus side comes from."""
+    cand = _bucket_pairs(_lsh_buckets(base_n, num_hashes, bands),
+                         banded_c)
+    out = _verify_jaccard_pairs(cand, base_n, threshold, base_b=base_c)
+    return (out.withColumnRenamed("id_a", "id_new")
+            .withColumnRenamed("id_b", "id_old"))
 
 
 def minhash_lsh_pairs_cross(new: DataFrame, corpus: DataFrame,
@@ -384,18 +499,7 @@ def minhash_lsh_pairs_cross(new: DataFrame, corpus: DataFrame,
     ``max_bucket`` caps the CORPUS side's hot buckets (boilerplate
     buckets are a corpus property; the new batch is typically small).
     """
-    rows_per_band = _check_bands(bands, num_hashes)
-    base_n = _spread(new, id_col).select(
-        F.col(id_col).alias("_id"),
-        shingles_of(F.col(text_col), shingle_k).alias("_sh"))
-    base_c = _spread(corpus, id_col).select(
-        F.col(id_col).alias("_id"),
-        shingles_of(F.col(text_col), shingle_k).alias("_sh"))
-    sig_n = minhash_signatures(new, text_col, id_col, num_hashes,
-                               shingle_k, base_df=base_n)
-    sig_c = minhash_signatures(corpus, text_col, id_col, num_hashes,
-                               shingle_k, base_df=base_c)
-    banded_n = _band_buckets(sig_n, bands, rows_per_band)
+    base_c = _shingle_base(corpus, text_col, id_col, shingle_k)
     # NOT checkpointed — re-decided AGAIN at sf1 this round (r11,
     # VERDICT item 5) and the r10 lazy call stands: a 2 MB-gated
     # non-eager localCheckpoint of this relation read 2.3-2.9 s vs
@@ -406,19 +510,60 @@ def minhash_lsh_pairs_cross(new: DataFrame, corpus: DataFrame,
     # subtree rides cores the materialization barrier leaves idle.
     # Plan diff evidence for the tried gate: 5 parquet scans → 3 +
     # 2 checkpoint reads, 6 → 4 Exchanges — fewer scans, more wall.
-    banded_c = _cap_buckets(_band_buckets(sig_c, bands, rows_per_band),
-                            ["_band", "_bucket"], max_bucket)
-    cand = (banded_n.alias("l").join(
-                banded_c.alias("r"),
-                on=[F.col("l._band") == F.col("r._band"),
-                    F.col("l._bucket") == F.col("r._bucket")],
-                how="inner")
-            .select(F.col("l._id").alias("id_a"),
-                    F.col("r._id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"]))
-    out = _verify_jaccard_pairs(cand, base_n, threshold, base_b=base_c)
-    return (out.withColumnRenamed("id_a", "id_new")
-            .withColumnRenamed("id_b", "id_old"))
+    banded_c = _cap_buckets(_lsh_buckets(base_c, num_hashes, bands),
+                            _BUCKET_KEYS, max_bucket)
+    return _cross_pairs(_shingle_base(new, text_col, id_col, shingle_k),
+                        banded_c, base_c, num_hashes, bands, threshold)
+
+
+_LSH_PARAMS = ("num_hashes", "bands", "shingle_k", "max_bucket",
+               "id_col", "text_col")
+
+
+def _lsh_meta(path: str, verify: bool = False) -> dict:
+    """The persisted LSH index's sidecar. ``verify`` refuses an index
+    whose data files no longer hold the row counts the sidecar was
+    written for (parquet footers only, no data read)."""
+    with open(f"{path}/_lsh_meta.json") as fh:
+        meta = json.load(fh)
+    if verify:
+        from .similarity import _ivf_footer_stats
+        nb, _ = _ivf_footer_stats(f"{path}/buckets")
+        ns, _ = _ivf_footer_stats(f"{path}/shingles")
+        if nb is not None and (nb != meta["n_bucket_rows"]
+                               or ns != meta["n_shingle_rows"]):
+            raise ValueError(
+                f"stale index at {path}: data files hold {nb} bucket "
+                f"/ {ns} shingle rows but the sidecar was written for "
+                f"{meta['n_bucket_rows']} / {meta['n_shingle_rows']} "
+                f"— rebuild with lsh_write_index")
+    return meta
+
+
+def _lsh_write_meta(path: str, params: dict) -> None:
+    """Write/refresh the LSH index sidecar: parameters + row-count
+    fingerprints read from the parquet footers just written."""
+    from .similarity import _ivf_footer_stats
+    n_buckets, _ = _ivf_footer_stats(f"{path}/buckets")
+    n_shingles, _ = _ivf_footer_stats(f"{path}/shingles")
+    with open(f"{path}/_lsh_meta.json", "w") as fh:
+        json.dump({**{k: params[k] for k in _LSH_PARAMS},
+                   "n_bucket_rows": n_buckets,
+                   "n_shingle_rows": n_shingles}, fh)
+
+
+def _lsh_write(df: DataFrame, path: str, mode: str,
+               params: dict) -> None:
+    """Write ``df``'s band buckets and shingle sets into the index
+    tables under ``path`` (parquet write ``mode``), then the sidecar."""
+    base = _shingle_base(df, params["text_col"], params["id_col"],
+                         params["shingle_k"])
+    banded = _lsh_buckets(base, params["num_hashes"], params["bands"])
+    (banded.select("_band", "_bucket", "_id")
+     .write.mode(mode).partitionBy("_band")
+     .parquet(f"{path}/buckets"))
+    base.write.mode(mode).parquet(f"{path}/shingles")
+    _lsh_write_meta(path, params)
 
 
 def lsh_write_index(df: DataFrame, path: str, text_col: str = "text",
@@ -456,34 +601,9 @@ def lsh_write_index(df: DataFrame, path: str, text_col: str = "text",
     Buckets use the same portable md5-prefix construction as the
     self-join (shared :func:`_band_buckets`), so index-served ingest
     finds exactly the cross pairs a full re-run would."""
-    import json as _json
-    rows_per_band = _check_bands(bands, num_hashes)
-    base = _spread(df, id_col).select(
-        F.col(id_col).alias("_id"),
-        shingles_of(F.col(text_col), shingle_k).alias("_sh"))
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes,
-                              shingle_k, base_df=base)
-    banded = _band_buckets(sigs, bands, rows_per_band)
-    (banded.select("_band", "_bucket", "_id")
-     .write.mode("overwrite").partitionBy("_band")
-     .parquet(f"{path}/buckets"))
-    base.write.mode("overwrite").parquet(f"{path}/shingles")
-    _lsh_write_meta(path, {"num_hashes": num_hashes, "bands": bands,
-                           "shingle_k": shingle_k,
-                           "max_bucket": max_bucket,
-                           "id_col": id_col, "text_col": text_col})
-
-
-def _lsh_write_meta(path: str, params: dict) -> None:
-    """Write/refresh the LSH index sidecar: parameters + row-count
-    fingerprints read from the parquet footers just written."""
-    import json as _json
-    from .similarity import _ivf_footer_stats
-    n_buckets, _ = _ivf_footer_stats(f"{path}/buckets")
-    n_shingles, _ = _ivf_footer_stats(f"{path}/shingles")
-    with open(f"{path}/_lsh_meta.json", "w") as fh:
-        _json.dump({**params, "n_bucket_rows": n_buckets,
-                    "n_shingle_rows": n_shingles}, fh)
+    _lsh_write(df, path, "overwrite", {
+        "num_hashes": num_hashes, "bands": bands, "shingle_k": shingle_k,
+        "max_bucket": max_bucket, "id_col": id_col, "text_col": text_col})
 
 
 def lsh_append_index(df: DataFrame, path: str) -> None:
@@ -501,25 +621,7 @@ def lsh_append_index(df: DataFrame, path: str) -> None:
     is applied at query time from full bucket counts. The caller
     owns id uniqueness across appends (duplicate ids would verify
     against themselves at jaccard 1.0, like any re-ingested row)."""
-    import json as _json
-    with open(f"{path}/_lsh_meta.json") as fh:
-        meta = _json.load(fh)
-    rows_per_band = _check_bands(meta["bands"], meta["num_hashes"])
-    base = _spread(df, meta["id_col"]).select(
-        F.col(meta["id_col"]).alias("_id"),
-        shingles_of(F.col(meta["text_col"]),
-                    meta["shingle_k"]).alias("_sh"))
-    sigs = minhash_signatures(df, meta["text_col"], meta["id_col"],
-                              meta["num_hashes"], meta["shingle_k"],
-                              base_df=base)
-    banded = _band_buckets(sigs, meta["bands"], rows_per_band)
-    (banded.select("_band", "_bucket", "_id")
-     .write.mode("append").partitionBy("_band")
-     .parquet(f"{path}/buckets"))
-    base.write.mode("append").parquet(f"{path}/shingles")
-    _lsh_write_meta(path, {k: meta[k] for k in
-                           ("num_hashes", "bands", "shingle_k",
-                            "max_bucket", "id_col", "text_col")})
+    _lsh_write(df, path, "append", _lsh_meta(path))
 
 
 def lsh_compact_index(spark, path: str,
@@ -537,9 +639,7 @@ def lsh_compact_index(spark, path: str,
     it can run any time between ingest batches."""
     import os as _os
     import shutil as _shutil
-    import json as _json
-    with open(f"{path}/_lsh_meta.json") as fh:
-        meta = _json.load(fh)
+    meta = _lsh_meta(path)
     n = max(1, int(files_per_band))
     b = cached_parquet(spark, f"{path}/buckets")
     # n distinct keys per band: each band directory gets at most n
@@ -555,9 +655,18 @@ def lsh_compact_index(spark, path: str,
     for t in ("buckets", "shingles"):
         _shutil.rmtree(f"{path}/{t}")
         _os.rename(f"{path}/{t}_compact", f"{path}/{t}")
-    _lsh_write_meta(path, {k: meta[k] for k in
-                           ("num_hashes", "bands", "shingle_k",
-                            "max_bucket", "id_col", "text_col")})
+    _lsh_write_meta(path, meta)
+
+
+def _index_buckets(spark, path: str, meta: dict) -> DataFrame:
+    """The persisted index's bucket table, hot buckets capped at query
+    time from FULL bucket counts — identical to the fused path's
+    corpus-side _cap_buckets, and append-safe (a bucket crossing the
+    cap via lsh_append_index drops out exactly as a fresh rebuild
+    would drop it); the extra narrow aggregation rides the bucket-
+    table scan the join needs anyway."""
+    return _cap_buckets(cached_parquet(spark, f"{path}/buckets"),
+                        _BUCKET_KEYS, meta["max_bucket"])
 
 
 def minhash_cross_index(spark, path: str, new: DataFrame,
@@ -579,50 +688,12 @@ def minhash_cross_index(spark, path: str, new: DataFrame,
         shingle table is probed, never fully shuffled).
     LSH parameters come from the index sidecar, so a batch can never
     be hashed with different parameters than the corpus was."""
-    import json as _json
-    with open(f"{path}/_lsh_meta.json") as fh:
-        meta = _json.load(fh)
-    if verify:
-        from .similarity import _ivf_footer_stats
-        nb, _ = _ivf_footer_stats(f"{path}/buckets")
-        ns, _ = _ivf_footer_stats(f"{path}/shingles")
-        if nb is not None and (nb != meta["n_bucket_rows"]
-                               or ns != meta["n_shingle_rows"]):
-            raise ValueError(
-                f"stale index at {path}: data files hold {nb} bucket "
-                f"/ {ns} shingle rows but the sidecar was written for "
-                f"{meta['n_bucket_rows']} / {meta['n_shingle_rows']} "
-                f"— rebuild with lsh_write_index")
-    text_col = text_col or meta["text_col"]
-    id_col = id_col or meta["id_col"]
-    num_hashes, bands = meta["num_hashes"], meta["bands"]
-    rows_per_band = _check_bands(bands, num_hashes)
-    base_n = _spread(new, id_col).select(
-        F.col(id_col).alias("_id"),
-        shingles_of(F.col(text_col), meta["shingle_k"]).alias("_sh"))
-    sig_n = minhash_signatures(new, text_col, id_col, num_hashes,
-                               meta["shingle_k"], base_df=base_n)
-    banded_n = _band_buckets(sig_n, bands, rows_per_band)
-    # hot-bucket capping at query time from FULL bucket counts —
-    # identical to the fused path's corpus-side _cap_buckets, and
-    # append-safe (a bucket crossing the cap via lsh_append_index
-    # drops out exactly as a fresh rebuild would drop it); the extra
-    # narrow aggregation rides the bucket-table scan the join needs
-    # anyway
-    banded_c = _cap_buckets(cached_parquet(spark, f"{path}/buckets"),
-                            ["_band", "_bucket"], meta["max_bucket"])
-    cand = (banded_n.alias("l").join(
-                banded_c.alias("r"),
-                on=[F.col("l._band") == F.col("r._band"),
-                    F.col("l._bucket") == F.col("r._bucket")],
-                how="inner")
-            .select(F.col("l._id").alias("id_a"),
-                    F.col("r._id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"]))
-    base_c = cached_parquet(spark, f"{path}/shingles")
-    out = _verify_jaccard_pairs(cand, base_n, threshold, base_b=base_c)
-    return (out.withColumnRenamed("id_a", "id_new")
-            .withColumnRenamed("id_b", "id_old"))
+    meta = _lsh_meta(path, verify)
+    base_n = _shingle_base(new, text_col or meta["text_col"],
+                           id_col or meta["id_col"], meta["shingle_k"])
+    return _cross_pairs(base_n, _index_buckets(spark, path, meta),
+                        cached_parquet(spark, f"{path}/shingles"),
+                        meta["num_hashes"], meta["bands"], threshold)
 
 
 def minhash_cross_index_stream(spark, path: str, df: DataFrame,
@@ -673,26 +744,12 @@ def minhash_cross_index_stream(spark, path: str, df: DataFrame,
     if not df.isStreaming:
         return minhash_cross_index(spark, path, df, text_col, id_col,
                                    threshold)
-    import json as _json
-    with open(f"{path}/_lsh_meta.json") as fh:
-        meta = _json.load(fh)
-    from .similarity import _ivf_footer_stats
-    nb, _ = _ivf_footer_stats(f"{path}/buckets")
-    ns, _ = _ivf_footer_stats(f"{path}/shingles")
-    if nb is not None and (nb != meta["n_bucket_rows"]
-                           or ns != meta["n_shingle_rows"]):
-        raise ValueError(
-            f"stale index at {path}: data files hold {nb} bucket / "
-            f"{ns} shingle rows but the sidecar was written for "
-            f"{meta['n_bucket_rows']} / {meta['n_shingle_rows']} — "
-            f"rebuild with lsh_write_index")
-    text_col = text_col or meta["text_col"]
-    id_col = id_col or meta["id_col"]
+    meta = _lsh_meta(path, verify=True)
     banded_n = _rowwise_banded_pandas(
-        df, text_col, id_col, meta["num_hashes"], meta["bands"],
-        meta["shingle_k"], keep_shingles=True)
-    banded_c = _cap_buckets(cached_parquet(spark, f"{path}/buckets"),
-                            ["_band", "_bucket"], meta["max_bucket"])
+        df, text_col or meta["text_col"], id_col or meta["id_col"],
+        meta["num_hashes"], meta["bands"], meta["shingle_k"],
+        keep_shingles=True)
+    banded_c = _index_buckets(spark, path, meta)
     base_c = cached_parquet(spark, f"{path}/shingles")
     if cache_static:
         from pyspark import StorageLevel
@@ -710,90 +767,8 @@ def minhash_cross_index_stream(spark, path: str, df: DataFrame,
     out = cand.join(base_c.select(F.col("_id").alias("id_old"),
                                   F.col("_sh").alias("sh_b")),
                     on="id_old")
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
     return (out.select("id_new", "id_old",
-                       F.round(jac, 6).alias("jaccard"), "band")
-            .filter(F.col("jaccard") >= threshold))
-
-
-def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", num_hashes: int = 32,
-                      bands: int = 8, shingle_k: int = 3,
-                      threshold: float = 0.5,
-                      max_bucket: int | None = 1024) -> DataFrame:
-    """Near-duplicate pairs via MinHash banding + exact Jaccard verify.
-
-    signature (map-only) → explode bands → bucket self-join (the only
-    shuffle) → exact Jaccard on candidates → filter ≥ threshold.
-    Returns (id_a, id_b, jaccard) with id_a < id_b.
-    ``max_bucket`` bounds the per-bucket quadratic blowup
-    (see ``_cap_buckets``).
-    """
-    # _check_bands: bands > num_hashes degenerates to rows_per_band=0
-    # (every doc collides, _cap_buckets drops everything → silent
-    # ZERO pairs, r05 review); non-divisible values silently ignore
-    # trailing hashes — refuse both.
-    rows_per_band = _check_bands(bands, num_hashes)
-    # NOT materialized (r03): the shared-shingle checkpoint was the
-    # one r02 bench regression (2.14 -> 2.53 s) — minhash's verify
-    # join touches only the tiny candidate subset, so re-running the
-    # shingle regex for it costs less than writing the full shingle
-    # relation to block storage. ngram_jaccard keeps its _materialize
-    # (5 consumers over the full relation, measured 3.2 -> 1.8 s).
-    base = _spread(df, id_col).select(
-        F.col(id_col).alias("_id"),
-        shingles_of(F.col(text_col), shingle_k).alias("_sh"))
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_k,
-                              base_df=base)
-    # band buckets (_band_buckets): only (id, band, bucket) travels
-    # through the self-join shuffle — the shingle arrays stay out of
-    # it. r10: the bucket relation is materialized ONCE (narrow:
-    # id + two ints per band row). Its consumers — the hot-bucket
-    # stats, the cap anti-join, and BOTH sides of the candidate
-    # self-join — previously each re-ran the scan → shingle regex →
-    # 32-min signature aggregation subtree (the broadcast join gives
-    # ReuseExchange nothing to dedupe): 6 corpus scans in the plan,
-    # now 3 (one here, two in the candidate-only verify, which the
-    # r03 measurement showed is cheaper left unmaterialized).
-    bucketed = _band_buckets(sigs, bands,
-                             rows_per_band).localCheckpoint(eager=False)
-    banded = _cap_buckets(bucketed, ["_band", "_bucket"], max_bucket)
-    cand = (banded.alias("l").join(
-                banded.alias("r"),
-                on=[F.col("l._band") == F.col("r._band"),
-                    F.col("l._bucket") == F.col("r._bucket"),
-                    F.col("l._id") < F.col("r._id")],
-                how="inner")
-            .select(F.col("l._id").alias("id_a"),
-                    F.col("r._id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"]))
-    # exact-Jaccard verification only for candidate pairs, on the
-    # shingle strings themselves (candidates are a tiny subset, so
-    # the string arrays in this join are cheap; hash the shingles
-    # first if verify-shuffle volume ever matters)
-    return _verify_jaccard_pairs(cand, base, threshold)
-
-
-def _verify_jaccard_pairs(cand: DataFrame, base: DataFrame,
-                          threshold: float,
-                          base_b: DataFrame | None = None) -> DataFrame:
-    """Exact-Jaccard verify of (id_a, id_b) candidates against the
-    (_id, _sh) shingle relation — shared by the MinHash-LSH and
-    prefix-filter plans so a fix to the verify math lands in both.
-    ``base_b``: separate shingle relation for the id_b side (the
-    cross-corpus generator — sides may reuse id values)."""
-    out = (cand
-           .join(base.select(F.col("_id").alias("id_a"),
-                             F.col("_sh").alias("sh_a")), on="id_a")
-           .join((base_b if base_b is not None else base)
-                 .select(F.col("_id").alias("id_b"),
-                         F.col("_sh").alias("sh_b")), on="id_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return (out.select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
+                       _jaccard("sh_a", "sh_b").alias("jaccard"), "band")
             .filter(F.col("jaccard") >= threshold))
 
 
@@ -1155,9 +1130,7 @@ def contamination_scores(df: DataFrame, bench_df: DataFrame,
     small, shuffle-join on the shingle otherwise); document shingles
     explode map-side; one left-semi-style join + per-doc count. No
     n² stage; shuffle ∝ total shingles."""
-    doc_sh = _spread(df, id_col).select(
-        F.col(id_col).alias("_id"),
-        shingles_of(F.col(text_col), k).alias("_sh"))
+    doc_sh = _shingle_base(df, text_col, id_col, k)
     sizes = doc_sh.select("_id", F.size("_sh").alias("n_shingles"))
     exploded = doc_sh.select("_id", F.explode("_sh").alias("_s"))
     bench_sh = (bench_df
@@ -1367,9 +1340,7 @@ def bloom_decontaminate(df: DataFrame, bench_df: DataFrame | None,
     if n_hashes > 4:
         raise ValueError("n_hashes > 4 not supported (one md5 digest "
                          "yields four 32-bit probe slices)")
-    doc_sh = _spread(df, id_col).select(
-        F.col(id_col).alias("_id"),
-        shingles_of(F.col(text_col), k).alias("_sh"))
+    doc_sh = _shingle_base(df, text_col, id_col, k)
     if df.isStreaming:
         # TRULY map-only formulation (no aggregation — an
         # unwatermarked streaming groupBy can't run append):
@@ -1856,32 +1827,19 @@ def embedding_neardup_pairs(df: DataFrame, vec_col: str = "embedding",
 # First-seen near-dup detection on ingest: bounded state (one holder
 # signature per LSH bucket), usable on unbounded streams.
 
-def _band_col_exprs(bands: int, rows_per_band: int) -> list[Column]:
-    """The band-bucket hash expressions over a ``_sig`` column —
-    the SAME portable construction as :func:`_band_buckets` (kept in
-    one place so the batch self-join, the cross-corpus generator and
-    the streaming detector all land in identical buckets)."""
-    cols = []
-    for b in range(bands):
-        piece = F.concat_ws(",", F.lit(str(b)), *[
-            F.element_at(F.col("_sig"), b * rows_per_band + i + 1)
-             .cast("string")
-            for i in range(rows_per_band)])
-        cols.append(token_hash60(piece))
-    return cols
-
-
 def _rowwise_banded_pandas(df: DataFrame, text_col: str, id_col: str,
                            num_hashes: int, bands: int,
                            shingle_k: int,
                            keep_shingles: bool = False) -> DataFrame:
     """(_id, _sig, _band, _bucket[, _sh]) via an Arrow ``mapInPandas``
-    pass — byte-identical values to :func:`_rowwise_banded` (pinned by
-    test) but ~two orders of magnitude faster per document: the
-    Catalyst HOF formulation interprets 32 transform lambdas per row
-    (~ms/doc), while hashlib md5 + one numpy (num_hashes × n_shingles)
-    min is ~0.1 ms/doc. Aggregation-free, so it applies to unbounded
-    streams; this is the path :func:`streaming_neardup_pairs` uses.
+    pass — the streaming signature kernel: values and dtypes equal to
+    the batch :func:`_signatures` + :func:`_band_buckets` path (pinned
+    by test), so a stream lands in the buckets a batch re-run would.
+    Aggregation-free (hashlib md5 + one numpy (num_hashes ×
+    n_shingles) min per row), so it applies to unbounded streams; this
+    is the path :func:`streaming_neardup_pairs` and
+    :func:`minhash_cross_index_stream` use. On batch input the
+    aggregate is faster, so batch paths keep it.
     ``keep_shingles`` rides the shingle-string SET out alongside (the
     same set :func:`shingles_of` computes, order irrelevant to the
     set-based Jaccard) — the index-served streaming ingest needs it
@@ -1949,38 +1907,6 @@ def _rowwise_banded_pandas(df: DataFrame, text_col: str, id_col: str,
     return (df.select(F.col(id_col).cast("long").alias(id_col),
                       text_col)
             .mapInPandas(emit, out_t))
-
-
-def _rowwise_banded(df: DataFrame, text_col: str, id_col: str,
-                    num_hashes: int, bands: int,
-                    shingle_k: int) -> DataFrame:
-    """(_id, _sig, _band, _bucket) computed entirely per-row (no
-    aggregation), so it applies to unbounded streams. Values are
-    IDENTICAL to the aggregated :func:`minhash_signatures` +
-    :func:`_band_buckets` path (pinned by test). The shingle-hash
-    array materializes as its own column first — 32 higher-order
-    transforms referencing an expression would recompute the md5 per
-    hash function; referencing a column evaluates it once."""
-    rows_per_band = _check_bands(bands, num_hashes)
-    xs = _spread(df, id_col).select(
-        F.col(id_col).cast("long").alias("_id"),
-        F.transform(shingles_of(F.col(text_col), shingle_k),
-                    lambda s: shingle_hash32(s) % F.lit(_P)).alias("_xs"))
-    def _perm(a: int, b: int):
-        # PySpark derives HOF arity from the lambda signature, so
-        # captures must close over a/b (default-arg capture would
-        # read as a 3-arg lambda)
-        return lambda x: (x * F.lit(a) + F.lit(b)) % F.lit(_P)
-
-    sig_cols = [
-        F.coalesce(F.array_min(F.transform(F.col("_xs"), _perm(a, b))),
-                   F.lit(_P))
-        for a, b in _hash_params(num_hashes)]
-    sigs = xs.select("_id", F.array(*sig_cols).alias("_sig"))
-    return sigs.select(
-        "_id", "_sig",
-        F.posexplode(F.array(*_band_col_exprs(bands, rows_per_band)))
-        .alias("_band", "_bucket"))
 
 
 def streaming_neardup_pairs(df: DataFrame, text_col: str = "text",
@@ -2105,13 +2031,8 @@ def neardup_pairs_first_seen(df: DataFrame, text_col: str = "text",
     compared against it by signature agreement. Uses the aggregated
     (whole-stage-codegen) signature path; the zip_with agreement runs
     only on bucket-mates, a small subset. DuckDB-oracle-checkable."""
-    rows_per_band = _check_bands(bands, num_hashes)
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes,
-                              shingle_k)
-    banded = sigs.select(
-        "_id", "_sig",
-        F.posexplode(F.array(*_band_col_exprs(bands, rows_per_band)))
-        .alias("_band", "_bucket"))
+    banded = _lsh_buckets(_shingle_base(df, text_col, id_col, shingle_k),
+                          num_hashes, bands, keep=("_sig",))
     # holder id AND its signature via one bucket window (r10): the
     # former groupBy+double-join evaluated the scan→shingle→signature
     # subtree three times (banded on both join sides + the sigs

@@ -74,13 +74,7 @@ class PigEngine:
         ops = self.parse(script) if _ops is None else _ops
         self.executor.script_hash = hashlib.md5(script.encode()).hexdigest()
         counts = R.consumer_counts(ops)
-        if self.executor.options.get("auto_cache"):
-            # persist shared subplans — aliases consumed by 2+
-            # downstream operators — so the DAG fan-out doesn't
-            # recompute them per consumer
-            self.executor.shared_aliases = {
-                a for a, n in counts.items() if n >= 2}
-        elif self.executor.options.get("auto_cache") is not False:
+        if self.executor.options.get("auto_cache") is not False:
             # default (r10): shared REDUCTION-POINT subplans (aggregate/
             # distinct outputs with 2+ consumers) over enough input
             # bytes are pinned with a non-eager localCheckpoint so each

@@ -428,8 +428,8 @@ class MaterializationManager:
                 if isinstance(pre, DataFrame) and (
                         pre.storageLevel.useMemory
                         or pre.storageLevel.useDisk):
-                    # already persisted (auto_cache shared alias or a
-                    # run_all session splice): a count() here times
+                    # already persisted (a run_all session splice or
+                    # a shared-prefix persist): a count() here times
                     # the CACHE, not the recompute — recording that
                     # near-zero cost would permanently (has_measurement
                     # is sticky) exclude exactly the subplans most

@@ -556,8 +556,6 @@ class Executor:
         # re-used engine doesn't re-count previous scripts' signatures
         self.bound_this_run: set[str] = set()
         self.terminal_aliases: set[str] = set()  # consumed by nothing
-        # aliases consumed 2+ times (set by engine when auto_cache on)
-        self.shared_aliases: set[str] = set()
         # cross-script shared-subplan execution (ref PlanMerger.scala,
         # invoked Piglet.scala:222): PigEngine.run_all pre-computes the
         # signatures appearing in 2+ scripts into share_sigs; the first
@@ -597,17 +595,7 @@ class Executor:
             df = rel.materialize()
             self.env[alias] = df
             rel = df
-        if alias in self.shared_aliases and alias not in self._cached:
-            # shared subplan → persist once instead of recomputing per
-            # consumer (LOADs excluded: the scan is already shared via
-            # the file cache and persisting raw inputs wastes memory)
-            if not isinstance(rel, DataFrame) or rel.isStreaming or \
-                    alias in self._loads:
-                return rel
-            rel = rel.persist(StorageLevel.MEMORY_AND_DISK)
-            self.env[alias] = rel
-            self._cached.add(alias)
-        elif alias in self.ckpt_aliases and alias not in self._cached:
+        if alias in self.ckpt_aliases and alias not in self._cached:
             # default sharing path (engine.run → checkpoint_candidates):
             # pin a multi-consumer shuffle-bearing subplan with a NON-
             # EAGER localCheckpoint — materialized by the first action,
@@ -647,8 +635,15 @@ class Executor:
         return self.env
 
     def execute_op(self, op: A.Op) -> None:
+        # a rebound alias is neither pinned nor a raw scan until this
+        # op says so (a long-lived engine re-runs scripts that rebind
+        # the same aliases); the splices and op_load re-mark it below
+        out = getattr(op, "out", None)
+        self._cached.discard(out)
+        self._loads.discard(out)
         if self.share_sigs and self._try_session_splice(op):
             self._note_rebind(op, spliced=True)
+            self._cached.add(op.out)  # already persisted — don't re-persist
             return
         if self.mm is not None and self._try_mm_splice(op):
             self._note_rebind(op, spliced=True)
@@ -736,7 +731,6 @@ class Executor:
         self.env[op.out] = cached
         self.lineage[op.out] = sig
         self.bound_this_run.add(op.out)
-        self._cached.add(op.out)  # already persisted — don't re-persist
         return True
 
     def _maybe_share(self, alias: str) -> None:

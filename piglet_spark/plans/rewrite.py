@@ -188,8 +188,8 @@ def consumer_counts(ops: list[A.Op]) -> dict[str, int]:
         ins = list(op.inputs)
         if isinstance(op, A.SqlStmt):
             # SQL consumes every alias its query text references
-            # (no declared input list) — count them so auto_cache
-            # persists shared subplans consumed via SQL too (r03)
+            # (no declared input list) — count them so shared
+            # subplans consumed via SQL count as shared too (r03)
             # case-insensitive like Spark SQL view resolution (r05)
             ins.extend(a for a in outs
                        if re.search(rf"\b{re.escape(a)}\b", op.query,

@@ -259,31 +259,14 @@ def test_ngram_jaccard_max_df(spark):
     assert (0, 1) in full
 
 
-def test_auto_cache_shared_subplan(spark, data_dir):
-    eng = pg.PigEngine(spark, options={"auto_cache": True})
-    eng.run(f"""
-A = LOAD '{data_dir}/t.csv' USING PigStorage(',') AS (f1:int, f2:int, f3:int);
-E = FOREACH A GENERATE f1, f2 + f3 AS s;
-X = FILTER E BY s > 5;
-Y = FILTER E BY s <= 5;
-U = UNION X, Y;
-""")
-    assert len(rows(eng.df("U"))) == 4
-    # the shared subplan E (2 consumers) got persisted; the raw load didn't
-    assert "E" in eng.executor._cached
-    assert "A" not in eng.executor._cached
-    plan = eng.df("X")._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan
-
-
 def test_default_shared_shuffle_checkpoint(spark, data_dir, monkeypatch):
     from piglet_spark.datapipe import util as dp_util
     # r10 default sharing: a shared REDUCTION point (aggregate output
     # with 2+ consumers) over enough input bytes is pinned with a
     # non-eager localCheckpoint, so the grouped subtree executes once,
-    # not once per consumer (the TPC-H Q2/Q21 shape). Unlike the
-    # auto_cache persist path, nothing registers in the CacheManager —
-    # a later identical plan must recompute, not read this run's data.
+    # not once per consumer (the TPC-H Q2/Q21 shape). Unlike persist,
+    # nothing registers in the CacheManager — a later identical plan
+    # must recompute, not read this run's data.
     script = f"""
 A = LOAD '{data_dir}/t.csv' USING PigStorage(',') AS (f1:int, f2:int, f3:int);
 G = GROUP A BY f1;
@@ -301,6 +284,30 @@ U = UNION X, Y;
     plan = eng.df("X")._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" in plan             # localCheckpoint, visible
     assert "InMemoryTableScan" not in plan   # NOT the persist path
+    # a second run() on the same engine rebinds S and must pin the new
+    # value again, not trust the first run's pin
+    eng.run(script)
+    assert rows(eng.df("U")) == [(1, 7), (4, 6), (7, 9)]
+    plan = eng.df("U")._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan
+    assert "HashAggregate" not in plan       # the grouped subtree ran once
+    # an alias bound by a LOAD and then rebound to the shared aggregate
+    # is pinned as well: the raw-scan mark goes with the old value
+    eng_r = pg.PigEngine(spark)
+    eng_r.run(f"""
+S = LOAD '{data_dir}/t.csv' USING PigStorage(',') AS (f1:int, f2:int, f3:int);
+A = FOREACH S GENERATE *;
+G = GROUP A BY f1;
+S = FOREACH G GENERATE group AS k, SUM(A.f3) AS tot;
+X = FILTER S BY tot > 6;
+Y = FILTER S BY tot <= 6;
+U = UNION X, Y;
+""")
+    assert rows(eng_r.df("U")) == [(1, 7), (4, 6), (7, 9)]
+    assert "S" in eng_r.executor._cached
+    plan = eng_r.df("U")._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan
+    assert "HashAggregate" not in plan
     # size gate: with the default 64 MB floor this tiny input stays
     # lazy — the materialization barrier costs more than recompute
     monkeypatch.undo()

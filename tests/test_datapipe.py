@@ -1077,10 +1077,9 @@ class _FakeSpark:
         self.sparkContext = _FakeSC(master, ckdir)
 
 
-def test_materialize_mode_auto_selection(monkeypatch):
+def test_materialize_mode_auto_selection():
     """Cluster-safe mode resolution (r02 verdict item 3): lazy
     localCheckpoint only where executor loss is impossible."""
-    monkeypatch.setattr(dedup, "MATERIALIZE_MODE", "auto")
     # local masters: single JVM, no executor loss -> localCheckpoint
     assert dedup._resolve_mode(_FakeSpark("local[32]")) == "checkpoint"
     assert dedup._resolve_mode(_FakeSpark("local[*]")) == "checkpoint"
@@ -1092,17 +1091,14 @@ def test_materialize_mode_auto_selection(monkeypatch):
         _FakeSpark("yarn", "hdfs:///ck")) == "reliable"
     assert dedup._resolve_mode(
         _FakeSpark("local[4]", "/tmp/ck")) == "reliable"
-    # explicit setting overrides auto entirely
-    monkeypatch.setattr(dedup, "MATERIALIZE_MODE", "persist")
-    assert dedup._resolve_mode(_FakeSpark("local[4]")) == "persist"
 
 
 def test_materialize_persist_mode_roundtrip(spark, docs, monkeypatch):
-    """ngram pipeline under explicit persist mode returns identical
+    """ngram pipeline under the cluster (persist) mode returns identical
     pairs (the mode changes storage strategy, never values)."""
     base = {(r["id_a"], r["id_b"], r["jaccard"])
             for r in dedup.ngram_jaccard_pairs(docs, threshold=0.3).collect()}
-    monkeypatch.setattr(dedup, "MATERIALIZE_MODE", "persist")
+    monkeypatch.setattr(dedup, "_resolve_mode", lambda s: "persist")
     got = {(r["id_a"], r["id_b"], r["jaccard"])
            for r in dedup.ngram_jaccard_pairs(docs, threshold=0.3).collect()}
     assert got == base
@@ -2178,6 +2174,28 @@ def test_minhash_cross_index_stream_cross_batch(spark, sf_dir,
                                                "jaccard"]
 
 
+def test_minhash_cross_index_stream_refuses_stale_index(spark,
+                                                       tmp_path):
+    """The streaming index query checks the sidecar fingerprints at
+    plan-build time, like the batch query: a bucket data file removed
+    after the write makes it refuse the index."""
+    import glob as _glob
+    import os as _os
+    corpus = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta word{i} epsilon zeta")
+         for i in range(8)], ["doc_id", "text"])
+    idx = str(tmp_path / "lsh_idx")
+    dedup.lsh_write_index(corpus, idx)
+    arrivals = str(tmp_path / "arrivals")
+    corpus.limit(2).write.parquet(arrivals)
+    sdf = spark.readStream.schema(corpus.schema).parquet(arrivals)
+    assert dedup.minhash_cross_index_stream(
+        spark, idx, sdf, cache_static=False).isStreaming
+    _os.remove(_glob.glob(f"{idx}/buckets/_band=*/part-*.parquet")[0])
+    with pytest.raises(ValueError, match="stale index"):
+        dedup.minhash_cross_index_stream(spark, idx, sdf)
+
+
 def test_minhash_cross_shared_ids_and_bands_guard(spark):
     """Sides may reuse id values (verify joins each side's own
     shingles — no cross-contamination), and degenerate banding is
@@ -2400,23 +2418,22 @@ R = STREAM D THROUGH corpus_report('source');
 
 
 def test_rowwise_banded_matches_aggregated(spark, sf_dir):
-    """The streaming (per-row HOF) signature/bucket path produces
-    byte-identical values to the aggregated whole-stage-codegen path
-    — the invariant that makes streaming ingest find exactly the
-    buckets a batch re-run would."""
+    """The streaming (Arrow) signature/bucket kernel yields the values
+    and dtypes of the aggregated batch path (minhash_signatures +
+    _band_buckets) — the invariant that makes streaming ingest find
+    exactly the buckets a batch re-run would."""
     docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .limit(50))
-    row = {(r["_id"], r["_band"]): (r["_bucket"], tuple(r["_sig"]))
-           for r in dedup._rowwise_banded(
-               docs, "text", "doc_id", 32, 8, 3).collect()}
-    sigs = dedup.minhash_signatures(docs, "text", "doc_id", 32, 3)
-    agg_sig = {r["_id"]: tuple(r["_sig"]) for r in sigs.collect()}
-    agg_bkt = {(r["_id"], r["_band"]): r["_bucket"]
-               for r in dedup._band_buckets(sigs, 8, 4).collect()}
-    assert len(row) == len(agg_bkt) and row
-    for (did, band), (bkt, sig) in row.items():
-        assert sig == agg_sig[did], did
-        assert bkt == agg_bkt[(did, band)], (did, band)
+            .limit(60))
+    fast = dedup._rowwise_banded_pandas(docs, "text", "doc_id", 32, 8, 3)
+    batch = dedup._band_buckets(
+        dedup.minhash_signatures(docs, "text", "doc_id", 32, 3), 8, 4,
+        keep=("_sig",))
+    cols = ["_id", "_sig", "_band", "_bucket"]
+    assert fast.select(cols).dtypes == batch.select(cols).dtypes
+    key = lambda df: {(r["_id"], r["_band"]): (r["_bucket"], tuple(r["_sig"]))
+                      for r in df.collect()}
+    got = key(fast)
+    assert got == key(batch) and len(got) == 60 * 8
 
 
 def test_neardup_first_seen_brute_force(spark):
@@ -2589,21 +2606,6 @@ C = STREAM D THROUGH compression_ratio(1);
     rows = eng.df("C").limit(20).collect()
     assert rows and all(0 < r["compression_ratio"] <= 1.2
                         for r in rows)
-
-
-def test_rowwise_banded_pandas_matches_hof(spark, sf_dir):
-    """The Arrow fast path for streaming signatures is byte-identical
-    to the Catalyst HOF formulation (which test_rowwise_banded...
-    pins against the aggregated batch path)."""
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .limit(60))
-    fast = {(r["_id"], r["_band"]): (r["_bucket"], tuple(r["_sig"]))
-            for r in dedup._rowwise_banded_pandas(
-                docs, "text", "doc_id", 32, 8, 3).collect()}
-    hof = {(r["_id"], r["_band"]): (r["_bucket"], tuple(r["_sig"]))
-           for r in dedup._rowwise_banded(
-               docs, "text", "doc_id", 32, 8, 3).collect()}
-    assert fast == hof and fast
 
 
 def test_bm25_topk_brute_force(spark):

@@ -3,16 +3,36 @@
 Usage: python tools/dump_plans.py <out_dir> <suffix> [sf_dir] [query ...]
 
 Writes <out_dir>/<query>_<suffix>.txt for each query (default: every
-registry query). The judge reads these against OPTIMIZATION_*.md plan
-claims, so the output is the raw formatted physical plan.
+registry query): the formatted physical plan with its session-numbered
+ids renumbered in order of first appearance. Spark numbers expression
+ids (``#123``, ``#45L``), exchange ``plan_id``s and scanned RDDs
+(``MapPartitionsRDD[23]``) per session, so two raw dumps of the same
+plan differ everywhere; renumbered, ``diff -r`` of two checkouts'
+dumps (same suffix) shows only real plan changes, while distinct
+attributes keep distinct ids (``_id#3`` vs ``_id#9`` on the two sides
+of a join) as in the raw plan.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 from pyspark.sql import SparkSession
+
+_IDS = (re.compile(r"(#)(\d+)(?=L?\b)"), re.compile(r"(plan_id=)(\d+)"),
+        re.compile(r"(RDD\[)(\d+)(?=\])"))
+
+
+def normalize(plan: str) -> str:
+    """``plan`` with each id namespace renumbered 1, 2, … in order of
+    first appearance."""
+    for pat in _IDS:
+        seen: dict[str, int] = {}
+        plan = pat.sub(lambda m: m.group(1) + str(
+            seen.setdefault(m.group(2), len(seen) + 1)), plan)
+    return plan
 
 
 def main():
@@ -52,7 +72,7 @@ def main():
         except Exception as e:
             plan = f"ERROR building plan: {type(e).__name__}: {e}\n"
         with open(path, "w") as fh:
-            fh.write(plan)
+            fh.write(normalize(plan))
         print(f"wrote {path}")
 
 
