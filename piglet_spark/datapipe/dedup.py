@@ -29,7 +29,7 @@ from pyspark.sql import types as T
 
 from .text import normalize_text, fingerprint, text_ngrams
 from . import util
-from .util import spread as _spread, cached_parquet
+from .util import spread as _spread, cached_parquet, footer_fingerprint
 
 # Mersenne prime for the universal-hash family h_i(x) = (a_i x + b_i) mod p
 _P = (1 << 31) - 1  # Mersenne prime 2^31-1 (see _hash_params)
@@ -527,9 +527,8 @@ def _lsh_meta(path: str, verify: bool = False) -> dict:
     with open(f"{path}/_lsh_meta.json") as fh:
         meta = json.load(fh)
     if verify:
-        from .similarity import _ivf_footer_stats
-        nb, _ = _ivf_footer_stats(f"{path}/buckets")
-        ns, _ = _ivf_footer_stats(f"{path}/shingles")
+        nb, _ = footer_fingerprint(f"{path}/buckets")
+        ns, _ = footer_fingerprint(f"{path}/shingles")
         if nb is not None and (nb != meta["n_bucket_rows"]
                                or ns != meta["n_shingle_rows"]):
             raise ValueError(
@@ -543,9 +542,8 @@ def _lsh_meta(path: str, verify: bool = False) -> dict:
 def _lsh_write_meta(path: str, params: dict) -> None:
     """Write/refresh the LSH index sidecar: parameters + row-count
     fingerprints read from the parquet footers just written."""
-    from .similarity import _ivf_footer_stats
-    n_buckets, _ = _ivf_footer_stats(f"{path}/buckets")
-    n_shingles, _ = _ivf_footer_stats(f"{path}/shingles")
+    n_buckets, _ = footer_fingerprint(f"{path}/buckets")
+    n_shingles, _ = footer_fingerprint(f"{path}/shingles")
     with open(f"{path}/_lsh_meta.json", "w") as fh:
         json.dump({**{k: params[k] for k in _LSH_PARAMS},
                    "n_bucket_rows": n_buckets,
@@ -624,33 +622,28 @@ def lsh_append_index(df: DataFrame, path: str) -> None:
     _lsh_write(df, path, "append", _lsh_meta(path))
 
 
-def lsh_compact_index(spark, path: str,
-                      files_per_band: int = 1) -> None:
+def lsh_compact_index(spark, path: str) -> None:
     """Compact a persisted LSH index's parquet tables
     (:func:`lsh_write_index`): every :func:`lsh_append_index` adds a
     task's worth of new files per partition, and a daily append
     cadence turns the bucket table into thousands of small files —
     the classic small-file problem (footer reads and task scheduling
     start to dominate the partition-pruned scans the index exists
-    for). Rewrites each table with ``files_per_band`` files per band
-    directory (shingles: ``files_per_band × bands`` total), swaps the
+    for). Rewrites each table with one file per band directory
+    (shingles: ``bands`` files), swaps the
     rewritten directories in, and refreshes the sidecar fingerprints
     — row contents identical (query equality pinned by pytest), so
     it can run any time between ingest batches."""
     import os as _os
     import shutil as _shutil
     meta = _lsh_meta(path)
-    n = max(1, int(files_per_band))
     b = cached_parquet(spark, f"{path}/buckets")
-    # n distinct keys per band: each band directory gets at most n
-    # files (keying on the raw bucket would scatter every band over
-    # all n·bands tasks, one file each)
-    (b.repartition(n * int(meta["bands"]), "_band",
-                   F.pmod(F.hash("_bucket"), F.lit(n)))
+    # keyed on the band alone: each band directory is one task's file
+    (b.repartition(int(meta["bands"]), "_band")
      .write.mode("overwrite").partitionBy("_band")
      .parquet(f"{path}/buckets_compact"))
     s = cached_parquet(spark, f"{path}/shingles")
-    (s.repartition(n * int(meta["bands"]))
+    (s.repartition(int(meta["bands"]))
      .write.mode("overwrite").parquet(f"{path}/shingles_compact"))
     for t in ("buckets", "shingles"):
         _shutil.rmtree(f"{path}/{t}")

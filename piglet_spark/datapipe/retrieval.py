@@ -182,8 +182,8 @@ def mmr_rerank(corpus: DataFrame | None, queries: DataFrame,
         # alongside, so the pool's pairwise-similarity stage needs
         # NO second corpus scan and no unprunable id join. Same
         # greedy loop below, byte-identical given the same pool.
-        dim = dim or int(_sim._ivf_load_meta(index_path,
-                                             verify=False)["dim"])
+        dim = dim or int(_sim.ivf_read_index(
+            queries.sparkSession, index_path, verify=False)[0]["dim"])
         cand_v = _sim.knn_join_ivf_index(
             queries.sparkSession, index_path, queries, k=pool,
             n_probe=n_probe, q_vec_col=q_vec_col or vec_col,

@@ -14,12 +14,19 @@
 
 from __future__ import annotations
 
+import json
 import logging
+import math
+import os
+import shutil
 
-from pyspark.sql import Column, DataFrame
+import numpy as np
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .util import spread as _spread, cached_parquet
+from .util import spread as _spread, cached_parquet, footer_fingerprint, \
+    memo_on_df
 
 _LOG = logging.getLogger(__name__)
 
@@ -115,7 +122,6 @@ def cosine_to_query_expr(v: str, query_vec: list[float]) -> Column:
     literal query vector. ||q|| is pre-folded in Python with the same
     left-fold order, so the value is bit-identical to the generic
     formula."""
-    import math
     dim = len(query_vec)
     nq = 0.0
     for x in query_vec:
@@ -146,7 +152,6 @@ def probe_dim(df: DataFrame, vec_col: str = "embedding",
     # memoized on the handle (r10): with the cached_parquet handle
     # shared across the suite this one fixed-latency job ran once per
     # similarity query for the same immutable plan
-    from .util import memo_on_df
     return memo_on_df(df, f"dim:{vec_col}", probe)
 
 
@@ -260,7 +265,6 @@ def train_centroids(df: DataFrame, vec_col: str, id_col: str,
     (Training distributedly re-executed its subtree inside the final
     plan and cost 3 extra jobs — measured 2× the whole query at
     sf0.1.)"""
-    import numpy as np
     sample_rows = (df.select(F.col(id_col).alias("_cid"),
                              _as_double(F.col(vec_col)).alias("_cv"))
                    # null/empty vectors can't seed or train a centroid
@@ -297,20 +301,27 @@ def train_centroids(df: DataFrame, vec_col: str, id_col: str,
                 new_ids.append(cent_ids[ci])
                 new_vecs.append(members.mean(axis=0))
         cent_ids, cent_vecs = new_ids, np.array(new_vecs)
-    cent_rows = [
-        {"_cid": cid, "_cv": [float(x) for x in vec],
-         "_ncv": float(np.sqrt((vec ** 2).sum()))}
-        for cid, vec in zip(cent_ids, cent_vecs)]
-    spark = df.sparkSession
-    from pyspark.sql import types as _T
-    id_type = df.schema[id_col].dataType  # preserve the id's type
-    cents_lit = spark.createDataFrame(
-        [(r["_cid"], r["_cv"], r["_ncv"]) for r in cent_rows],
-        schema=_T.StructType([
-            _T.StructField("_cid", id_type),
-            _T.StructField("_cv", _T.ArrayType(_T.DoubleType())),
-            _T.StructField("_ncv", _T.DoubleType())]))
+    cent_rows = [{"_cid": cid, "_cv": [float(x) for x in vec]}
+                 for cid, vec in zip(cent_ids, cent_vecs)]
+    cents_lit = _centroid_frame(
+        df.sparkSession, [(r["_cid"], r["_cv"]) for r in cent_rows],
+        df.schema[id_col].dataType)  # preserve the id's type
     return cent_rows, cents_lit
+
+
+def _centroid_frame(spark, cents, id_type) -> DataFrame:
+    """The literal (_cid, _cv, _ncv) frame of ``(cid, vec)`` centroid
+    pairs that :func:`_argmin_assign` broadcasts; ``_cid`` has
+    ``id_type`` and ``_ncv`` is the numpy L2 norm, so a trained
+    quantizer and one reloaded from an index sidecar assign alike."""
+    return spark.createDataFrame(
+        [(cid, [float(x) for x in vec],
+          float(np.sqrt((np.asarray(vec, dtype=np.float64) ** 2).sum())))
+         for cid, vec in cents],
+        schema=T.StructType([
+            T.StructField("_cid", id_type),
+            T.StructField("_cv", T.ArrayType(T.DoubleType())),
+            T.StructField("_ncv", T.DoubleType())]))
 
 
 # Query-block size for knn_join's blas path: bounds the per-task
@@ -343,6 +354,182 @@ def lsh_planes(corpus_count: int, n_planes: int = 4,
     # float log (exact at power-of-2 boundaries)
     need = ((cc + tb - 1) // tb - 1).bit_length()
     return min(max(int(n_planes), need), int(max_planes))
+
+
+# --- the batch kNN pipeline: one function per step, shared by
+# knn_join (blas/ivf) and the index-served knn_join_ivf_index
+
+def _vectors(df: DataFrame, dim: int, id_col: str, vec_col: str,
+             id_as: str | None = None, keep: tuple = (), v: str = "_v",
+             n: str = "_nv") -> DataFrame:
+    """(id, *keep, v, n): ``vec_col`` cast to double as ``v`` with its
+    L2 norm over the first ``dim`` elements as ``n``. Null/short and
+    zero-norm vectors drop — their cosine is undefined."""
+    idc = F.col(id_col) if id_as is None else F.col(id_col).alias(id_as)
+    return (df.select(idc, *keep, _as_double(F.col(vec_col)).alias(v))
+            .filter(F.size(F.col(v)) >= dim)
+            .withColumn(n, norm_expr(v, dim))
+            .filter(F.col(n) > 0))
+
+
+def _band(band, who: str) -> tuple[float, float] | None:
+    """``band`` as floats (lo, hi), checked lo < hi; None stays None."""
+    if band is None:
+        return None
+    lo, hi = float(band[0]), float(band[1])
+    if not lo < hi:
+        raise ValueError(f"{who}: band must be (lo, hi) with lo < hi, "
+                         f"got {band!r}")
+    return lo, hi
+
+
+def _unit(M):
+    """Rows of ``M`` scaled to unit L2 norm."""
+    return M / np.sqrt((M ** 2).sum(axis=1, keepdims=True))
+
+
+def _query_panel(qs: DataFrame, dim: int, max_queries: int, who: str):
+    """(q_ids, Qn): the query side of ``qs`` = :func:`_vectors` (qid,
+    _qv, _nq) collected driver-side, Qn its L2-normalized nq × dim
+    matrix. More than ``max_queries`` rows is an error, not a cap."""
+    rows = qs.limit(max_queries + 1).collect()
+    if len(rows) > max_queries:
+        raise ValueError(
+            f"{who}: query side exceeds max_queries={max_queries}; "
+            f"raise the cap or pre-partition the queries")
+    Q = np.array([[float(x) for x in r["_qv"][:dim]] for r in rows],
+                 dtype=np.float64).reshape(len(rows), dim)
+    return [r["qid"] for r in rows], _unit(Q)
+
+
+def _unit_cells(cents) -> tuple[list, "np.ndarray"]:
+    """(cids, Cn) of ``(cid, vec)`` centroid pairs in ascending-cid
+    order: np.argmax and the stable probe sort then pick the FIRST
+    maximum, which matches the SQL tie-break (cos DESC, cid ASC) of
+    the oracle and of :func:`_argmin_assign`."""
+    cents = sorted(cents, key=lambda c: c[0])
+    return ([c for c, _ in cents],
+            _unit(np.array([v for _, v in cents], dtype=np.float64)))
+
+
+def _probe_cells(Qn, cids: list, Cn, n_probe: int) -> dict:
+    """cid → int64 indices (into Qn) of the queries that probe it —
+    each query probes its ``n_probe`` nearest cells (one nq × n_cells
+    matmul); cells no query probes are absent."""
+    probes = np.argsort(-(Qn @ Cn.T), kind="stable",
+                        axis=1)[:, :min(int(n_probe), len(cids))]
+    out: dict = {}
+    for qi, cells in enumerate(probes):
+        for c in cells:
+            out.setdefault(cids[int(c)], []).append(qi)
+    return {cid: np.asarray(ix, dtype=np.int64) for cid, ix in out.items()}
+
+
+def _nearest_cells(cents, query_vec: list[float], n_probe: int) -> list:
+    """The cids of the ``n_probe`` ``(cid, vec)`` centroids nearest one
+    query by Python-float cosine, ties → smallest cid (the single-
+    query probe the ivf_topk oracle reproduces)."""
+    nq = math.sqrt(sum(x * x for x in query_vec))
+
+    def cos(v):
+        num = sum(x * y for x, y in zip(v, query_vec))
+        nv = math.sqrt(sum(x * x for x in v))
+        return num / (nv * nq) if nv and nq else 0.0
+
+    best = sorted(cents, key=lambda c: (-cos(c[1]), c[0]))
+    return [cid for cid, _ in best[:int(n_probe)]]
+
+
+def _knn_schema(q_type, nbr_type) -> T.StructType:
+    return T.StructType([T.StructField("qid", q_type),
+                         T.StructField("nbr_id", nbr_type),
+                         T.StructField("cos", T.DoubleType())])
+
+
+def _knn_candidates(rows: DataFrame, q_ids: list, Qn, k: int,
+                    batch_slack: int | None, exclude_self: bool,
+                    band: tuple[float, float] | None,
+                    schema: T.StructType, cell_of=None,
+                    cell_queries: dict | None = None) -> DataFrame:
+    """The Arrow kNN candidate kernel: one ``mapInPandas`` pass over
+    ``rows`` (nbr_id, _v, …) whose batches are L2-normalized and
+    matmul'd against the query panel Qn in blocks of
+    ``_BLAS_QBLOCK`` queries, emitting per query only its
+    top-(k+slack) candidates (qid, nbr_id, cos round-6). The corpus
+    is scanned once and the |C|·nq cross product never exists.
+
+    IVF: ``cell_of(pdf, Vn)`` gives each batch row's cell, and each
+    cell's rows are scored only against ``cell_queries[cell]`` (the
+    queries probing it, :func:`_probe_cells`)."""
+    import pandas as pd
+    dim = Qn.shape[1]
+    cap = int(k) + int(batch_slack if batch_slack is not None
+                       else 3 * k + 8)
+    excl = bool(exclude_self)
+    qblock = _BLAS_QBLOCK
+    q_arr = np.asarray(q_ids, dtype=object)
+    all_q = np.arange(len(q_ids), dtype=np.int64)
+
+    def emit(Vn, ids, q_idx):
+        m = min(cap, len(ids))
+        for lo in range(0, len(q_idx), qblock):
+            qix = q_idx[lo:lo + qblock]
+            qa = q_arr[qix]
+            S = Vn @ Qn[qix].T  # (rows, block) — one BLAS call
+            # masks in place: np.where would copy S, ~160 MB per tile
+            # at a 10k-row batch × 2048 queries
+            if excl:  # self-pairs must not occupy candidate slots
+                S[ids[:, None] == qa[None, :]] = -np.inf
+            if band is not None:
+                # widened by 1e-6 so a raw score that ROUNDS into
+                # [lo, hi) survives fold-order ulp noise; the precise
+                # rounded-band filter re-applies in _topk, strays just
+                # burn slack
+                S[(S < band[0] - 1e-6) | (S >= band[1] + 1e-6)] = -np.inf
+            top = np.argpartition(-S, m - 1, axis=0)[:m]  # (m, block)
+            col = np.repeat(np.arange(S.shape[1]), m)
+            row = top.T.ravel()
+            keep = np.isfinite(S[row, col])
+            yield pd.DataFrame({"qid": qa[col[keep]],
+                                "nbr_id": ids[row[keep]],
+                                "cos": S[row[keep], col[keep]]})
+
+    def _knn_kernel(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            Vn = _unit(np.array([v[:dim] for v in pdf["_v"]],
+                                dtype=np.float64))
+            ids = pdf["nbr_id"].to_numpy()
+            if cell_of is None:
+                yield from emit(Vn, ids, all_q)
+                continue
+            cells = cell_of(pdf, Vn)
+            for c in pd.unique(cells):
+                q_idx = cell_queries.get(c)
+                if q_idx is not None:
+                    rix = np.flatnonzero(cells == c)
+                    yield from emit(Vn[rix], ids[rix], q_idx)
+
+    # RAW scores leave the kernel and round Spark-side (HALF_UP) like
+    # the exact path; np.round (half-to-even) could flip k-boundary
+    # ranking on a 5e-7 midpoint
+    return (rows.mapInPandas(_knn_kernel, schema=schema)
+            .withColumn("cos", F.round(F.col("cos"), 6)))
+
+
+def _topk(scored: DataFrame, k: int,
+          band: tuple[float, float] | None) -> DataFrame:
+    """Per qid, the ``k`` rows ranked by (cos desc, nbr_id asc) —
+    ROW_NUMBER semantics; with ``band`` only rows whose ROUNDED cos is
+    in [lo, hi) are ranked, so every method sees the same set."""
+    if band is not None:
+        scored = scored.filter((F.col("cos") >= band[0])
+                               & (F.col("cos") < band[1]))
+    w = (Window.partitionBy("qid")
+         .orderBy(F.col("cos").desc(), F.col("nbr_id").asc()))
+    return (scored.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= int(k)).drop("_rn"))
 
 
 def knn_join(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -443,44 +630,19 @@ def knn_join(corpus: DataFrame, queries: DataFrame, k: int = 5,
     q_id_col = q_id_col or id_col
     if method not in ("exact", "blas", "lsh", "ivf"):
         raise ValueError(f"knn_join: unknown method {method!r}")
-    if band is not None:
-        b_lo, b_hi = float(band[0]), float(band[1])
-        if not b_lo < b_hi:
-            raise ValueError(f"knn_join: band must be (lo, hi) with "
-                             f"lo < hi, got {band!r}")
+    band = _band(band, "knn_join")
     dim = dim if dim is not None else probe_dim(queries, q_vec_col)
 
-    qs = (queries.select(F.col(q_id_col).alias("qid"),
-                         _as_double(F.col(q_vec_col)).alias("_qv"))
-          .filter(F.size(F.col("_qv")) >= dim)
-          .withColumn("_nq", norm_expr("_qv", dim))
-          .filter(F.col("_nq") > 0))
-    base = (_spread(corpus)
-            .select(F.col(id_col).alias("nbr_id"),
-                    _as_double(F.col(vec_col)).alias("_v"))
-            .filter(F.size(F.col("_v")) >= dim)
-            .withColumn("_nv", norm_expr("_v", dim))
-            .filter(F.col("_nv") > 0))
-
-    from pyspark.sql import Window
-
-    def _topk(scored: DataFrame) -> DataFrame:
-        if band is not None:
-            # on ROUNDED cosines — all four methods see the same set
-            scored = scored.filter((F.col("cos") >= b_lo)
-                                   & (F.col("cos") < b_hi))
-        w = (Window.partitionBy("qid")
-             .orderBy(F.col("cos").desc(), F.col("nbr_id").asc()))
-        return (scored.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= int(k)).drop("_rn"))
-
+    qs = _vectors(queries, dim, q_id_col, q_vec_col, "qid",
+                  v="_qv", n="_nq")
+    base = _vectors(_spread(corpus), dim, id_col, vec_col, "nbr_id")
     cos6 = F.round(cosine_with_norms("_v", "_qv", "_nv", "_nq", dim), 6)
     not_self = (F.col("nbr_id") != F.col("qid")) if exclude_self else F.lit(True)
 
     if method == "exact":
         scored = (base.join(F.broadcast(qs), not_self)
                   .select("qid", "nbr_id", cos6.alias("cos")))
-        return _topk(scored)
+        return _topk(scored, k, band)
 
     if method == "lsh":
         # Adaptive plane count: the r07 scale sweep caught the fixed
@@ -490,7 +652,6 @@ def knn_join(corpus: DataFrame, queries: DataFrame, k: int = 5,
         # know |C| pass corpus_count and skip the job. Deterministic
         # — p is pure integer math on the count, so the SQL oracle
         # regenerates the identical plane set from COUNT(*).
-        from .util import memo_on_df
         cc = int(corpus_count) if corpus_count is not None \
             else memo_on_df(corpus, "count", corpus.count)
         p = lsh_planes(cc, n_planes, target_bucket)
@@ -532,135 +693,39 @@ def knn_join(corpus: DataFrame, queries: DataFrame, k: int = 5,
                   .join(F.broadcast(qb),
                         (F.col("_b") == F.col("_probe")) & not_self)
                   .select("qid", "nbr_id", cos6.alias("cos")))
-        return _topk(scored)
+        return _topk(scored, k, band)
 
-    # --- blas / ivf (shared Arrow kernel) ---
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as _T
-    qrows = qs.limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"knn_join(method={method!r}): query side exceeds "
-            f"max_queries={max_queries}; raise the cap or "
-            f"pre-partition the queries")
-    def _empty():
-        # schema-correct empty result: qid keeps the QUERY side's id
-        # type (the nbr-typed shortcut broke downstream unions when
-        # the two sides' id types differ)
-        return corpus.sparkSession.createDataFrame(
-            [], _T.StructType([
-                _T.StructField("qid", queries.schema[q_id_col].dataType),
-                _T.StructField("nbr_id", corpus.schema[id_col].dataType),
-                _T.StructField("cos", _T.DoubleType())]))
-
-    if not qrows:
-        return _empty()
-    q_ids = [r["qid"] for r in qrows]
-    Q = np.array([[float(x) for x in r["_qv"][:dim]] for r in qrows],
-                 dtype=np.float64)
-    Qn = Q / np.sqrt((Q ** 2).sum(axis=1, keepdims=True))
-    slack = int(batch_slack if batch_slack is not None else 3 * k + 8)
-
-    # IVF-Flat coarse quantization (FAISS-style), fused into the same
-    # kernel: rows are binned to their nearest trained centroid
-    # per-batch (one b×n_cells matmul), and each bin only matmuls
-    # against the queries PROBING that cell — ~n_probe/n_cells of the
-    # blas flops, still zero shuffle and one corpus scan. Recall =
-    # IVF recall (cell containing a true neighbor must be probed);
-    # approximate, so pytest pins recall vs exact, not equality.
-    Cn = None
-    cell_queries: list | None = None
+    # --- blas / ivf: the shared Arrow kernel ---
+    q_ids, Qn = _query_panel(qs, dim, max_queries,
+                             f"knn_join(method={method!r})")
+    # qid keeps the QUERY side's id type, also when empty (an
+    # nbr-typed empty frame broke downstream unions)
+    schema = _knn_schema(queries.schema[q_id_col].dataType,
+                         corpus.schema[id_col].dataType)
+    spark = corpus.sparkSession
+    if not q_ids:
+        return spark.createDataFrame([], schema)
+    cell_of = cell_queries = None
     if method == "ivf":
+        # IVF-Flat coarse quantization (FAISS-style) fused into the
+        # kernel: each batch bins its rows to the nearest trained
+        # centroid (one b×n_cells matmul) and scores each bin only
+        # against the queries probing that cell
         cent_rows, _ = train_centroids(corpus, vec_col, id_col,
                                        n_cells, refine_iters,
                                        train_sample)
         if not cent_rows:
-            return _empty()
-        C = np.array([r["_cv"] for r in cent_rows], dtype=np.float64)
-        Cn = C / np.sqrt((C ** 2).sum(axis=1, keepdims=True))
-        # per-query probe cells (driver-side: nq × n_cells matmul),
-        # inverted to cell → query-index array for the kernel
-        probes_per_q = np.argsort(-(Qn @ Cn.T), kind="stable",
-                                  axis=1)[:, :min(n_probe, len(Cn))]
-        cell_queries = [[] for _ in range(len(Cn))]
-        for qi, cells in enumerate(probes_per_q):
-            for c in cells:
-                cell_queries[int(c)].append(qi)
-        cell_queries = [np.asarray(ix, dtype=np.int64)
-                        for ix in cell_queries]
-    q_id_type = queries.schema[q_id_col].dataType
-    nbr_type = corpus.schema[id_col].dataType
-    out_schema = _T.StructType([
-        _T.StructField("qid", q_id_type),
-        _T.StructField("nbr_id", nbr_type),
-        _T.StructField("cos", _T.DoubleType())])
-    kk = int(k)
-    excl = bool(exclude_self)
+            return spark.createDataFrame([], schema)
+        cids, Cn = _unit_cells([(r["_cid"], r["_cv"]) for r in cent_rows])
+        cell_queries = _probe_cells(Qn, cids, Cn, n_probe)
+        cid_arr = np.asarray(cids)
 
-    QBLOCK = _BLAS_QBLOCK
-
-    def _batch_candidates(batches):
-        q_arr = np.asarray(q_ids, dtype=object)
-
-        def emit(Vsub, ids_sub, q_idx):
-            """Per-query top-(k+slack) of one (rows × queries) tile,
-            emitted as candidate frames; q_idx indexes Qn/q_arr."""
-            m = min(slack + kk, len(ids_sub))
-            for lo in range(0, len(q_idx), QBLOCK):
-                qix = q_idx[lo:lo + QBLOCK]
-                qa = q_arr[qix]
-                S = Vsub @ Qn[qix].T  # (rows, block) — one BLAS call
-                if excl:
-                    # mask self-pairs so they can't occupy candidate
-                    # slots
-                    self_mask = ids_sub[:, None] == qa[None, :]
-                    S = np.where(self_mask, -np.inf, S)
-                if band is not None:
-                    # widened by 1e-6 so a raw BLAS score that ROUNDS
-                    # into [lo, hi) can't be masked out by fold-order
-                    # ulp noise; the precise rounded-band filter
-                    # re-applies in _topk, strays just burn slack
-                    S = np.where((S < b_lo - 1e-6)
-                                 | (S >= b_hi + 1e-6), -np.inf, S)
-                top = np.argpartition(-S, m - 1, axis=0)[:m]  # (m, block)
-                col = np.repeat(np.arange(S.shape[1]), m)
-                row = top.T.ravel()
-                keep = np.isfinite(S[row, col])
-                # RAW scores out of the kernel — rounding happens
-                # Spark-side with F.round (HALF_UP) so blas/ivf round
-                # exactly like the exact path; np.round here
-                # (half-to-even) could flip k-boundary ranking on a
-                # 5e-7 midpoint and break the blas==exact contract
-                yield pd.DataFrame({
-                    "qid": qa[col[keep]],
-                    "nbr_id": ids_sub[row[keep]],
-                    "cos": S[row[keep], col[keep]]})
-
-        all_q = np.arange(len(q_ids), dtype=np.int64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.array([v[:dim] for v in pdf["_v"]], dtype=np.float64)
-            ids = pdf["nbr_id"].to_numpy()
-            Vn = V / np.sqrt((V ** 2).sum(axis=1, keepdims=True))
-            if Cn is None:                       # blas: full panel
-                yield from emit(Vn, ids, all_q)
-                continue
-            # ivf: bin rows to their nearest cell, tile per cell
-            # against only the queries probing it
-            cells = np.argmax(Vn @ Cn.T, axis=1)
-            for c in np.unique(cells):
-                q_idx = cell_queries[int(c)]
-                if not len(q_idx):
-                    continue
-                rmask = cells == c
-                yield from emit(Vn[rmask], ids[rmask], q_idx)
-
-    cands = (base.select("nbr_id", "_v")
-             .mapInPandas(_batch_candidates, schema=out_schema)
-             .withColumn("cos", F.round(F.col("cos"), 6)))
-    return _topk(cands)
+        def cell_of(pdf, Vn):
+            return cid_arr[np.argmax(Vn @ Cn.T, axis=1)]
+    cands = _knn_candidates(base.select("nbr_id", "_v"), q_ids, Qn, k,
+                            batch_slack, exclude_self, band, schema,
+                            cell_of, cell_queries)
+    return _topk(cands, k, band)
 
 
 def ivf_topk(df: DataFrame, query_vec: list[float], k: int = 10,
@@ -697,15 +762,8 @@ def ivf_topk(df: DataFrame, query_vec: list[float], k: int = 10,
         return rows.select(F.col(id_col),
                            F.lit(0.0).alias("cos")).limit(0)
 
-    def cos_py(a, b):
-        num = sum(x * y for x, y in zip(a, b))
-        na = sum(x * x for x in a) ** 0.5
-        nb = sum(x * x for x in b) ** 0.5
-        return num / (na * nb) if na and nb else 0.0
-
-    best = sorted(cent_rows,
-                  key=lambda r: (-cos_py(r["_cv"], query_vec), r["_cid"]))
-    probe = [r["_cid"] for r in best[:n_probe]]
+    probe = _nearest_cells([(r["_cid"], r["_cv"]) for r in cent_rows],
+                           query_vec, n_probe)
     # query cosine computes MAP-SIDE in the scan stage (codegen'd
     # unrolled dot over all 32 input splits); the probed-cell
     # assignment joins narrow (id, cos) ⋈ (id) — the embedding array
@@ -777,6 +835,73 @@ def quantize_embeddings(df: DataFrame, vec_col: str = "embedding",
         .alias("cos_q"))
 
 
+def _write_cells(df: DataFrame, path: str, mode: str, cents_lit,
+                 centroids: list[dict], dim: int, id_col: str,
+                 vec_col: str) -> None:
+    """Assign ``df``'s vectors to their nearest centroid of
+    ``cents_lit`` (:func:`_argmin_assign`), write (id, vec) into the
+    ``_cid=`` hive cell partitions under ``path`` with parquet write
+    ``mode``, then rewrite the sidecar."""
+    rows = _vectors(df, dim, id_col, vec_col, keep=(F.col(vec_col),))
+    assign = _argmin_assign(rows, cents_lit, id_col, dim)
+    (rows.select(id_col, vec_col).join(assign, on=id_col)
+     .write.mode(mode).partitionBy("_cid").parquet(path))
+    _write_sidecar(path, dim, centroids, id_col, vec_col)
+
+
+def _write_sidecar(path: str, dim: int, centroids: list[dict],
+                   id_col: str, vec_col: str) -> None:
+    """(Re)write an IVF index's ``_ivf_centroids.json``: the centroids
+    plus the corpus fingerprint (r09) — row count and cell set of the
+    files now under ``path``, from parquet FOOTERS only — so a query
+    refuses a stale/foreign index instead of silently serving it."""
+    n_rows, cids = footer_fingerprint(path, "_cid")
+    with open(f"{path}/_ivf_centroids.json", "w") as fh:
+        json.dump({"dim": dim, "centroids": centroids,
+                   "n_rows": n_rows, "cells": sorted(cids),
+                   "id_col": id_col, "vec_col": vec_col}, fh)
+
+
+def ivf_read_index(spark, path: str,
+                   verify: bool = True) -> tuple[dict, DataFrame]:
+    """(meta, index) of a persisted IVF index (:func:`ivf_write_index`):
+    the centroid sidecar and the cell-partitioned corpus, with
+    ``_cid`` read as the index's own id type — hive partition
+    inference would read a ``_cid=007`` string cell back as the
+    integer 7, which no sidecar cid matches.
+
+    ``verify`` runs the r09 staleness guard first: build-once/
+    query-many must not silently serve an index whose data files were
+    replaced or partially rewritten after the sidecar was written.
+    Footer metadata only — no data read, so the check is cheap even
+    on a big index; pass ``verify=False`` on a hot path that has
+    already checked once this session."""
+    with open(f"{path}/_ivf_centroids.json") as fh:
+        meta = json.load(fh)
+    if verify and meta.get("n_rows") is not None:
+        n_rows, cids = footer_fingerprint(path, "_cid")
+        if n_rows is not None:
+            want_cells = set(str(c) for c in meta.get("cells", []))
+            if n_rows != int(meta["n_rows"]) or \
+                    (want_cells and not cids <= want_cells):
+                raise ValueError(
+                    f"stale index at {path}: data files hold "
+                    f"{n_rows} rows in cells {sorted(cids)} but the "
+                    f"centroid sidecar was written for "
+                    f"{meta['n_rows']} rows in cells "
+                    f"{sorted(want_cells)} — rebuild with "
+                    f"ivf_write_index")
+    inferred = cached_parquet(spark, path)
+
+    def read():
+        id_type = inferred.schema[meta["id_col"]].dataType
+        return spark.read.schema(T.StructType([
+            T.StructField(f.name, id_type, f.nullable) if f.name == "_cid"
+            else f for f in inferred.schema])).parquet(path)
+    # memoized on the handle: a changed file set is a new handle
+    return meta, memo_on_df(inferred, "ivf_index", read)
+
+
 def ivf_write_index(df: DataFrame, path: str,
                     vec_col: str = "embedding",
                     id_col: str = "vec_id",
@@ -797,30 +922,14 @@ def ivf_write_index(df: DataFrame, path: str,
     100 TB is the difference between a full scan and a few percent.
     Standard FAISS-on-disk / Milvus segment layout re-expressed as a
     plain partitioned table any engine can read."""
-    import json as _json
     dim = dim or probe_dim(df, vec_col)
-    rows = df.select(F.col(id_col), F.col(vec_col),
-                     _as_double(F.col(vec_col)).alias("_v"))
-    rows = (rows.filter(F.size("_v") >= dim)
-            .withColumn("_nv", norm_expr("_v", dim))
-            .filter(F.col("_nv") > 0))
     cent_rows, cents_lit = train_centroids(
         df, vec_col, id_col, n_cells, refine_iters, train_sample)
     if cents_lit is None:
         raise ValueError("ivf_write_index: no trainable vectors")
-    assign = _argmin_assign(rows, cents_lit, id_col, dim)
-    (rows.select(id_col, vec_col).join(assign, on=id_col)
-     .write.mode("overwrite").partitionBy("_cid").parquet(path))
-    cents = [{"cid": r["_cid"], "vec": [float(x) for x in r["_cv"]]}
-             for r in cent_rows]
-    # corpus fingerprint (r09): row count + cell set from the files
-    # just written (parquet FOOTERS only, no Spark job) so queries
-    # can refuse a stale/foreign index instead of silently serving it
-    n_rows, cids = _ivf_footer_stats(path)
-    with open(f"{path}/_ivf_centroids.json", "w") as fh:
-        _json.dump({"dim": dim, "centroids": cents,
-                    "n_rows": n_rows, "cells": sorted(cids),
-                    "id_col": id_col, "vec_col": vec_col}, fh)
+    cents = [{"cid": r["_cid"], "vec": r["_cv"]} for r in cent_rows]
+    _write_cells(df, path, "overwrite", cents_lit, cents, dim, id_col,
+                 vec_col)
     return cents
 
 
@@ -843,125 +952,39 @@ def ivf_append_index(df: DataFrame, path: str) -> None:
     (cells stop matching the data) — rebuild with
     :func:`ivf_write_index` periodically; the index records no drift
     statistic itself."""
-    import json as _json
-    import math as _math
-    from pyspark.sql import types as _T
-    meta = _ivf_load_meta(path, verify=True)
-    dim = int(meta["dim"])
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    spark = df.sparkSession
-    # the sidecar's cid values must keep the INDEX's _cid type so the
-    # appended rows land in the same hive partition directories
-    cid_type = cached_parquet(spark, path).schema["_cid"].dataType
-    cents_lit = spark.createDataFrame(
-        [(c["cid"], [float(x) for x in c["vec"]],
-          float(_math.sqrt(sum(x * x for x in c["vec"]))))
-         for c in meta["centroids"]],
-        schema=_T.StructType([
-            _T.StructField("_cid", cid_type),
-            _T.StructField("_cv", _T.ArrayType(_T.DoubleType())),
-            _T.StructField("_ncv", _T.DoubleType())]))
-    rows = df.select(F.col(id_col), F.col(vec_col),
-                     _as_double(F.col(vec_col)).alias("_v"))
-    rows = (rows.filter(F.size("_v") >= dim)
-            .withColumn("_nv", norm_expr("_v", dim))
-            .filter(F.col("_nv") > 0))
-    assign = _argmin_assign(rows, cents_lit, id_col, dim)
-    (rows.select(id_col, vec_col).join(assign, on=id_col)
-     .write.mode("append").partitionBy("_cid").parquet(path))
-    n_rows, cids = _ivf_footer_stats(path)
-    meta_out = {"dim": dim, "centroids": meta["centroids"],
-                "n_rows": n_rows, "cells": sorted(cids),
-                "id_col": id_col, "vec_col": vec_col}
-    with open(f"{path}/_ivf_centroids.json", "w") as fh:
-        _json.dump(meta_out, fh)
+    meta, index = ivf_read_index(df.sparkSession, path)
+    id_col = meta["id_col"]
+    # the centroid cids keep the INDEX's id type so the appended rows
+    # land in the same hive partition directories
+    cents_lit = _centroid_frame(
+        df.sparkSession, [(c["cid"], c["vec"]) for c in meta["centroids"]],
+        index.schema[id_col].dataType)
+    _write_cells(df, path, "append", cents_lit, meta["centroids"],
+                 int(meta["dim"]), id_col, meta["vec_col"])
 
 
-def ivf_compact_index(spark, path: str,
-                      files_per_cell: int = 1) -> None:
+def ivf_compact_index(spark, path: str) -> None:
     """Compact a persisted IVF index's cell partitions
     (:func:`ivf_write_index`): each :func:`ivf_append_index` adds a
     task's worth of files per touched cell, and a steady append
     cadence fragments the hive layout into small files that blunt
-    the partition-pruned reads. Rewrites the corpus with
-    ``files_per_cell`` files per cell directory, swaps the cell
+    the partition-pruned reads. Rewrites the corpus with ONE file per
+    cell directory (each cell hashes to one task), swaps the cell
     directories in, and refreshes the sidecar fingerprints — rows
     and centroids identical (query equality pinned by pytest)."""
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-    meta = _ivf_load_meta(path, verify=True)
-    n = max(1, int(files_per_cell))
-    n_cells = max(1, len(meta["centroids"]))
-    df = cached_parquet(spark, path)
+    meta, index = ivf_read_index(spark, path)
     tmp = f"{path}_compact"
-    (df.repartition(n * n_cells, "_cid")
+    (index.repartition(max(1, len(meta["centroids"])), "_cid")
      .write.mode("overwrite").partitionBy("_cid").parquet(tmp))
-    for d in list(_os.listdir(path)):
+    for d in list(os.listdir(path)):
         if d.startswith("_cid="):
-            _shutil.rmtree(_os.path.join(path, d))
-    for d in list(_os.listdir(tmp)):
+            shutil.rmtree(os.path.join(path, d))
+    for d in list(os.listdir(tmp)):
         if d.startswith("_cid="):
-            _os.rename(_os.path.join(tmp, d), _os.path.join(path, d))
-    _shutil.rmtree(tmp)
-    n_rows, cids = _ivf_footer_stats(path)
-    with open(f"{path}/_ivf_centroids.json", "w") as fh:
-        _json.dump({"dim": meta["dim"],
-                    "centroids": meta["centroids"],
-                    "n_rows": n_rows, "cells": sorted(cids),
-                    "id_col": meta["id_col"],
-                    "vec_col": meta["vec_col"]}, fh)
-
-
-def _ivf_footer_stats(path: str) -> "tuple[int | None, set]":
-    """(total rows, cell ids) of a persisted IVF index from parquet
-    footers + hive dir names — metadata-only, no data read. Returns
-    ``(None, set())`` for non-local paths (S3/HDFS URIs have no
-    os.walk; the staleness check degrades to dim-only there)."""
-    import os as _os
-    import pyarrow.parquet as _pq
-    if not _os.path.isdir(path):
-        return None, set()
-    n, cids = 0, set()
-    for root, _dirs, files in _os.walk(path):
-        base = _os.path.basename(root)
-        cid = None
-        if base.startswith("_cid="):
-            cid = base.split("=", 1)[1]
-        for f in files:
-            if not f.endswith(".parquet"):
-                continue
-            n += _pq.ParquetFile(_os.path.join(root, f)).metadata.num_rows
-            if cid is not None:
-                cids.add(cid)
-    return n, cids
-
-
-def _ivf_load_meta(path: str, verify: bool = True) -> dict:
-    """Load a persisted IVF index's centroid sidecar and (when
-    ``verify``) run the r09 staleness guard: build-once/query-many
-    must not silently serve an index whose data files were replaced
-    or partially rewritten after the sidecar was written. Footer
-    metadata only — no data read, so the check is cheap even on a
-    big index; pass ``verify=False`` on a hot path that has already
-    checked once this session."""
-    import json as _json
-    with open(f"{path}/_ivf_centroids.json") as fh:
-        meta = _json.load(fh)
-    if verify and meta.get("n_rows") is not None:
-        n_rows, cids = _ivf_footer_stats(path)
-        if n_rows is not None:
-            want_cells = set(str(c) for c in meta.get("cells", []))
-            if n_rows != int(meta["n_rows"]) or \
-                    (want_cells and not cids <= want_cells):
-                raise ValueError(
-                    f"stale index at {path}: data files hold "
-                    f"{n_rows} rows in cells {sorted(cids)} but the "
-                    f"centroid sidecar was written for "
-                    f"{meta['n_rows']} rows in cells "
-                    f"{sorted(want_cells)} — rebuild with "
-                    f"ivf_write_index")
-    return meta
+            os.rename(os.path.join(tmp, d), os.path.join(path, d))
+    shutil.rmtree(tmp)
+    _write_sidecar(path, meta["dim"], meta["centroids"], meta["id_col"],
+                   meta["vec_col"])
 
 
 def ivf_query_index(spark, path: str, query_vec: list[float],
@@ -978,25 +1001,16 @@ def ivf_query_index(spark, path: str, query_vec: list[float],
     Returns (id, cos), round-6, ties → ascending id, identical to
     :func:`ivf_topk` at the same training parameters (pinned by
     pytest)."""
-    import math
-    meta = _ivf_load_meta(path, verify)
+    meta, index = ivf_read_index(spark, path, verify)
     dim = int(meta["dim"])
     if len(query_vec) != dim:
         raise ValueError(
             f"ivf_query_index: query dim {len(query_vec)} != index "
             f"dim {dim} ({path})")
-    nq = math.sqrt(sum(x * x for x in query_vec))
-
-    def cos_py(v):
-        num = sum(x * y for x, y in zip(v, query_vec))
-        nv = math.sqrt(sum(x * x for x in v))
-        return num / (nv * nq) if nv and nq else 0.0
-
-    best = sorted(meta["centroids"],
-                  key=lambda c: (-cos_py(c["vec"]), c["cid"]))
-    probes = [c["cid"] for c in best[:int(n_probe)]]
-    part = (cached_parquet(spark, path)
-            .filter(F.col("_cid").isin(probes)))
+    probes = _nearest_cells([(c["cid"], c["vec"])
+                             for c in meta["centroids"]],
+                            query_vec, n_probe)
+    part = index.filter(F.col("_cid").isin(probes))
     # cosine_to_query_expr needs a named double-array column
     scored = (part
               .withColumn("_pv", _as_double(F.col(vec_col)))
@@ -1026,9 +1040,9 @@ def knn_join_ivf_index(spark, path: str, queries: DataFrame,
     partitions — the ``_cid isin`` filter lands in the parquet
     source as a partition filter, so at 100 TB a query panel that
     probes 4/16 cells reads ~25% of the bytes instead of 100%, and
-    the blas kernel then matmuls each cell's rows against just the
-    queries probing it (the same flop shape as the fused ivf
-    kernel, minus the training scan and the unprobed bytes).
+    the same Arrow kernel (:func:`_knn_candidates`) then matmuls
+    each cell's rows against just the queries probing it, binned by
+    the stored ``_cid`` instead of a per-batch argmax.
 
     Semantics match ``knn_join(method='ivf')`` built with the SAME
     training parameters on the SAME corpus exactly (pinned by
@@ -1048,142 +1062,30 @@ def knn_join_ivf_index(spark, path: str, queries: DataFrame,
     into the same partition-pruned, column-pruned index read to
     attach vectors AFTER the top-k.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql import types as _T
-
-    meta = _ivf_load_meta(path, verify)
+    meta, index = ivf_read_index(spark, path, verify)
     dim = int(meta["dim"])
     id_col, vec_col = meta["id_col"], meta["vec_col"]
-    if band is not None:
-        b_lo, b_hi = float(band[0]), float(band[1])
-        if not b_lo < b_hi:
-            raise ValueError(f"knn_join_ivf_index: band must be "
-                             f"(lo, hi) with lo < hi, got {band!r}")
-
-    qs = (queries.select(F.col(q_id_col).alias("qid"),
-                         _as_double(F.col(q_vec_col)).alias("_qv"))
-          .filter(F.size(F.col("_qv")) >= dim)
-          .withColumn("_nq", norm_expr("_qv", dim))
-          .filter(F.col("_nq") > 0))
-    qrows = qs.limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"knn_join_ivf_index: query side exceeds "
-            f"max_queries={max_queries}; raise the cap or "
-            f"pre-partition the queries")
-    q_id_type = queries.schema[q_id_col].dataType
-    # nbr_id keeps the INDEX's id type (metadata-only schema read)
-    nbr_type = cached_parquet(spark, path).schema[id_col].dataType
-    kern_schema = _T.StructType([
-        _T.StructField("qid", q_id_type),
-        _T.StructField("nbr_id", nbr_type),
-        _T.StructField("cos", _T.DoubleType())])
-    out_fields = list(kern_schema.fields)
-    if return_vecs:
-        out_fields.append(
-            _T.StructField("_v", _T.ArrayType(_T.DoubleType())))
-    out_schema = _T.StructType(out_fields)
-    if not qrows:
-        return spark.createDataFrame([], out_schema)
-    q_ids = [r["qid"] for r in qrows]
-    Q = np.array([[float(x) for x in r["_qv"][:dim]] for r in qrows],
-                 dtype=np.float64)
-    Qn = Q / np.sqrt((Q ** 2).sum(axis=1, keepdims=True))
-
-    # per-query probe cells from the sidecar centroids (driver-side,
-    # identical math to the fused ivf path), inverted to
-    # cell → query-index arrays for the kernel
-    # natural cid order (matches the fused kernel's cent_rows order
-    # and the SQL oracle's "cos DESC, cid ASC" tie-break)
-    cents = sorted(meta["centroids"], key=lambda c: c["cid"])
-    C = np.array([c["vec"] for c in cents], dtype=np.float64)
-    Cn = C / np.sqrt((C ** 2).sum(axis=1, keepdims=True))
-    probes_per_q = np.argsort(-(Qn @ Cn.T), kind="stable",
-                              axis=1)[:, :min(int(n_probe), len(Cn))]
-    cell_queries: dict = {}
-    for qi, cells in enumerate(probes_per_q):
-        for c in cells:
-            cell_queries.setdefault(cents[int(c)]["cid"],
-                                    []).append(qi)
-    cell_queries = {cid: np.asarray(ix, dtype=np.int64)
-                    for cid, ix in cell_queries.items()}
-    probed = sorted(cell_queries)
-
+    band = _band(band, "knn_join_ivf_index")
+    qs = _vectors(queries, dim, q_id_col, q_vec_col, "qid",
+                  v="_qv", n="_nq")
+    q_ids, Qn = _query_panel(qs, dim, max_queries, "knn_join_ivf_index")
+    schema = _knn_schema(queries.schema[q_id_col].dataType,
+                         index.schema[id_col].dataType)
+    if not q_ids:
+        vec_field = [T.StructField("_v", T.ArrayType(T.DoubleType()))]
+        return spark.createDataFrame([], T.StructType(
+            schema.fields + (vec_field if return_vecs else [])))
+    cell_queries = _probe_cells(
+        Qn, *_unit_cells([(c["cid"], c["vec"])
+                          for c in meta["centroids"]]), n_probe)
     # partition-pruned read: only probed cells' files are opened
-    part = (cached_parquet(spark, path)
-            .filter(F.col("_cid").isin(list(probed))))
-    base = (part.select(F.col(id_col).alias("nbr_id"),
-                        _as_double(F.col(vec_col)).alias("_v"),
-                        F.col("_cid"))
-            .filter(F.size(F.col("_v")) >= dim)
-            .withColumn("_nv", norm_expr("_v", dim))
-            .filter(F.col("_nv") > 0)
-            .select("nbr_id", "_v", "_cid"))
-
-    kk, slack = int(k), int(batch_slack if batch_slack is not None
-                            else 3 * k + 8)
-    excl = bool(exclude_self)
-    QBLOCK = _BLAS_QBLOCK
-    bnd = (b_lo, b_hi) if band is not None else None
-
-    def _batch_candidates(batches):
-        q_arr = np.asarray(q_ids, dtype=object)
-
-        def emit(Vn_sub, ids_sub, q_idx):
-            m = min(slack + kk, len(ids_sub))
-            for lo in range(0, len(q_idx), QBLOCK):
-                qix = q_idx[lo:lo + QBLOCK]
-                qa = q_arr[qix]
-                S = Vn_sub @ Qn[qix].T
-                # in-place masking (np.where copies S — at a 10k-row
-                # Arrow batch × QBLOCK doubles each copy is ~160 MB
-                # per worker, ×32 workers of transient peak)
-                if excl:
-                    S[ids_sub[:, None] == qa[None, :]] = -np.inf
-                if bnd is not None:
-                    # widened by 1e-6; the precise rounded-band
-                    # filter re-applies Spark-side (same contract as
-                    # the fused blas/ivf kernel)
-                    S[(S < bnd[0] - 1e-6)
-                      | (S >= bnd[1] + 1e-6)] = -np.inf
-                top = np.argpartition(-S, m - 1, axis=0)[:m]
-                col = np.repeat(np.arange(S.shape[1]), m)
-                row = top.T.ravel()
-                keep = np.isfinite(S[row, col])
-                # RAW scores out of the kernel — rounding happens
-                # Spark-side with F.round (HALF_UP), exactly like
-                # knn_join's kernel
-                yield pd.DataFrame(
-                    {"qid": qa[col[keep]],
-                     "nbr_id": ids_sub[row[keep]],
-                     "cos": S[row[keep], col[keep]]})
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.array([v[:dim] for v in pdf["_v"]],
-                         dtype=np.float64)
-            ids = pdf["nbr_id"].to_numpy()
-            Vn = V / np.sqrt((V ** 2).sum(axis=1, keepdims=True))
-            cells = pdf["_cid"].to_numpy()
-            for c in pd.unique(cells):
-                q_idx = cell_queries.get(c)
-                if q_idx is None or not len(q_idx):
-                    continue
-                rmask = np.flatnonzero(cells == c)
-                yield from emit(Vn[rmask], ids[rmask], q_idx)
-
-    cands = (base.mapInPandas(_batch_candidates, schema=kern_schema)
-             .withColumn("cos", F.round(F.col("cos"), 6)))
-    if bnd is not None:
-        cands = cands.filter((F.col("cos") >= bnd[0])
-                             & (F.col("cos") < bnd[1]))
-    w = (Window.partitionBy("qid")
-         .orderBy(F.col("cos").desc(), F.col("nbr_id").asc()))
-    top = (cands.withColumn("_rn", F.row_number().over(w))
-           .filter(F.col("_rn") <= kk).drop("_rn"))
+    part = index.filter(F.col("_cid").isin(sorted(cell_queries)))
+    base = _vectors(part, dim, id_col, vec_col, "nbr_id",
+                    keep=(F.col("_cid"),)).select("nbr_id", "_v", "_cid")
+    top = _topk(_knn_candidates(base, q_ids, Qn, k, batch_slack,
+                                exclude_self, band, schema,
+                                lambda pdf, Vn: pdf["_cid"].to_numpy(),
+                                cell_queries), k, band)
     if not return_vecs:
         return top
     # attach neighbor vectors AFTER the top-k: the winner set is

@@ -109,6 +109,33 @@ def cached_parquet(spark, path: str) -> DataFrame:
         per_session[key] = df
     return df
 
+
+def footer_fingerprint(path: str,
+                       part_col: str | None = None) -> "tuple[int | None, set]":
+    """(total rows, ``part_col`` values) of the parquet files under a
+    local ``path``, from parquet FOOTERS and hive directory names only
+    — no data read, no Spark job. The persisted indexes store it in
+    their sidecars to refuse a stale index. Returns ``(None, set())``
+    for non-local paths (S3/HDFS URIs have no os.walk; the staleness
+    checks degrade there)."""
+    import pyarrow.parquet as pq
+    if not os.path.isdir(path):
+        return None, set()
+    prefix = f"{part_col}=" if part_col else None
+    n, values = 0, set()
+    for root, _dirs, files in os.walk(path):
+        base = os.path.basename(root)
+        value = base[len(prefix):] if prefix and \
+            base.startswith(prefix) else None
+        for f in files:
+            if not f.endswith(".parquet"):
+                continue
+            n += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
+            if value is not None:
+                values.add(value)
+    return n, values
+
+
 def memo_on_df(df: DataFrame, key: str, fn):
     """Memoize a small plan-derived statistic (a probed dimension, a
     row count) ON the DataFrame handle object. DataFrames are

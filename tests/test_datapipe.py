@@ -228,17 +228,45 @@ def test_knn_join_exact_brute_force(spark, sf_dir):
     assert got == _knn_brute(emb.collect(), qs.collect(), k=5)
 
 
-def test_knn_join_blas_equals_exact(spark, sf_dir):
-    """The BLAS mapInPandas scale path must agree with the
-    oracle-exact path (same ids, same round-6 scores) on real data."""
+@pytest.fixture(scope="module")
+def knn_index(spark, sf_dir, tmp_path_factory):
+    """The embeddings and an 8-cell persisted IVF index over them."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    path = str(tmp_path_factory.mktemp("knn") / "ivf")
+    similarity.ivf_write_index(emb, path, n_cells=8)
+    return emb, path
+
+
+def _knn(regime, emb, qs, path, band=None):
+    if regime == "index":
+        return similarity.knn_join_ivf_index(
+            emb.sparkSession, path, qs, k=5, n_probe=3, band=band)
+    return similarity.knn_join(emb, qs, k=5, method=regime, n_cells=8,
+                               n_probe=3, band=band)
+
+
+@pytest.mark.parametrize("regime",
+                         ["exact", "blas", "lsh", "ivf", "index"])
+def test_knn_regimes_schema_and_values(knn_index, regime):
+    """Every kNN regime returns the same schema — dtypes AND
+    nullability — on a non-empty and on an empty query panel, and
+    the regimes declared equal return identical rows with and
+    without a band: the BLAS kernel == the oracle-exact path, the
+    index-served join == the fused ivf kernel."""
+    emb, path = knn_index
     qs = emb.filter(F.col("vec_id") % 50 == 0)
-    key = lambda r: (r["qid"], r["nbr_id"], r["cos"])
-    ex = sorted(map(key, similarity.knn_join(
-        emb, qs, k=5, method="exact").collect()))
-    bl = sorted(map(key, similarity.knn_join(
-        emb, qs, k=5, method="blas").collect()))
-    assert ex == bl
+    want = [("qid", "bigint", True), ("nbr_id", "bigint", True),
+            ("cos", "double", True)]
+    for panel in (qs, qs.filter(F.col("vec_id") < 0)):
+        got = _knn(regime, emb, panel, path).schema
+        assert [(f.name, f.dataType.simpleString(), f.nullable)
+                for f in got] == want
+    twin = {"blas": "exact", "index": "ivf"}.get(regime)
+    for band in ((None, (0.15, 0.30)) if twin else ()):
+        rows = lambda r: sorted(tuple(x) for x in  # noqa: E731
+                                _knn(r, emb, qs, path, band).collect())
+        got = rows(regime)
+        assert got and got == rows(twin)
 
 
 def test_knn_join_blas_query_blocks(spark, sf_dir, monkeypatch):
@@ -2120,10 +2148,10 @@ def test_lsh_compact_index_preserves_queries(spark, sf_dir, tmp_path):
     n_before = nf()
     dedup.lsh_compact_index(spark, idx)
     assert nf() < n_before
-    # the files_per_band contract (default 1): one file per band dir
+    # exactly one file per band directory
     bands = glob.glob(f"{idx}/buckets/_band=*")
     assert bands and all(
-        len(glob.glob(f"{d}/*.parquet")) <= 1 for d in bands)
+        len(glob.glob(f"{d}/*.parquet")) == 1 for d in bands)
     after = sorted(map(key, dedup.minhash_cross_index(
         spark, idx, new, threshold=0.2).collect()))
     assert after == before and after

@@ -736,14 +736,21 @@ def test_mmr_blas_matches_exact(spark):
     assert a == b and len(a) > 0
 
 
-def test_knn_join_ivf_index_matches_fused(spark, tmp_path):
+@pytest.mark.parametrize("ids", ["int", "str"])
+def test_knn_join_ivf_index_matches_fused(spark, tmp_path, ids):
     """r10: the batch kNN join served from a PERSISTED IVF index
     equals the fused knn_join(method='ivf') at the same training
     parameters (identical deterministic centroids + assignment), and
     the probe filter reaches the parquet source as partition
-    pruning."""
+    pruning — also for zero-padded string ids, whose ``_cid=007``
+    cells hive inference would read back as the integer 7. An
+    append then lands each query's copy in the query's own probed
+    cell, where it is the nearest neighbor (cos 1.0)."""
     emb = _emb(spark)
-    q = emb.filter(F.col("vec_id") % 100 == 0)
+    if ids == "str":
+        emb = emb.withColumn("vec_id",
+                             F.format_string("%03d", F.col("vec_id")))
+    q = emb.filter(F.col("vec_id").cast("int") % 100 == 0)
     path = str(tmp_path / "ivf_knn_idx")
     dps.ivf_write_index(emb, path, n_cells=8)
     got = dps.knn_join_ivf_index(spark, path, q, k=5, n_probe=3)
@@ -754,6 +761,14 @@ def test_knn_join_ivf_index_matches_fused(spark, tmp_path):
     assert g == w and len(g) > 0
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "_cid" in plan.split("PartitionFilters")[1].split("]")[0]
+    copy = (lambda i: f"c{i}") if ids == "str" else (lambda i: i + 10 ** 5)
+    copy_id = (F.concat(F.lit("c"), F.col("vec_id")) if ids == "str"
+               else F.col("vec_id") + 10 ** 5)
+    dps.ivf_append_index(q.withColumn("vec_id", copy_id), path)
+    found = {r["qid"] for r in dps.knn_join_ivf_index(
+        spark, path, q, k=5, n_probe=3).collect()
+        if r["cos"] == 1.0 and r["nbr_id"] == copy(r["qid"])}
+    assert found == {r["vec_id"] for r in q.collect()}
 
 
 def test_knn_join_ivf_index_band_and_vecs(spark, tmp_path):
@@ -1110,8 +1125,8 @@ def test_ivf_append_index_add_semantics(spark, tmp_path):
 
 
 def test_ivf_compact_index_preserves_queries(spark, tmp_path):
-    """Compaction after appends shrinks per-cell file counts and
-    changes nothing else: centroids frozen, identical query output,
+    """Compaction after appends leaves exactly one file per cell
+    directory and changes nothing else: centroids frozen, identical query output,
     staleness guard green on the refreshed fingerprints."""
     import glob
     import json
@@ -1126,10 +1141,11 @@ def test_ivf_compact_index_preserves_queries(spark, tmp_path):
               dps.ivf_query_index(spark, path, qv, k=5,
                                   n_probe=8).collect()]
     meta0 = json.load(open(f"{path}/_ivf_centroids.json"))
-    nf = lambda: len(glob.glob(f"{path}/_cid=*/*.parquet"))
-    n_before = nf()
+    cells = glob.glob(f"{path}/_cid=*")
+    nf = lambda: [len(glob.glob(f"{c}/*.parquet")) for c in cells]
+    assert max(nf()) > 1
     dps.ivf_compact_index(spark, path)
-    assert nf() < n_before
+    assert nf() == [1] * len(cells)  # exactly one file per cell
     meta1 = json.load(open(f"{path}/_ivf_centroids.json"))
     assert meta1["centroids"] == meta0["centroids"]
     assert meta1["n_rows"] == meta0["n_rows"]
