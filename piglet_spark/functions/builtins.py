@@ -4,12 +4,15 @@ Parity target: /root/reference/src/main/scala/dbis/piglet/udf/UDF.scala:28-75
 and common/src/main/scala/dbis/piglet/CommonPigFuncs.scala:24-85.
 
 Every function here stays JVM-side (pyspark.sql.functions) — no Python
-UDFs in the hot path. Aggregates have two builders:
+UDFs in the hot path. Each aggregate has two forms, one definition of
+its value and its type:
 
 - ``fused``: operates on pre-group columns inside ``groupBy().agg()``
   (the scale path — partial aggregation, no bag materialization);
-- ``bag``: operates on a materialized ``array<struct>`` bag column via
-  higher-order functions (only when the script truly keeps the bag).
+- ``array(arr, elem_type)``: folds an array of scalars — a
+  materialized bag's field, a nested bag, or a correlated expression
+  mapped over a bag — via higher-order functions. ``elem_type`` is the
+  static element type, or None when unknown.
 """
 
 from __future__ import annotations
@@ -18,15 +21,16 @@ from typing import Callable, Optional
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 # ------------------------------------------------------------ aggregates
 
 class AggSpec:
     def __init__(self, fused: Callable[..., Column],
-                 bag: Callable[..., Column]):
+                 array: Callable[[Column, Optional[T.DataType]], Column]):
         self.fused = fused
-        self.bag = bag
+        self.array = array
 
 
 def _round_scale(s) -> int:
@@ -39,122 +43,134 @@ def _round_scale(s) -> int:
         f"{type(s).__name__} (column-valued scales are unsupported)")
 
 
-def _nonnull_vals(bag: Column, c: str) -> Column:
-    """Non-null field values of a bag — the null-skipping base every
-    value-aggregate shares (Pig/SQL semantics: NULL elements don't
-    poison a fold and don't count in denominators)."""
-    return F.filter(F.transform(bag, lambda x: x[c]),
-                    lambda v: v.isNotNull())
+def _nonnull(arr: Column) -> Column:
+    """The null-skipping base of every value fold (Pig/SQL semantics:
+    NULL elements don't poison a fold and don't count in
+    denominators)."""
+    return F.filter(arr, lambda v: v.isNotNull())
 
 
-def _bag_median(bag: Column, c: str) -> Column:
-    """Upper median, null-skipping (r05: nulls sorted last and a
-    null-inclusive size skewed the index — bag [(1),(NULL),(2),(3)]
-    returned 3 where the fused path returns 2)."""
-    vals = F.array_sort(_nonnull_vals(bag, c))
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+
+
+def _array_sum(arr: Column, elem_type: Optional[T.DataType]) -> Column:
+    """Accumulates in LONG over integral elements and in double
+    otherwise — the types ``F.sum`` returns."""
+    if isinstance(elem_type, _INTEGRAL):
+        zero = F.lit(0).cast("long")
+        return F.aggregate(arr, zero,
+                           lambda a, x: a + F.coalesce(x.cast("long"), zero))
+    return F.aggregate(arr, F.lit(0.0),
+                       lambda a, x: a + F.coalesce(x.cast("double"),
+                                                   F.lit(0.0)))
+
+
+def _array_avg(arr: Column) -> Column:
+    vals = _nonnull(arr)
+    return F.when(F.size(vals) > 0, F.aggregate(
+        vals, F.lit(0.0), lambda a, x: a + x.cast("double")) / F.size(vals))
+
+
+def _array_median(arr: Column) -> Column:
+    """Upper median of the non-null values (r05: nulls sort last, so a
+    null-inclusive size skewed the index — [1, NULL, 2, 3] gave 3 where
+    the fused form gives 2)."""
+    vals = F.array_sort(_nonnull(arr))
     return F.element_at(vals,
                         (F.floor(F.size(vals) / 2) + 1).cast("int"))
 
 
-def _bag_var(bag: Column, c: str) -> Column:
-    """Population variance, null-skipping with a non-null denominator
-    (r05: one NULL element poisoned the whole fold to NULL where the
-    fused var_pop skips nulls)."""
-    vals = F.transform(_nonnull_vals(bag, c),
-                       lambda v: v.cast("double"))
+def _array_var(arr: Column) -> Column:
+    """Population variance over the non-null values, with a non-null
+    denominator, like ``var_pop``."""
+    vals = F.transform(_nonnull(arr), lambda v: v.cast("double"))
     n = F.size(vals).cast("double")
     s = F.aggregate(vals, F.lit(0.0), lambda a, x: a + x)
     s2 = F.aggregate(vals, F.lit(0.0), lambda a, x: a + x * x)
     return F.when(n > 0, s2 / n - (s / n) ** 2).otherwise(F.lit(None))
 
 
-def _bag_avg(bag: Column, c: str) -> Column:
-    """AVG over a bag column, NULL-skipping like F.avg: sum of
-    non-null values / count of non-null values; NULL when none."""
-    vals = F.filter(F.transform(bag, lambda x: x[c].cast("double")),
-                    lambda v: v.isNotNull())
-    n = F.size(vals)
-    return F.when(n > 0, F.aggregate(
-        vals, F.lit(0.0), lambda acc, v: acc + v) / n)
+def _array_count(arr: Column, elem_type: Optional[T.DataType]) -> Column:
+    return F.size(arr).cast("long")
 
 
 AGGREGATES: dict[str, AggSpec] = {
-    # COUNT counts all rows of the bag incl. nulls (CommonPigFuncs.scala:36)
+    # COUNT counts all tuples of the bag incl. nulls
+    # (CommonPigFuncs.scala:36) and returns long (SURVEY §2.9)
     "count": AggSpec(
         fused=lambda *cols: F.count(F.lit(1)),
-        bag=lambda bag, *proj: F.size(bag),
+        array=_array_count,
     ),
-    # SUM/AVG skip NULL values (Pig + SQL aggregate semantics; keeps
-    # the bag path consistent with the fused F.sum/F.avg path — a
-    # NULL element must not poison the fold, and AVG's denominator
-    # counts non-null values only). SUM of an all-NULL group is 0,
-    # not NULL: reference parity (CommonPigFuncs.scala:38 sums an
-    # empty Iterable to 0) and consistency with the bag path and the
-    # COGROUP-fused empty-side normalization.
+    # SUM/AVG skip NULL values (Pig + SQL aggregate semantics — a NULL
+    # element must not poison the fold, and AVG's denominator counts
+    # non-null values only). SUM of an all-NULL or empty bag is 0, not
+    # NULL: reference parity (CommonPigFuncs.scala:38 sums an empty
+    # Iterable to 0), in both forms and after COGROUP's empty-side
+    # normalization. Both forms return long over integral values and
+    # double otherwise.
     "sum": AggSpec(
         fused=lambda c: F.coalesce(F.sum(c), F.lit(0)),
-        bag=lambda bag, c: F.aggregate(
-            bag, F.lit(0.0),
-            lambda acc, x: acc + F.coalesce(x[c].cast("double"), F.lit(0.0))
-        ),
+        array=_array_sum,
     ),
     "min": AggSpec(
         fused=lambda c: F.min(c),
-        bag=lambda bag, c: F.array_min(F.transform(bag, lambda x: x[c])),
+        array=lambda arr, et: F.array_min(arr),
     ),
     "max": AggSpec(
         fused=lambda c: F.max(c),
-        bag=lambda bag, c: F.array_max(F.transform(bag, lambda x: x[c])),
+        array=lambda arr, et: F.array_max(arr),
     ),
     "avg": AggSpec(
         fused=lambda c: F.avg(c),
-        bag=lambda bag, c: _bag_avg(bag, c),
+        array=lambda arr, et: _array_avg(arr),
     ),
     # upper median of the sorted sequence (CommonPigFuncs.scala:30-34);
-    # both paths skip nulls (collect_list drops them; _bag_median
-    # filters, r05)
+    # both forms skip nulls (collect_list drops them; the array form
+    # filters)
     "median": AggSpec(
         fused=lambda c: F.element_at(
             F.array_sort(F.collect_list(c)),
             (F.floor(F.count(c) / 2) + 1).cast("int"),
         ),
-        bag=lambda bag, c: _bag_median(bag, c),
+        array=lambda arr, et: _array_median(arr),
     ),
     "isempty": AggSpec(
         fused=lambda *c: F.count(F.lit(1)) == 0,
-        bag=lambda bag, *c: F.size(bag) == 0,
+        array=lambda arr, et: F.size(arr) == 0,
     ),
     "nonempty": AggSpec(
         fused=lambda *c: F.count(F.lit(1)) > 0,
-        bag=lambda bag, *c: F.size(bag) > 0,
+        array=lambda arr, et: F.size(arr) > 0,
     ),
     # beyond-reference but standard Pig builtins, cheap to support
     "count_star": AggSpec(
         fused=lambda *c: F.count(F.lit(1)),
-        bag=lambda bag, *c: F.size(bag),
+        array=_array_count,
     ),
     "var": AggSpec(
         fused=lambda c: F.var_pop(c),
-        bag=lambda bag, c: _bag_var(bag, c),
+        array=lambda arr, et: _array_var(arr),
     ),
     "stddev": AggSpec(
         fused=lambda c: F.stddev_pop(c),
-        bag=lambda bag, c: F.sqrt(AGGREGATES["var"].bag(bag, c)),
+        array=lambda arr, et: F.sqrt(_array_var(arr)),
     ),
     # HyperLogLog++ cardinality (beyond-reference; the aggregate a
     # 100 TB pipeline actually uses where COUNT(DISTINCT x) would
     # shuffle every distinct value — HLL state is a few KB per group,
-    # map-side combined). Bag form falls back to exact distinct
-    # (already-materialized arrays are small by construction).
+    # map-side combined). The array form is the exact distinct count
+    # (already-materialized arrays are small by construction), null
+    # skipped like approx_count_distinct.
     "approx_distinct": AggSpec(
         fused=lambda c: F.approx_count_distinct(c),
-        # filter nulls so both forms agree: approx_count_distinct
-        # ignores nulls (HLL semantics), array_distinct would keep one
-        bag=lambda bag, c: F.size(F.filter(
-            F.array_distinct(F.transform(bag, lambda x: x[c])),
-            lambda v: v.isNotNull())).cast("long"),
+        array=lambda arr, et: F.size(
+            _nonnull(F.array_distinct(arr))).cast("long"),
     ),
 }
+
+
+# aggregates that read only the size of their bag, not its values
+SIZE_ONLY = frozenset(["count", "count_star", "isempty", "nonempty"])
 
 
 def is_aggregate(name: str) -> bool:

@@ -222,7 +222,6 @@ class NestedBag:
             # support, and whole-stage codegen instead of an
             # interpreted array lambda (r06 fuzzer: the lambda
             # mini-compiler lacked IS NULL / bincond / casts).
-            from ..plans.exprs import compile_expr
             elem = F.when(compile_expr(ops[0][1], ctx), elem)
             ops = ops[1:]
         arr = F.collect_list(elem)
@@ -235,8 +234,16 @@ class NestedBag:
                 arr = F.slice(arr, 1, int(op[1].value))
             elif op[0] == "filter":
                 pred = op[1]
-                arr = F.filter(arr, lambda x: _lambda_pred(pred, x, self, ctx))
+                arr = F.filter(arr, lambda x: compile_expr(
+                    pred, self._elem_ctx(x, ctx)))
         return arr
+
+    def _elem_ctx(self, x: Column, ctx: Ctx) -> Ctx:
+        """Compilation context for a predicate over one bag element
+        (lambda variable ``x``): the bag's fields resolve to x's."""
+        fields = {self.proj: x} if self.proj is not None \
+            else {c: x[c] for c in self.whole_cols}
+        return Ctx(self.src, udfs=ctx.udfs, fields=fields)
 
     def _sorted(self, arr: Column, specs) -> Column:
         """Honor ORDER BY field/direction via an array_sort comparator
@@ -280,8 +287,8 @@ class NestedBag:
     # Aggregates where agg(when(pred, x)) over pre-group columns is
     # exactly agg over the filtered materialized bag (all null-skip,
     # and the engine's bags never hold null scalars — collect_list
-    # drops them).  median/var are excluded: their array forms keep
-    # different null placement.
+    # drops them). median is excluded: its fused form collects the
+    # values anyway.
     _FILTER_FUSABLE = frozenset(
         ["count", "count_star", "sum", "avg", "min", "max",
          "isempty", "nonempty", "var", "stddev", "approx_distinct"])
@@ -294,7 +301,6 @@ class NestedBag:
         per-group array; the 100 TB path for nested FILTER+agg)."""
         ops = self.ops if ops is None else ops
         if len(ops) == 1 and ops[0][0] == "filter":
-            from ..plans.exprs import compile_expr
             return compile_expr(ops[0][1], ctx)
         return None
 
@@ -309,7 +315,6 @@ class NestedBag:
             # count_distinct (when() nulls the dropped rows;
             # count_distinct skips nulls, and bags never hold null
             # scalars, so the array form agrees)
-            from ..plans.exprs import compile_expr
             return F.count_distinct(
                 F.when(compile_expr(self.ops[0][1], ctx), col))
         ops_eff = self.ops
@@ -328,75 +333,21 @@ class NestedBag:
             if name == "nonempty":
                 return counted > 0
             if col is not None:
-                from ..functions.builtins import AGGREGATES
-                return AGGREGATES[name].fused(F.when(pred, col))
+                return E.builtins.AGGREGATES[name].fused(F.when(pred, col))
         if simple_distinct:
             if name in ("count", "count_star"):
                 return F.count_distinct(col)
             if name == "sum":
-                return F.sum_distinct(col)
-            if name in ("min", "max", "isempty", "nonempty"):
-                pass  # distinct irrelevant → fall through to plain
+                # 0 over an all-null group, like every other SUM
+                return F.coalesce(F.sum_distinct(col), F.lit(0))
         if not self.ops and self.proj is not None:
-            from ..functions.builtins import AGGREGATES
-            if name in ("count", "count_star"):
-                return F.count(F.lit(1))
-            return AGGREGATES[name].fused(col)
+            return E.builtins.AGGREGATES[name].fused(col)
         if name in ("min", "max") and self.proj is not None and all(
                 op[0] == "distinct" for op in self.ops):
             return F.min(col) if name == "min" else F.max(col)
-        # general path: array expression
-        arr = self.as_column(ctx)
-        if name in ("count", "count_star"):
-            return F.size(arr)
-        if name == "isempty":
-            return F.size(arr) == 0
-        if name == "nonempty":
-            return F.size(arr) > 0
-        if name == "sum":
-            return F.aggregate(arr, F.lit(0.0), lambda a, x: a + x.cast("double"))
-        if name == "avg":
-            return F.aggregate(arr, F.lit(0.0),
-                               lambda a, x: a + x.cast("double")) / F.size(arr)
-        if name == "min":
-            return F.array_min(arr)
-        if name == "max":
-            return F.array_max(arr)
-        if name == "median":
-            return F.element_at(F.array_sort(arr),
-                                (F.floor(F.size(arr) / 2) + 1).cast("int"))
-        raise ExecError(f"unsupported nested aggregate {name}")
-
-
-def _lambda_pred(pred: A.Expr, x: Column, bag: NestedBag, ctx: Ctx) -> Column:
-    """Compile a predicate over a bag element (lambda variable x)."""
-    def comp(e: A.Expr) -> Column:
-        if isinstance(e, A.NamedField):
-            if bag.proj is not None and e.name == bag.proj:
-                return x
-            return x[e.name]
-        if isinstance(e, A.PositionalField):
-            if bag.whole_cols:
-                return x[bag.whole_cols[e.pos]]
-            return x
-        if isinstance(e, A.Literal):
-            return F.lit(e.value)
-        if isinstance(e, A.Cmp):
-            lf, rt = comp(e.left), comp(e.right)
-            return {"==": lf == rt, "!=": lf != rt, "<": lf < rt,
-                    "<=": lf <= rt, ">": lf > rt, ">=": lf >= rt}[e.op]
-        if isinstance(e, A.And):
-            return comp(e.left) & comp(e.right)
-        if isinstance(e, A.Or):
-            return comp(e.left) | comp(e.right)
-        if isinstance(e, A.Not):
-            return ~comp(e.expr)
-        if isinstance(e, A.BinOp):
-            lf, rt = comp(e.left), comp(e.right)
-            return {"+": lf + rt, "-": lf - rt, "*": lf * rt,
-                    "/": lf / rt, "%": lf % rt}[e.op]
-        raise ExecError(f"unsupported nested-filter predicate {e!r}")
-    return comp(pred)
+        et = self.src.schema[self.proj].dataType \
+            if self.proj is not None else None
+        return E.builtins.AGGREGATES[name].array(self.as_column(ctx), et)
 
 
 # ------------------------------------------------------------- executor
@@ -1043,23 +994,22 @@ class Executor:
         out = out.select(*sel)
         return _finalize(out, names, flat_idx, gen_meta)
 
-    # aggregates a cogroup FOREACH can fuse, with empty-side parity:
-    # value each must take when the key is absent on that side (bag
-    # would have been empty). None ⇒ leave the outer-join NULL (same
-    # as array_min/max on an empty bag).
-    _COGROUP_FUSABLE = {"count", "count_star", "isempty", "nonempty",
-                        "sum", "min", "max", "avg"}
+    # value an aggregate takes where its side has no rows for the key
+    # (the array form over an empty bag); the others stay NULL there
+    _COGROUP_EMPTY = {"count": 0, "count_star": 0, "approx_distinct": 0,
+                      "sum": 0, "isempty": True, "nonempty": False}
 
     def _foreach_cogroup_fused(self, op: A.Foreach,
                                cg: CoGroupedRelation) -> Optional[DataFrame]:
         """FOREACH over COGROUP where every bag use is an aggregate →
-        per-side partial aggregation + full-outer join on the key.
+        per-side partial aggregation (each aggregate's ``fused`` form)
+        + full-outer join on the key.
 
         Returns None when any generator needs the materialized bags
-        (caller falls back). Empty-side parity with the bag path:
-        COUNT→0 (F.size of empty array), SUM→0.0 (fold from 0.0,
-        CommonPigFuncs.scala:38 sums an empty Iterable to 0),
-        MIN/MAX/AVG→NULL."""
+        (caller falls back). A key absent on one side takes that
+        side's empty-bag value (``_COGROUP_EMPTY``): COUNT→0,
+        SUM→0 (CommonPigFuncs.scala:38 sums an empty Iterable to 0),
+        ISEMPTY→true; MIN/MAX/AVG/MEDIAN→NULL."""
         if op.nested_ops:
             return None
         side_names = {rel for rel, _, _ in cg.sides}
@@ -1072,8 +1022,6 @@ class Executor:
             if isinstance(e, A.FuncCall) and E.builtins.is_aggregate(
                     e.name.lower()):
                 name = e.name.lower()
-                if name not in self._COGROUP_FUSABLE:
-                    return None
                 arg = e.args[0] if e.args else None
                 if isinstance(arg, A.NamedField) and arg.name in side_names:
                     side, field = arg.name, None
@@ -1084,8 +1032,7 @@ class Executor:
                     side, field = arg.base.name, arg.field.name
                 else:
                     return None
-                if field is None and name not in (
-                        "count", "count_star", "isempty", "nonempty"):
+                if field is None and name not in E.builtins.SIZE_ONLY:
                     return None  # SUM(O) without a field → bag path
                 requests.append((side, name, field))
                 return A.NamedField(name=f"__cg{len(requests) - 1}")
@@ -1155,17 +1102,11 @@ class Executor:
             wanted = by_side.get(grel.rel_name, [])
             aggs = [F.count(F.lit(1)).alias(f"__side_{grel.rel_name}")] \
                 if not wanted else []
-            ctx = Ctx(grel.src, mode="row", udfs=self.udfs)
             for i, name, field in wanted:
-                if name in ("count", "count_star", "isempty", "nonempty"):
-                    aggs.append(F.count(F.lit(1)).alias(f"__cg{i}"))
-                    continue
-                col = ctx.col(S.resolve_column(grel.src.columns, field))
-                if name == "sum":
-                    # bag path folds doubles from 0.0 — keep the type
-                    aggs.append(F.sum(col.cast("double")).alias(f"__cg{i}"))
-                else:
-                    aggs.append(getattr(F, name)(col).alias(f"__cg{i}"))
+                args = [] if field is None else [grel.src[
+                    S.resolve_column(grel.src.columns, field)]]
+                aggs.append(E.builtins.AGGREGATES[name].fused(*args)
+                            .alias(f"__cg{i}"))
             keys = grel.key_cols()
             if len(keys) == 1:
                 gb = [keys[0][1].alias("group")]
@@ -1183,17 +1124,8 @@ class Executor:
         fixed = []
         for i, (side, name, field) in enumerate(requests):
             c = F.col(f"__cg{i}")
-            if name in ("count", "count_star"):
-                # stays long: casting to int (the bag path's F.size
-                # type) would silently wrap past 2^31 rows per key —
-                # the hot-key case is exactly what fusion is for
-                c = F.coalesce(c, F.lit(0).cast("long"))
-            elif name == "isempty":
-                c = F.coalesce(c, F.lit(0)) == 0
-            elif name == "nonempty":
-                c = F.coalesce(c, F.lit(0)) > 0
-            elif name == "sum":
-                c = F.coalesce(c, F.lit(0.0))
+            if name in self._COGROUP_EMPTY:
+                c = F.coalesce(c, F.lit(self._COGROUP_EMPTY[name]))
             fixed.append(c.alias(f"__cg{i}"))
         joined = joined.select("group", *fixed)
 

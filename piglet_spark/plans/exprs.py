@@ -29,18 +29,24 @@ class Ctx:
     """Expression-compilation context.
 
     mode:
-      - "row":   plain relation; refs resolve against df columns.
+      - "row":   plain relation; refs resolve against df columns, and
+                 a bag is a materialized array<struct> column.
       - "fused": FOREACH over a lazy GROUP — aggregates compile to
                  groupBy().agg() columns over the *pre-group* df.
-      - "bag":   grouped relation materialized; bag is array<struct>.
+
+    ``fields`` binds column names to a higher-order-function lambda
+    element's fields (a nested FILTER over a bag array); ``df`` then
+    only supplies their types.
     """
 
     def __init__(self, df: DataFrame, mode: str = "row",
                  bag_name: Optional[str] = None,
                  key_cols: Optional[list[str]] = None,
                  udfs: Optional[dict[str, Callable]] = None,
-                 nested_bags: Optional[dict[str, Any]] = None):
+                 nested_bags: Optional[dict[str, Any]] = None,
+                 fields: Optional[dict[str, Column]] = None):
         self.df = df
+        self.fields = fields
         self.mode = mode
         self.bag_name = bag_name
         self.key_cols = key_cols or []
@@ -53,10 +59,10 @@ class Ctx:
 
     @property
     def columns(self) -> list[str]:
-        return self.df.columns
+        return self.df.columns if self.fields is None else list(self.fields)
 
     def col(self, name: str) -> Column:
-        return self.df[name]
+        return self.df[name] if self.fields is None else self.fields[name]
 
     def dtype(self, name: str) -> T.DataType:
         return self.df.schema[name].dataType
@@ -691,77 +697,25 @@ def _strip_nested_refs(e, bname: str, bag) -> A.Expr:
     return e
 
 
-_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-
-
-def _scalar_array_agg(name: str, arr: Column,
-                      elem_type: Optional[T.DataType] = None) -> Column:
-    """Aggregate over an array of scalars (the mapped form of a
-    correlated bag expression).
-
-    SUM of an empty/all-null array is 0, NOT null — deliberate
-    reference parity (CommonPigFuncs.scala:38 folds an empty Iterable
-    to 0) and consistency with the fused form's ``coalesce(sum, 0)``
-    (builtins.py AGGREGATES). With a statically-known integral
-    ``elem_type`` the sum accumulates and returns LONG, matching the
-    fused ``F.sum`` result type (r02 advice: the unconditional double
-    promotion silently changed an int bag's sum type by mode);
-    unknown/fractional types keep Pig's double escalation."""
-    if name in ("count", "count_star"):
-        return F.size(arr).cast("long")
-    if name == "sum":
-        if elem_type is not None and isinstance(elem_type, _INTEGRAL):
-            return F.aggregate(
-                arr, F.lit(0).cast("long"),
-                lambda a, x: a + F.coalesce(x.cast("long"),
-                                            F.lit(0).cast("long")))
-        return F.aggregate(arr, F.lit(0.0),
-                           lambda a, x: a + F.coalesce(x.cast("double"),
-                                                       F.lit(0.0)))
-    if name == "avg":
-        vals = F.filter(arr, lambda v: v.isNotNull())
-        return F.when(F.size(vals) > 0, F.aggregate(
-            vals, F.lit(0.0),
-            lambda a, x: a + x.cast("double")) / F.size(vals))
-    if name == "min":
-        return F.array_min(arr)
-    if name == "max":
-        return F.array_max(arr)
-    if name == "median":
-        return F.element_at(F.array_sort(arr),
-                            (F.floor(F.size(arr) / 2) + 1).cast("int"))
-    if name == "isempty":
-        return F.size(arr) == 0
-    if name == "nonempty":
-        return F.size(arr) > 0
-    if name == "approx_distinct":
-        return F.size(F.filter(F.array_distinct(arr),
-                               lambda v: v.isNotNull())).cast("long")
-    raise CompileError(
-        f"aggregate {name} not supported over a correlated bag expression")
-
-
 def compile_aggregate(expr: A.FuncCall, ctx: Ctx) -> Column:
     """Aggregate call: COUNT(A), SUM(A.x), AVG(A.f2)…
 
-    fused mode → Catalyst partial+final aggregation over pre-group
-    columns (the 100 TB path); bag mode → higher-order functions over
-    the materialized array.
+    fused mode → the aggregate's ``fused`` form, Catalyst partial+final
+    aggregation over pre-group columns (the 100 TB path); row mode →
+    its ``array`` form over the materialized bag.
     """
     name = expr.name.lower()
     spec = builtins.AGGREGATES[name]
+    arg = expr.args[0] if expr.args else None
 
     if ctx.mode == "fused":
-        if not expr.args or isinstance(expr.args[0], A.Star):
-            return spec.fused(F.lit(1)) if name not in (
-                "count", "count_star", "isempty", "nonempty") else spec.fused()
-        arg = expr.args[0]
+        if arg is None or isinstance(arg, A.Star):
+            return spec.fused(F.lit(1))
         if isinstance(arg, A.NamedField):
             if arg.name == ctx.bag_name:
                 # COUNT(A) over the whole bag
-                return spec.fused() if name in (
-                    "count", "count_star", "isempty", "nonempty"
-                ) else spec.fused(F.struct(*[ctx.col(c) for c in ctx.columns]))
+                return spec.fused() if name in builtins.SIZE_ONLY \
+                    else spec.fused(F.struct(*[ctx.col(c) for c in ctx.columns]))
             if arg.name in ctx.nested_bags:
                 return ctx.nested_bags[arg.name].aggregate(name, ctx)
         if isinstance(arg, A.DerefTuple) and \
@@ -790,16 +744,11 @@ def compile_aggregate(expr: A.FuncCall, ctx: Ctx) -> Column:
                         return F.count(F.when(pred, F.lit(1))) == 0
                     if name == "nonempty":
                         return F.count(F.when(pred, F.lit(1))) > 0
-                    return builtins.AGGREGATES[name].fused(
-                        F.when(pred, bag.src[fname]))
-            arr = bag.project(fname, ctx)
-            et = None
-            if bag.proj is None and isinstance(fname, str):
-                try:
-                    et = bag.src.schema[fname].dataType
-                except Exception:
-                    et = None
-            return _scalar_array_agg(name, arr, et)
+                    return spec.fused(F.when(pred, bag.src[fname]))
+            et = (bag.src.schema[fname].dataType
+                  if bag.proj is None and fname in bag.src.columns
+                  else None)
+            return spec.array(bag.project(fname, ctx), et)
         # composite expression over ONE nested bag that is a plain or
         # FILTER-only view of the group's rows (`SUM(f.x * 2)`):
         # rewrite bag-field derefs to pre-group columns, compile the
@@ -807,8 +756,7 @@ def compile_aggregate(expr: A.FuncCall, ctx: Ctx) -> Column:
         # partial aggregation (an attempt to compile the deref inline
         # would nest collect_list inside the aggregate, which Spark
         # rejects with NESTED_AGGREGATE_FUNCTION)
-        if arg is not None and not isinstance(
-                arg, (A.NamedField, A.DerefTuple, A.Star)):
+        if not isinstance(arg, (A.NamedField, A.DerefTuple)):
             bnames = _nested_bag_refs(arg, ctx)
             if bnames is not None and len(bnames) == 1:
                 bname = next(iter(bnames))
@@ -841,84 +789,40 @@ def compile_aggregate(expr: A.FuncCall, ctx: Ctx) -> Column:
             col = compile_expr(arg, ctx)
         finally:
             ctx.in_agg = prev
-        if name in ("count", "count_star"):
-            return F.count(F.lit(1))
         return spec.fused(col)
 
-    if ctx.mode == "bag" or ctx.mode == "row":
-        arg = expr.args[0] if expr.args else None
+    # row mode: bags are materialized array<struct> columns
+    if arg is None or isinstance(arg, A.Star):
+        raise CompileError(f"cannot compile aggregate {expr!r} in row mode")
+    bag_bases = set() if isinstance(arg, (A.NamedField, A.DerefTuple)) \
+        else _bag_bases_in(arg, ctx)
+    if len(bag_bases) == 1:
         # correlated bag expression: SUM((B.x != outer_col ? 1 : 0)) —
         # a COMPOSITE expression over exactly one bag compiles to
-        # transform(bag, elem → expr) with outer references, then a
-        # scalar-array aggregate
-        if arg is not None and not isinstance(
-                arg, (A.NamedField, A.DerefTuple, A.Star)):
-            bag_bases = _bag_bases_in(arg, ctx)
-            if len(bag_bases) == 1:
-                bname = next(iter(bag_bases))
-                # resolve via lineage-suffix matching like every other
-                # column ref — after joining grouped relations the bag
-                # column is named 'GA::A' while the AST says 'A' (r05)
-                bag_col = ctx.col(S.resolve_column(ctx.columns, bname))
+        # transform(bag, elem → expr) with outer references
+        bname = next(iter(bag_bases))
+        # resolve via lineage-suffix matching like every other column
+        # ref — after joining grouped relations the bag column is
+        # named 'GA::A' while the AST says 'A' (r05)
+        bag_col = ctx.col(S.resolve_column(ctx.columns, bname))
 
-                def _make_mapper(a, b):
-                    # exactly-one-arg closure: F.transform inspects
-                    # the callable's arity (a 2nd param would be
-                    # interpreted as the element index)
-                    def mapper(e):
-                        return compile_expr(a, ctx.with_bag_element(b, e))
-                    return mapper
+        def mapper(e):
+            # exactly one parameter: F.transform inspects the
+            # callable's arity (a 2nd would be the element index)
+            return compile_expr(arg, ctx.with_bag_element(bname, e))
 
-                mapped = F.transform(bag_col, _make_mapper(arg, bname))
-                return _scalar_array_agg(name, mapped,
-                                         static_dtype(arg, ctx))
-        if isinstance(arg, A.DerefTuple) and isinstance(arg.base, A.NamedField):
-            bag = compile_expr(arg.base, ctx)
-            fname = (arg.field.name if isinstance(arg.field, A.NamedField)
-                     else arg.field.pos)
-            dt = static_dtype(arg.base, ctx)
-            if isinstance(fname, int) and isinstance(dt, T.ArrayType) and \
-                    isinstance(dt.elementType, T.StructType):
-                fname = dt.elementType.names[fname]
-            out = spec.bag(bag, fname)
-            if name == "sum":
-                # bag SUM folds in double; cast back to long for
-                # integral fields so both compilation modes render
-                # and compare identically (r05: fused returned 5, the
-                # bag plan 5.0 — a silent type drift when the planner
-                # picks the other mode)
-                ft = None
-                if isinstance(dt, T.ArrayType) and \
-                        isinstance(dt.elementType, T.StructType) and \
-                        fname in dt.elementType.names:
-                    ft = dt.elementType[fname].dataType
-                if isinstance(ft, (T.ByteType, T.ShortType,
-                                   T.IntegerType, T.LongType)):
-                    out = out.cast("long")
-            return out
-        if arg is not None:
-            bag = compile_expr(arg, ctx)
-            if name in ("count", "count_star", "isempty", "nonempty"):
-                return spec.bag(bag)
-            # bag of single-field tuples → project field 0
-            dt = static_dtype(arg, ctx)
-            if isinstance(dt, T.ArrayType) and isinstance(dt.elementType,
-                                                          T.StructType):
-                return spec.bag(bag, dt.elementType.names[0])
-            # array of scalars
-            if name == "sum":
-                et = dt.elementType if isinstance(dt, T.ArrayType) else None
-                return _scalar_array_agg(name, bag, et)
-            if name == "avg":
-                return F.aggregate(bag, F.lit(0.0),
-                                   lambda a, x: a + x.cast("double")) / F.size(bag)
-            if name == "min":
-                return F.array_min(bag)
-            if name == "max":
-                return F.array_max(bag)
-            if name == "median":
-                return F.element_at(F.array_sort(bag),
-                                    (F.floor(F.size(bag) / 2) + 1).cast("int"))
-        raise CompileError(f"cannot compile aggregate {expr!r} in {ctx.mode} mode")
-
-    raise CompileError(f"aggregate {name} in unexpected mode {ctx.mode}")
+        return spec.array(F.transform(bag_col, mapper),
+                          static_dtype(arg, ctx))
+    if name in builtins.SIZE_ONLY and isinstance(arg, A.DerefTuple) and \
+            isinstance(static_dtype(arg.base, ctx), T.ArrayType):
+        arg = arg.base  # COUNT(B.x) is the size of bag B
+    # B.x projects the field out of bag B (its static type is the
+    # element field's); a whole bag of tuples folds its first field
+    arr, et = compile_expr(arg, ctx), static_dtype(arg, ctx)
+    if isinstance(et, T.ArrayType):
+        et = et.elementType
+        if isinstance(et, T.StructType) and name not in builtins.SIZE_ONLY:
+            f0 = et.names[0]
+            arr = F.transform(arr, lambda x: x[f0])
+            et = et[f0].dataType
+    return spec.array(arr, et)

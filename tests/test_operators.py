@@ -1211,3 +1211,116 @@ J = JOIN A BY (a, b), B BY (ga, gb);
 K = FILTER J BY mx > 4;
 """, "K")
     assert rows(df) == [(1, 1, 5, 1, 1, 9), (1, 1, 9, 1, 1, 9)]
+
+
+# Grouped-FOREACH regime equivalence (ROADMAP item 4, executor side).
+# Key 1 holds values and nulls, key 2 only values, key 3 only nulls;
+# B adds key 4, whose A side is empty under COGROUP. Values are unique
+# per key, so DISTINCT, ORDER+LIMIT and `> 0` change no value.
+_REGIME_A = [(1, 1, 5, 1.5), (1, 2, None, None), (1, 3, None, 2.5),
+             (2, 4, 1, 0.5), (2, 5, 2, 1.0), (2, 6, 3, 2.0),
+             (2, 7, 4, 4.0), (3, 8, None, None)]
+_REGIME_AGGS = ["COUNT", "SUM", "AVG", "MIN", "MAX", "MEDIAN"]
+_REGIME_TYPES = {"a": ["bigint", "bigint", "double", "int", "int", "int"],
+                 "d": ["bigint", "double", "double", "double", "double",
+                       "double"]}
+# nested chains over a projected bag: the bag drops null scalars
+_REGIME_CHAINS = {
+    "projection": [],
+    "distinct": ["u{c} = DISTINCT b{c};"],
+    "order_limit": ["s{c} = ORDER b{c} BY {c};", "u{c} = LIMIT s{c} 10;"],
+    "distinct_filter": ["s{c} = DISTINCT b{c};",
+                        "u{c} = FILTER s{c} BY {c} > 0;"],
+}
+
+
+def _regime_load(tmp_path):
+    a = tmp_path / "regime_a.csv"
+    a.write_text("".join(
+        ",".join("" if v is None else str(v) for v in r) + "\n"
+        for r in _REGIME_A))
+    b = tmp_path / "regime_b.csv"
+    b.write_text("1,10\n4,20\n")
+    return (f"A = LOAD '{a}' USING PigStorage(',') "
+            "AS (k:int, id:int, a:int, d:double);\n"
+            f"B = LOAD '{b}' USING PigStorage(',') AS (k:int, w:int);\n")
+
+
+def _regime_script(path):
+    if path in _REGIME_CHAINS:
+        nested = [f"b{c} = A.{c};" for c in "ad"] + [
+            s.format(c=c) for s in _REGIME_CHAINS[path] for c in "ad"]
+        bag = "u{c}" if _REGIME_CHAINS[path] else "b{c}"
+    else:
+        nested, bag = [], "A.{c} + 0" if path == "correlated" else "A.{c}"
+    gens = ", ".join(f"{agg}({bag.format(c=c)}) AS {agg.lower()}_{c}"
+                     for c in "ad" for agg in _REGIME_AGGS)
+    if path.startswith("cogroup"):
+        # a bare bag in GENERATE forces the materialized (bag) plan
+        extra = ", B" if path == "cogroup_bag" else ""
+        return ("C = COGROUP A BY k, B BY k;\n"
+                f"R = FOREACH C GENERATE group AS k, {gens}{extra};\n")
+    describe = "DESCRIBE G;\n" if path in ("bag", "correlated") else ""
+    if nested:
+        return (f"G = GROUP A BY k;\n{describe}R = FOREACH G {{ "
+                f"{' '.join(nested)} GENERATE group AS k, {gens}; }};\n")
+    return (f"G = GROUP A BY k;\n{describe}"
+            f"R = FOREACH G GENERATE group AS k, {gens};\n")
+
+
+def _regime_expected(path):
+    keys = [1, 2, 3, 4] if path.startswith("cogroup") else [1, 2, 3]
+    drops_nulls = path in _REGIME_CHAINS and bool(_REGIME_CHAINS[path])
+    out = []
+    for k in keys:
+        row = [k]
+        for i in (2, 3):
+            vals = [r[i] for r in _REGIME_A if r[0] == k]
+            nn = sorted(v for v in vals if v is not None)
+            row += [len(nn) if drops_nulls else len(vals), sum(nn),
+                    sum(nn) / len(nn) if nn else None,
+                    nn[0] if nn else None, nn[-1] if nn else None,
+                    nn[len(nn) // 2] if nn else None]
+        out.append(tuple(row))
+    return out
+
+
+@pytest.mark.parametrize("path", [
+    "fused", "bag", "correlated", "projection", "distinct", "order_limit",
+    "distinct_filter", "cogroup_fused", "cogroup_bag"])
+def test_grouped_foreach_regimes_schema_and_values(spark, tmp_path, path):
+    """Every plan of a grouped FOREACH aggregate returns the same
+    dtypes and values: the fused GROUP, the materialized bag (DESCRIBE
+    first), a correlated expression over the bag, nested chains and
+    COGROUP fused vs bag. Nested chains count non-null values only."""
+    eng = pg.PigEngine(spark)
+    eng.run(_regime_load(tmp_path) + _regime_script(path))
+    df = eng.df("R").drop("B")
+    want = [("k", "int")] + [(f"{agg.lower()}_{c}", t)
+                             for c in "ad"
+                             for agg, t in zip(_REGIME_AGGS,
+                                               _REGIME_TYPES[c])]
+    assert df.dtypes == want
+    assert rows(df) == _regime_expected(path)
+    if path in ("fused", "cogroup_fused"):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "collect_list(struct" not in plan
+
+
+@pytest.mark.parametrize("pred", [
+    "a IS NOT NULL", "(a IS NULL ? 0 : a) > 1", "(chararray)a != '5'"])
+def test_nested_filter_after_distinct_matches_leading_filter(
+        spark, tmp_path, pred):
+    """A nested FILTER after DISTINCT filters the bag array with the
+    full expression compiler; on distinct rows it keeps exactly what a
+    leading FILTER keeps."""
+    gen = "GENERATE group AS k, COUNT(f) AS n, SUM(f.a) AS s, MAX(f.d) AS m;"
+    eng = pg.PigEngine(spark)
+    eng.run(_regime_load(tmp_path) + f"""
+G = GROUP A BY k;
+N = FOREACH G {{ u = DISTINCT A; f = FILTER u BY {pred}; {gen} }};
+L = FOREACH G {{ f = FILTER A BY {pred}; {gen} }};
+""")
+    nested, leading = eng.df("N"), eng.df("L")
+    assert nested.dtypes == leading.dtypes
+    assert rows(nested) == rows(leading)

@@ -112,11 +112,11 @@ def test_ivf_crossjoin_is_broadcast(spark, entry):
 
 
 def test_correlated_sum_preserves_integral_type(spark, data_dir):
-    """r02 advice (exprs.py _scalar_array_agg): SUM over a correlated
-    bag expression of ints returns LONG like the fused F.sum path
-    (it used to promote to double, so the same script changed result
-    type with compilation mode), and SUM of an empty bag stays 0
-    (reference parity, CommonPigFuncs.scala:38)."""
+    """r02 advice (SUM's array fold in builtins.AGGREGATES): SUM over
+    a correlated bag expression of ints returns LONG like the fused
+    F.sum path (it used to promote to double, so the same script
+    changed result type with compilation mode), and SUM of an empty
+    bag stays 0 (reference parity, CommonPigFuncs.scala:38)."""
     import piglet_spark as pg
     from pyspark.sql import types as T
     eng = pg.PigEngine(spark)

@@ -7,6 +7,9 @@ value compares equal. This sweep compares the pandas dtypes of both
 sides for every registry query so oracle SQL can pin casts.
 
 Usage: python tools/check_type_parity.py [sf_dir]
+
+Runs on local[$SPARK_GRAFT_CPUS] (default: every core) with as many
+shuffle partitions.
 """
 from __future__ import annotations
 
@@ -26,8 +29,9 @@ def main():
         os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
 
-    spark = (SparkSession.builder.master("local[8]")
-             .config("spark.sql.shuffle.partitions", "8")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
+    spark = (SparkSession.builder.master(f"local[{cpus}]")
+             .config("spark.sql.shuffle.partitions", cpus)
              .config("spark.ui.enabled", "false")
              .config("spark.ui.showConsoleProgress", "false")
              .config("spark.driver.memory", "4g")

@@ -5,9 +5,11 @@ Usage: python tools/dump_plans.py <out_dir> <suffix> [sf_dir] [query ...]
 Writes <out_dir>/<query>_<suffix>.txt for each query (default: every
 registry query): the formatted physical plan with its session-numbered
 ids renumbered in order of first appearance. Spark numbers expression
-ids (``#123``, ``#45L``), exchange ``plan_id``s and scanned RDDs
-(``MapPartitionsRDD[23]``) per session, so two raw dumps of the same
-plan differ everywhere; renumbered, ``diff -r`` of two checkouts'
+ids (``#123``, ``#45L``), exchange ``plan_id``s, scanned RDDs
+(``MapPartitionsRDD[23]``) and PySpark's higher-order-function lambda
+variables (``x_12``, ``y_13``: one counter per process) as it goes, so
+two raw dumps of the same plan differ everywhere; renumbered,
+``diff -r`` of two checkouts'
 dumps (same suffix) shows only real plan changes, while distinct
 attributes keep distinct ids (``_id#3`` vs ``_id#9`` on the two sides
 of a join) as in the raw plan.
@@ -22,7 +24,8 @@ import sys
 from pyspark.sql import SparkSession
 
 _IDS = (re.compile(r"(#)(\d+)(?=L?\b)"), re.compile(r"(plan_id=)(\d+)"),
-        re.compile(r"(RDD\[)(\d+)(?=\])"))
+        re.compile(r"(RDD\[)(\d+)(?=\])"),
+        re.compile(r"(\b[xyz]_)(\d+)\b"))
 
 
 def normalize(plan: str) -> str:
