@@ -2,47 +2,52 @@
 
 The reference's Zeppelin surface returns generated backend code as a
 string (api/PigletInterpreterAPI.createCodeFromInput,
-api/PigletInterpreterAPI.scala:30-49); this is the rebuild's analogue:
-``PigEngine.to_code(script)`` returns a runnable, self-contained
-PySpark program for the plan, for user debugging and for diffing
-engine behavior against first-principles DataFrame code.
+api/PigletInterpreterAPI.scala:30-49); ``PigEngine.to_code(script)``
+is the analogue: a runnable PySpark program for the plan, for
+debugging and for diffing engine behavior against DataFrame code.
 
-Scope: the classic relational core (LOAD PigStorage/PigStream — typed
-or schemaless — /TextLoader/Parquet, FILTER, FOREACH — projections,
-scalar expressions, tuple/bag/map constructors, grouped aggregation
-incl. nested-body `s = Rel.f; u = DISTINCT s; COUNT(u)` fused to
-count_distinct, FLATTEN(TOKENIZE) — GROUP BY/ALL incl. raw
-GROUP-result STORE in Pig bag format, JOIN incl. replicated, CROSS,
-ACCUMULATE, DISTINCT, LIMIT, ORDER BY, UNION, SAMPLE, SPLIT INTO,
-STORE, DUMP), plus — r06 — SPATIAL_FILTER / SPATIAL_JOIN, the
-geometry/matrix constructors, and BGP_FILTER. Those emit calls into
-the library's Column-builder runtime (`piglet_spark.functions.spatial`
-/ `.matrix`, `piglet_spark.sources.storage.pig_format_rows`) — the
-same linkage the reference's generated Scala has to its `sparklib`
-backend jar (generated code there imports
-`dbis.piglet.backends.{SchemaClass, Record}` etc., codegen/scala_lang
-templates), so generated programs need piglet_spark importable exactly
-as the reference's need sparklib on the classpath; the relational core
-stays dependency-free PySpark. Operators outside this subset
-(streaming, CEP, RDF load, datapipe STREAM THROUGH, …) raise
-:class:`CodegenUnsupported` with the operator named — run those
-through the engine directly. The engine itself interprets every
-operator; the emitted-code surface is a debugging companion, not a
-second execution path. tests/test_codegen_conformance.py pins the
-exact supported / unsupported partition over the reference's
-integration scripts.
+Runtime linkage: generated code calls the engine's own function
+library, as the reference's generated Scala links its `sparklib` jar.
+A function call emits ``SCALARS[name](…)`` through the engine's
+argument rule (``exprs.scalar_args``), an aggregate
+``AGGREGATES[name].fused(…)`` or, over a nested FILTER bag,
+``filter_aggregate(…)`` (``piglet_spark.functions.builtins``); a
+PigStorage STORE emits ``piglet_spark.sources.storage.pig_format_rows``;
+casts and LOAD schemas take their types from ``plans/schema.py``. So a
+function, aggregate, type or output format has one definition, and the
+generated program needs piglet_spark importable. Imports are emitted
+only when used: a program with no function call and no STORE is plain
+PySpark.
+
+Scope: LOAD (PigStorage/PigStream, TextLoader, Parquet, RDFLOAD),
+FILTER, FOREACH (expressions, builtin and embedded `<% %>` functions,
+constructors, FLATTEN(TOKENIZE)), GROUP BY/ALL with a grouped FOREACH
+of aggregates and expressions over them (nested `u = DISTINCT Rel.f`
+and `f = FILTER Rel BY p` bodies), ACCUMULATE, JOIN incl. replicated,
+CROSS, DISTINCT, LIMIT, ORDER BY, UNION, SAMPLE, SPLIT INTO, WINDOW
+RANGE over bounded input, SPATIAL_FILTER / SPATIAL_JOIN, BGP_FILTER,
+STREAM THROUGH a registered datapipe op, STORE, DUMP. Anything else
+(COGROUP, CUBE, RANK, ZIP, set operators, CEP, salted JOIN, …) raises
+:class:`CodegenUnsupported` naming what is missing; the engine runs
+every operator. tests/test_codegen.py::test_codegen_registry_sweep
+pins which Pig registry queries emit (equal rows and dtypes to the
+engine) and which refuse; tests/test_codegen_conformance.py does the
+same over the reference's integration scripts.
 
 DUMP is emitted as ``print(tuple(row))`` per row — plain tuple
-rendering, not Pig's ``{bag}``/``(tuple)`` text format (that
-formatting lives in sources/storage.py and is display-only; the
-DataFrame contents are identical).
+rendering, not Pig's ``{bag}``/``(tuple)`` text format.
 """
 
 from __future__ import annotations
 
 import re
+from typing import Optional
 
+from .functions import builtins
 from .plans import ast as A
+from .plans import schema as S
+from .plans.exprs import (CompileError, _is_stringy, iter_expr, map_expr,
+                          scalar_args)
 
 __all__ = ["CodegenUnsupported", "to_code"]
 
@@ -77,30 +82,6 @@ def _r(df, name):
     raise ValueError(f"cannot resolve field {name!r} among {df.columns}")
 
 
-def _pig_fmt(col, dt):
-    """Pig text rendering: tuples `(a,b)`, bags `{(t1),(t2)}`, maps
-    `[k#v]`, null -> empty string — complex types included, so a NULL
-    bag keeps its delimiter slot in concat_ws output."""
-    from pyspark.sql import types as _T
-    out = None
-    if isinstance(dt, _T.StructType):
-        parts = [_pig_fmt(col[f.name], f.dataType) for f in dt.fields]
-        out = F.concat(F.lit("("), F.concat_ws(",", *parts), F.lit(")"))
-    elif isinstance(dt, _T.ArrayType):
-        inner = F.transform(col, lambda x: _pig_fmt(x, dt.elementType))
-        out = F.concat(F.lit("{"), F.array_join(inner, ","), F.lit("}"))
-    elif isinstance(dt, _T.MapType):
-        ent = F.transform(
-            F.map_entries(col),
-            lambda e: F.concat(e["key"].cast("string"), F.lit("#"),
-                               F.coalesce(e["value"].cast("string"),
-                                          F.lit(""))))
-        out = F.concat(F.lit("["), F.array_join(ent, ","), F.lit("]"))
-    if out is not None:
-        return F.when(col.isNull(), F.lit("")).otherwise(out)
-    return F.coalesce(col.cast("string"), F.lit(""))
-
-
 def _pig_div(df, l, r):
     """Pig division: int/int truncates toward zero (Java semantics,
     reference ArithmeticExpr int typing); any other operand type is
@@ -113,57 +94,23 @@ def _pig_div(df, l, r):
     if lt in _ints and rt in _ints:
         return res.cast("bigint" if "bigint" in (lt, rt) else "int")
     return res
-
-
-def _pig_store(df, delim, path):
-    cols = [_pig_fmt(df[c], df.schema[c].dataType) for c in df.columns]
-    (df.select(F.concat_ws(delim, *cols).alias("value"))
-       .write.mode("overwrite").text(path))
-
 '''
 
-# Pig primitive type → Spark SQL cast target (schema.py parity:
-# bytearray is Pig's "unknown" type and maps to STRING like the
-# engine and the reference's codegen, ScalaEmitter.scala:20 — mapping
-# it to binary made untyped LOAD AS fields emit a CSV schema Spark
-# rejects, diverging from what the engine reads)
-_PIG_TYPES = {
-    "int": "int", "long": "bigint", "float": "float", "double": "double",
-    "chararray": "string", "bytearray": "string", "boolean": "boolean",
-    "datetime": "timestamp", "biginteger": "bigint",
-    "bigdecimal": "decimal(38,18)",
+# runtime-library names a generated program may use → the import
+# that binds them (emitted only for the names it uses)
+_RUNTIME = {
+    "SCALARS": "from piglet_spark.functions.builtins import SCALARS",
+    "AGGREGATES": "from piglet_spark.functions.builtins import AGGREGATES",
+    "filter_aggregate": ("from piglet_spark.functions.builtins "
+                         "import filter_aggregate"),
+    "pig_format_rows": ("from piglet_spark.sources.storage "
+                        "import pig_format_rows"),
+    "_rt_sp": "from piglet_spark.functions import spatial as _rt_sp",
+    "datapipe_ops": ("from piglet_spark.datapipe.registry "
+                     "import datapipe_ops"),
 }
-
-# scalar Pig funcs emittable as one F-expression (functions/builtins.py
-# holds the full library; codegen covers the classic core)
-_SCALARS = {
-    "upper": "F.upper({0})",
-    "lower": "F.lower({0})",
-    "trim": "F.trim({0})",
-    "strlen": "F.length({0})",
-    "size": "F.size({0})",
-    "abs": "F.abs({0})",
-    "round": "F.round({0})",
-    "floor": "F.floor({0})",
-    "ceil": "F.ceil({0})",
-    "sqrt": "F.sqrt({0})",
-    "concat": "F.concat({args})",
-    "startswith": "{0}.startswith({1})",
-    "endswith": "{0}.endswith({1})",
-    "strcontains": "{0}.contains({1})",
-    "getyear": "F.year({0})",
-    "getmonth": "F.month({0})",
-    "getday": "F.dayofmonth({0})",
-    "gethour": "F.hour({0})",
-    # bag of 1-field tuples, split on [, "] dropping empties
-    # (builtins._tokenize parity) → renders {{(Mary),(had)}}
-    "tokenize": ("F.transform(F.filter(F.split({0}, '[, \"]'), "
-                 "lambda _x: _x != ''), "
-                 "lambda _x: F.struct(_x.alias('token')))"),
-}
-
-_AGGS = {"count": "F.count", "sum": "F.sum", "avg": "F.avg",
-         "min": "F.min", "max": "F.max"}
+# module-level names of a generated program no Pig alias may shadow
+_RESERVED = {"spark", "F", "SparkSession", "_r", "_pig_div", *_RUNTIME}
 
 
 def _pyvar(alias: str, used: dict[str, str]) -> str:
@@ -172,9 +119,7 @@ def _pyvar(alias: str, used: dict[str, str]) -> str:
     if alias in used:
         return used[alias]
     v = re.sub(r"\W", "_", alias)
-    if not v or v[0].isdigit() or keyword.iskeyword(v) \
-            or v in ("spark", "F", "_r", "_pig_fmt", "_pig_store",
-                     "_pig_div"):
+    if not v or v[0].isdigit() or keyword.iskeyword(v) or v in _RESERVED:
         # Pig aliases may be Python reserved words (`in`, `for`, …) —
         # `in = spark.read…` is a SyntaxError in the emitted module
         v = "_" + v
@@ -188,23 +133,24 @@ def _lit(value) -> str:
     return f"F.lit({value!r})"
 
 
-# spatial predicates/constructors emitted against the runtime module
-# (piglet_spark.functions.spatial) — aliased _rt_sp in generated code
-_SPATIAL_FNS = {
-    "geometry": "geometry", "contains": "contains",
-    "containedby": "containedby", "intersects": "intersects",
-    "st_contains": "contains", "st_containedby": "containedby",
-    "st_intersects": "intersects", "st_distance": "distance",
-}
-# matrix constructors: prefix → (element type, sparse?)
-_MATRIX_FNS = {"dimatrix": ("int", False), "ddmatrix": ("double", False),
-               "simatrix": ("int", True), "sdmatrix": ("double", True)}
+def _bag(src: str, rel: str) -> str:
+    """The per-group bag of ``rel``'s tuples (a GroupedRelation's)."""
+    return (f"F.collect_list(F.struct(*[F.col(_c) for _c in "
+            f"{src}.columns])).alias({rel!r})")
+
+
+def _strip(e: A.Expr, bags: set[str]) -> A.Expr:
+    """Rewrite ``bag.field`` derefs of the given bags to plain field
+    refs — an aggregate's argument reads the pre-group rows."""
+    return map_expr(e, lambda n: n.field if isinstance(n, A.DerefTuple)
+                    and isinstance(n.base, A.NamedField)
+                    and n.base.name in bags else None)
 
 
 class _Emitter:
     def __init__(self):
         self.lines: list[str] = []
-        self.rt_imports: set[str] = set()  # runtime-library imports
+        self.runtime: set[str] = set()  # _RUNTIME names the code uses
         self.vars: dict[str, str] = {}  # pig alias → python var
         # alias → pending Group info (src alias, key exprs) — GROUP is
         # lazy in the engine (GroupedRelation) and in generated code
@@ -213,7 +159,16 @@ class _Emitter:
         # embedded `<% %>` functions: pig name → generated reference
         # (either the raw column-builder name or an F.udf wrapper var)
         self.embed_fns: dict[str, str] = {}
+        # while a grouped FOREACH or ACCUMULATE generator compiles:
+        # (bag relation, pre-group DataFrame var, nested-body env) —
+        # fields are then readable only inside an aggregate's argument
+        self.grp: Optional[tuple[str, str, dict]] = None
         self.tmp = 0
+
+    def rt(self, name: str) -> str:
+        """A runtime-library name, recording its import."""
+        self.runtime.add(name)
+        return name
 
     def fresh(self) -> str:
         """Temp variable no Pig alias can clobber: a script alias
@@ -234,6 +189,11 @@ class _Emitter:
     def expr(self, e: A.Expr, dfv: str) -> str:
         """Python source of a Column for expression `e` over DataFrame
         variable `dfv`."""
+        if self.grp is not None and isinstance(
+                e, (A.NamedField, A.PositionalField, A.DerefTuple, A.Star)):
+            raise CodegenUnsupported(
+                "grouped FOREACH generators must be aggregates, "
+                "expressions over them, or `group`")
         if isinstance(e, A.NamedField):
             return f"F.col(_r({dfv}, {e.full!r}))"
         if isinstance(e, A.PositionalField):
@@ -241,7 +201,6 @@ class _Emitter:
         if isinstance(e, A.Literal):
             return _lit(e.value)
         if isinstance(e, A.BinOp):
-            from .plans.exprs import _is_stringy
             if e.op == "+" and (_is_stringy(e.left)
                                 or _is_stringy(e.right)):
                 # `"POINT(" + lat + " " + lon` — `+` with a string
@@ -286,81 +245,24 @@ class _Emitter:
             return (f"F.when({c}, {self.expr(e.then, dfv)})"
                     f".when(~({c}), {self.expr(e.els, dfv)})")
         if isinstance(e, A.CastExpr):
-            t = _PIG_TYPES.get(str(e.pig_type))
-            if t is None:
-                raise CodegenUnsupported(f"cast to {e.pig_type!r}")
+            t = S.pig_to_spark(e.pig_type).simpleString()
             return f"{self.expr(e.expr, dfv)}.cast({t!r})"
         if isinstance(e, A.FuncCall):
             name = e.name.lower()
             if name in self.embed_fns:
                 args = ", ".join(self.expr(a, dfv) for a in e.args)
                 return f"{self.embed_fns[name]}({args})"
-            if name in _SPATIAL_FNS:
-                self.rt_imports.add(
-                    "from piglet_spark.functions import spatial as _rt_sp")
-                args = ", ".join(self.expr(a, dfv) for a in e.args)
-                return f"_rt_sp.{_SPATIAL_FNS[name]}({args})"
-            if name in _MATRIX_FNS:
-                et, sparse = _MATRIX_FNS[name]
-                self.rt_imports.add(
-                    "from piglet_spark.functions import matrix as _rt_mx")
-                raw = list(e.args)
-                # bag-constructor third arg unrolls to the elements
-                # (exprs.py matrix-constructor convention)
-                if len(raw) == 3 and isinstance(raw[2], A.BagCons):
-                    raw = raw[:2] + raw[2].exprs
-                if len(raw) < 2 or not all(
-                        isinstance(a, A.Literal) for a in raw[:2]):
-                    raise CodegenUnsupported(
-                        f"{e.name} needs literal row/col dims")
-                dims = f"{raw[0].value!r}, {raw[1].value!r}"
-                vals = ", ".join(self.expr(a, dfv) for a in raw[2:])
-                return (f"_rt_mx.matrix_cons({et!r}, {sparse!r}, "
-                        f"{dims}, {vals})")
-            if name == "substring":
-                # Pig SUBSTRING(s, start[, stop]): 0-based half-open
-                # (builtins._substring parity)
-                a0 = self.expr(e.args[0], dfv)
-                start = self.expr(e.args[1], dfv)
-                if len(e.args) == 2:
-                    return (f"F.substring({a0}, ({start}).cast('int')"
-                            f" + F.lit(1), F.lit(2147483647))")
-                stop = self.expr(e.args[2], dfv)
-                return (f"F.substring({a0}, ({start}).cast('int') + "
-                        f"F.lit(1), (({stop}) - ({start})).cast('int'))")
-            if name == "indexof":
-                needle = e.args[1]
-                if not isinstance(needle, A.Literal) or \
-                        not isinstance(needle.value, str):
-                    raise CodegenUnsupported(
-                        "INDEXOF needle must be a string literal")
-                return (f"(F.instr({self.expr(e.args[0], dfv)}, "
-                        f"{needle.value!r}) - 1)")
-            if name == "json_get":
-                p = e.args[1]
-                if not isinstance(p, A.Literal) or \
-                        not isinstance(p.value, str):
-                    raise CodegenUnsupported(
-                        "JSON_GET path must be a string literal")
-                path = p.value if p.value.startswith("$") \
-                    else f"$.{p.value}"
-                return (f"F.get_json_object("
-                        f"{self.expr(e.args[0], dfv)}, {path!r})")
-            if name == "replace":
-                pat, rep = e.args[1], e.args[2]
-                if not all(isinstance(x, A.Literal) and
-                           isinstance(x.value, str) for x in (pat, rep)):
-                    raise CodegenUnsupported(
-                        "REPLACE pattern/replacement must be string "
-                        "literals")
-                return (f"F.regexp_replace({self.expr(e.args[0], dfv)},"
-                        f" {pat.value!r}, {rep.value!r})")
-            tmpl = _SCALARS.get(name)
-            if tmpl is None:
+            if builtins.is_aggregate(name):
+                return self.aggregate(e)
+            if name not in builtins.SCALARS:
                 raise CodegenUnsupported(
-                    f"function {e.name} not in the codegen subset")
-            args = [self.expr(a, dfv) for a in e.args]
-            return tmpl.format(*args, args=", ".join(args))
+                    f"function {e.name} is not a builtin")
+            try:
+                args = scalar_args(e, lambda a: self.expr(a, dfv),
+                                   lit=_lit, raw=repr)
+            except CompileError as err:
+                raise CodegenUnsupported(str(err)) from None
+            return f"{self.rt('SCALARS')}[{name!r}]({', '.join(args)})"
         if isinstance(e, A.TupleCons):
             parts = ", ".join(self.expr(x, dfv) for x in e.exprs)
             return f"F.struct({parts})"
@@ -417,10 +319,7 @@ class _Emitter:
                 if not isinstance(f.pig_type, str):
                     raise CodegenUnsupported(
                         f"complex-typed load field {f.name!r}")
-                t = _PIG_TYPES.get(f.pig_type)
-                if t is None:
-                    raise CodegenUnsupported(
-                        f"load field type {f.pig_type!r}")
+                t = S.pig_to_spark(f.pig_type).simpleString()
                 parts.append(f"`{f.name}` {t}")
             ddl = ", ".join(parts)
             self.lines += [
@@ -514,12 +413,18 @@ class _Emitter:
                 "nested FOREACH body over a non-grouped relation")
         src = self._df(op.rel)
         v = _pyvar(op.out, self.vars)
-        flats = [g for g in op.gens if g.flatten]
-        if flats:
-            if len(op.gens) != 1:
-                raise CodegenUnsupported(
-                    "FLATTEN mixed with other generators")
-            self._flatten_foreach(op, src, v)
+        if any(g.flatten for g in op.gens):
+            g = op.gens[0]
+            if len(op.gens) != 1 or not (
+                    isinstance(g.expr, A.FuncCall) and len(g.expr.args) == 1
+                    and g.expr.name.lower() == "tokenize"):
+                raise CodegenUnsupported("FLATTEN is emitted for a lone "
+                                         "FLATTEN(TOKENIZE(f)) only")
+            # one output row per token
+            self.lines.append(
+                f"{v} = {src}.select(F.explode(F.transform("
+                f"{self.expr(g.expr, src)}, lambda _t: _t['token']))"
+                f".alias({(g.alias or 'token')!r}))")
             return
         items = []
         used: set[str] = set()
@@ -538,57 +443,32 @@ class _Emitter:
                          f".alias({name!r})")
         self.lines.append(f"{v} = {src}.select({', '.join(items)})")
 
-    def _flatten_foreach(self, op: A.Foreach, src: str, v: str) -> None:
-        g = op.gens[0]
-        e = g.expr
-        name = g.alias or "token"
-        if (isinstance(e, A.FuncCall) and e.name.lower() == "tokenize"
-                and len(e.args) == 1):
-            # FLATTEN(TOKENIZE(f)) — split on [, "] dropping empties
-            # (builtins._tokenize parity), one output row per token
-            arg = self.expr(e.args[0], src)
-            self.lines += [
-                f"{v} = {src}.select(F.explode(F.filter(F.split({arg}, "
-                f"'[, \"]'), lambda _x: _x != '')).alias({name!r}))",
-            ]
-            return
-        raise CodegenUnsupported(
-            "FLATTEN is emitted for TOKENIZE bags only")
-
     def _grouped_foreach(self, op: A.Foreach) -> None:
         src_rel, keys = self.groups[op.rel]
         src = self._df(src_rel)
         # nested body: resolve `s = Rel.field; u = DISTINCT s;` and
         # `f = FILTER Rel BY pred;` chains to (field-expr, distinct?,
         # filter-pred?) so COUNT(u)/COUNT(f)/SUM(f.x) fuse to
-        # count_distinct / agg(when(pred, x)) — the engine's
-        # NestedBag fusions
+        # count_distinct / filter_aggregate — the engine's NestedBag
+        # fusions
         nested: dict[str, tuple[Optional[A.Expr], bool,
                                 Optional[A.Expr]]] = {}
         for n in (op.nested_ops or []):
             ex = n.expr
-            if isinstance(ex, tuple) and len(ex) == 2 \
-                    and ex[0] == "distinct" \
-                    and isinstance(ex[1], A.NamedField) \
-                    and ex[1].name in nested:
-                nested[n.out] = (nested[ex[1].name][0], True, None)
-            elif isinstance(ex, tuple) and len(ex) == 3 \
-                    and ex[0] == "filter" \
-                    and isinstance(ex[1], A.NamedField) \
-                    and ex[1].name == src_rel:
+            kind, base = ex[:2] if isinstance(ex, tuple) else (None, None)
+            if not isinstance(base, A.NamedField):
+                base = None
+            if kind == "distinct" and base and base.name in nested:
+                nested[n.out] = (nested[base.name][0], True, None)
+            elif kind == "filter" and base and base.name == src_rel:
                 nested[n.out] = (None, False, ex[2])
-            elif isinstance(ex, A.Expr):
-                stripped = self._strip_bag(ex, src_rel)
-                if stripped is ex and not isinstance(ex, A.NamedField):
-                    raise CodegenUnsupported(
-                        "nested FOREACH body (bag-projection, "
-                        "DISTINCT, and whole-relation FILTER only)")
-                nested[n.out] = (stripped, False, None)
+            elif isinstance(ex, A.Expr) and (isinstance(ex, A.NamedField)
+                                             or _strip(ex, {src_rel}) != ex):
+                nested[n.out] = (_strip(ex, {src_rel}), False, None)
             else:
                 raise CodegenUnsupported(
                     "nested FOREACH body (bag-projection, DISTINCT, "
                     "and whole-relation FILTER only)")
-        self._nested_env = nested
         v = _pyvar(op.out, self.vars)
         # the generator projecting `group` names the key column (Pig:
         # `group AS flag` renames it; absent an alias it stays `group`)
@@ -596,18 +476,11 @@ class _Emitter:
         for g in op.gens:
             if isinstance(g.expr, A.NamedField) and g.expr.name == "group":
                 key_name = g.alias or "group"
-        if not keys:  # GROUP ALL
-            gb = f"F.lit('all').alias({key_name!r})"
-        elif len(keys) == 1:
-            gb = f"{self.expr(keys[0], src)}.alias({key_name!r})"
-        else:
-            parts = []
-            for k in keys:
-                if not isinstance(k, A.NamedField):
-                    raise CodegenUnsupported(
-                        "composite group keys must be named fields")
-                parts.append(f"{self.expr(k, src)}.alias({k.name!r})")
-            gb = f"F.struct({', '.join(parts)}).alias({key_name!r})"
+        if len(keys) > 1 and not all(isinstance(k, A.NamedField)
+                                     for k in keys):
+            raise CodegenUnsupported(
+                "composite group keys must be named fields")
+        gb = self._group_key(keys, src, key_name)
         def _group_deref(e: A.Expr) -> Optional[str]:
             # `group.f` — a component of a composite group key (or the
             # single key itself when names match)
@@ -637,11 +510,22 @@ class _Emitter:
                     raise CodegenUnsupported(
                         "`*` in a grouped FOREACH must be the first "
                         "generator")
-                aggs.append(
-                    f"F.collect_list(F.struct(*[F.col(_c) for _c in "
-                    f"{src}.columns])).alias({src_rel!r})")
+                aggs.append(_bag(src, src_rel))
                 continue
-            aggs.append(self._agg_item(g, src_rel, src, i, keys))
+            e, name = g.expr, self._gen_name(g, i)
+            if isinstance(e, A.DerefTuple) \
+                    and isinstance(e.base, A.NamedField) \
+                    and e.base.name == src_rel \
+                    and isinstance(e.field, A.NamedField) \
+                    and any(isinstance(k, A.NamedField)
+                            and k.name == e.field.name for k in keys):
+                # bag projection of a grouping key (`A.f1` under GROUP
+                # A BY f1): constant within the group — rendered as the
+                # key value (reference truth grouping2.data)
+                col = f"F.first({self.expr(e.field, src)})"
+            else:
+                col = self._expr_in((src_rel, src, nested), e, src)
+            aggs.append(f"{col}.alias({name!r})")
         if aggs:
             self.lines.append(
                 f"{v} = {src}.groupBy({gb}).agg({', '.join(aggs)})")
@@ -649,27 +533,34 @@ class _Emitter:
             # generators project only the key — GROUP+FOREACH collapses
             # to DISTINCT over the key expression
             self.lines.append(f"{v} = {src}.select({gb}).distinct()")
-        if op.gens and not star \
-                and (derefs
-                     or not (isinstance(op.gens[0].expr, A.NamedField)
-                             and op.gens[0].expr.name == "group")):
-            # Pig projects columns in generator order; groupBy() puts
-            # the key first — reorder (and extract group.<field> key
-            # components) when the output shape differs
+        if not star:
+            # Pig projects columns in generator order (groupBy() puts
+            # the key first); group.<field> extracts a key component
             cols = []
             for i, g in enumerate(op.gens):
                 f = _group_deref(g.expr)
-                if f is not None:
-                    name = g.alias or f
-                    if len(keys) == 1 and isinstance(keys[0], A.NamedField) \
-                            and keys[0].name == f:
-                        cols.append(f"F.col({key_name!r}).alias({name!r})")
-                    else:
-                        cols.append(f"F.col({key_name!r})[{f!r}]"
-                                    f".alias({name!r})")
-                else:
+                if f is None:
                     cols.append(f"F.col({self._gen_name(g, i)!r})")
+                    continue
+                key = f"F.col({key_name!r})"
+                if not (len(keys) == 1 and isinstance(keys[0], A.NamedField)
+                        and keys[0].name == f):
+                    key += f"[{f!r}]"
+                cols.append(f"{key}.alias({(g.alias or f)!r})")
             self.lines.append(f"{v} = {v}.select({', '.join(cols)})")
+
+    def _group_key(self, keys: list[A.Expr], src: str, name: str) -> str:
+        """The groupBy column ``name`` of GROUP BY ``keys``: a constant
+        for GROUP ALL, a struct of the keys (named fields keep their
+        names) for a composite key."""
+        if not keys:
+            return f"F.lit('all').alias({name!r})"
+        if len(keys) == 1:
+            return f"{self.expr(keys[0], src)}.alias({name!r})"
+        parts = ", ".join(self.expr(k, src) + (
+            f".alias({k.name!r})" if isinstance(k, A.NamedField) else "")
+            for k in keys)
+        return f"F.struct({parts}).alias({name!r})"
 
     def _gen_name(self, g: A.GenExpr, i: int) -> str:
         """Output column name — the executor's _default_name rules:
@@ -683,171 +574,61 @@ class _Emitter:
             return e.field.name
         return f"_{i}"
 
-    def _strip_bag(self, e: A.Expr, src_rel: str) -> A.Expr:
-        """Rewrite `Rel.field` bag derefs to plain pre-group field refs
-        (the fused-aggregation view: aggregate args evaluate over the
-        ungrouped rows)."""
-        import dataclasses
-        if isinstance(e, A.DerefTuple) and isinstance(e.base, A.NamedField) \
-                and e.base.name == src_rel:
-            return e.field
-        if dataclasses.is_dataclass(e):
-            kw, changed = {}, False
-            for f in dataclasses.fields(e):
-                v = getattr(e, f.name)
-                if isinstance(v, A.Expr):
-                    nv = self._strip_bag(v, src_rel)
-                    changed |= nv is not v
-                    kw[f.name] = nv
-                elif isinstance(v, list) and any(
-                        isinstance(x, A.Expr) for x in v):
-                    nv = [self._strip_bag(x, src_rel)
-                          if isinstance(x, A.Expr) else x for x in v]
-                    changed |= any(a is not b for a, b in zip(v, nv))
-                    kw[f.name] = nv
-            if changed:
-                return dataclasses.replace(e, **kw)
-        return e
+    def _expr_in(self, grp: Optional[tuple], e: A.Expr, src: str) -> str:
+        """``self.expr(e, src)`` with ``self.grp`` set to ``grp``."""
+        prev, self.grp = self.grp, grp
+        try:
+            return self.expr(e, src)
+        finally:
+            self.grp = prev
 
-    def _agg_item(self, g: A.GenExpr, src_rel: str, src: str, i: int,
-                  keys: list[A.Expr]) -> str:
-        e = g.expr
-        if isinstance(e, A.DerefTuple) and isinstance(e.base, A.NamedField) \
-                and e.base.name == src_rel \
-                and isinstance(e.field, A.NamedField) \
-                and any(isinstance(k, A.NamedField)
-                        and k.name == e.field.name for k in keys):
-            # bag projection of a grouping key (`A.f1` under GROUP A BY
-            # f1): constant within the group — rendered as the key
-            # value (reference truth grouping2.data), F.first is exact
-            name = self._gen_name(g, i)
-            return (f"F.first({self.expr(e.field, src)})"
-                    f".alias({name!r})")
-        if not isinstance(e, A.FuncCall):
+    def aggregate(self, e: A.FuncCall) -> str:
+        """``AGGREGATES[name].fused(…)`` over the pre-group rows — the
+        engine's fused path (exprs.compile_aggregate), nested-bag
+        fusions included."""
+        if self.grp is None:
+            raise CodegenUnsupported(f"aggregate {e.name} outside a "
+                                     "grouped FOREACH or ACCUMULATE")
+        if len(e.args) > 1:
             raise CodegenUnsupported(
-                "grouped FOREACH generators must be aggregates or `group`")
-        fn = _AGGS.get(e.name.lower())
-        if fn is None and e.name.lower() == "round" and \
-                len(e.args) >= 1 and isinstance(e.args[0], A.FuncCall) \
-                and _AGGS.get(e.args[0].name.lower()):
-            # scalar ROUND wrapped around an aggregate —
-            # ROUND(AVG(P.k), 6) — delegates the inner aggregate and
-            # wraps the emitted Column (engine parity: exprs.py
-            # compiles the same shape)
-            if len(e.args) > 2:
-                raise CodegenUnsupported(
-                    "ROUND takes at most 2 arguments")
-            scale = 0
-            if len(e.args) == 2:
-                if not isinstance(e.args[1], A.Literal) or \
-                        not isinstance(e.args[1].value, int) or \
-                        isinstance(e.args[1].value, bool):
-                    raise CodegenUnsupported(
-                        "ROUND scale must be an integer literal")
-                scale = e.args[1].value
-            inner = A.GenExpr(e.args[0], g.alias)
-            inner_code = self._agg_item(inner, src_rel, src, i, keys)
-            body, _, al = inner_code.rpartition(".alias(")
-            return f"F.round({body}, {scale}).alias({al}"
-        if fn is None:
-            raise CodegenUnsupported(
-                f"aggregate {e.name} not in the codegen subset")
-        name = self._gen_name(g, i)
-        nested = getattr(self, "_nested_env", {})
-        if len(e.args) == 1 and isinstance(e.args[0], A.NamedField) \
-                and e.args[0].name in nested:
-            fld, distinct, pred = nested[e.args[0].name]
-            if pred is not None:
-                # COUNT(f) over a FILTER bag fuses to a conditional
-                # count — Catalyst partial aggregation, the engine's
-                # NestedBag.filter_pred path
-                if e.name.lower() != "count":
-                    raise CodegenUnsupported(
-                        f"{e.name} over a FILTER bag needs a field "
-                        "(e.g. SUM(f.x))")
-                return (f"F.count(F.when({self.expr(pred, src)}, "
-                        f"F.lit(1))).alias({name!r})")
-            col = self.expr(fld, src)
-            if distinct:
-                if e.name.lower() != "count":
-                    raise CodegenUnsupported(
-                        f"{e.name} over a DISTINCT nested bag")
-                return f"F.count_distinct({col}).alias({name!r})"
-            return f"{fn}({col}).alias({name!r})"
-        if len(e.args) == 1 and isinstance(e.args[0], A.DerefTuple) \
-                and isinstance(e.args[0].base, A.NamedField) \
-                and e.args[0].base.name in nested \
-                and nested[e.args[0].base.name][2] is not None:
-            # SUM(f.x)-style aggregate over a FILTER bag →
-            # agg(when(pred, x)); SUM of a filtered-empty group is 0
-            # (reference CommonPigFuncs.scala empty-fold parity)
-            pred = nested[e.args[0].base.name][2]
-            col = self.expr(self._strip_bag(
-                e.args[0].field, src_rel), src)
-            kept = f"F.when({self.expr(pred, src)}, {col})"
-            if e.name.lower() == "count":
-                return (f"F.count(F.when({self.expr(pred, src)}, "
-                        f"F.lit(1))).alias({name!r})")
-            if e.name.lower() == "sum":
-                return (f"F.coalesce(F.sum({kept}), F.lit(0))"
-                        f".alias({name!r})")
-            return f"{fn}({kept}).alias({name!r})"
-        if len(e.args) == 1 and isinstance(e.args[0], A.NamedField) \
-                and e.args[0].name == src_rel:
-            # COUNT(A) — bag cardinality
-            return f"F.count(F.lit(1)).alias({name!r})"
-        if len(e.args) == 1:
-            # aggregate over an expression of bag fields, e.g.
-            # SUM(L.l_extendedprice * (1 - L.l_discount)); a single
-            # FILTER-bag reference gates the expression on its
-            # predicate (engine compile_aggregate parity)
-            arg = e.args[0]
-            fbags = {b for b in self._bag_refs_in(arg)
-                     if b in nested and nested[b][2] is not None}
-            if len(fbags) == 1:
-                bname = fbags.pop()
-                pred = nested[bname][2]
-                stripped = self._strip_bag(
-                    self._strip_bag(arg, bname), src_rel)
-                kept = (f"F.when({self.expr(pred, src)}, "
-                        f"{self.expr(stripped, src)})")
-                if e.name.lower() == "count":
-                    return (f"F.count(F.when({self.expr(pred, src)}, "
-                            f"F.lit(1))).alias({name!r})")
-                if e.name.lower() == "sum":
-                    return (f"F.coalesce(F.sum({kept}), F.lit(0))"
-                            f".alias({name!r})")
-                return f"{fn}({kept}).alias({name!r})"
-            col = self.expr(self._strip_bag(arg, src_rel), src)
-            return f"{fn}({col}).alias({name!r})"
+                f"aggregate {e.name} with {len(e.args)} args")
+        rel, src, nested = self.grp
+        name = e.name.lower()
+        arg = e.args[0] if e.args else A.Star()
+        fused = f"{self.rt('AGGREGATES')}[{name!r}].fused"
+        if isinstance(arg, A.Star):
+            return f"{fused}(F.lit(1))"
+        if isinstance(arg, A.NamedField) and arg.name == rel:
+            # COUNT(A) — the whole bag
+            if name in builtins.SIZE_ONLY:
+                return f"{fused}()"
+            return f"{fused}(F.struct(*[F.col(_c) for _c in {src}.columns]))"
+        bags = {n.name for n in iter_expr(arg)
+                if isinstance(n, A.NamedField) and n.name in nested}
+        if not bags:  # the argument reads the pre-group rows
+            return f"{fused}({self._expr_in(None, _strip(arg, {rel}), src)})"
+        bname = min(bags)
+        fld, distinct, pred = nested[bname] if len(bags) == 1 \
+            else (None, False, None)
+        if isinstance(arg, A.NamedField) and fld is not None:
+            # COUNT(u) / SUM(s) over a projected nested bag
+            col = self._expr_in(None, fld, src)
+            if not distinct:
+                return f"{fused}({col})"
+            if name in ("count", "count_star"):
+                return f"F.count_distinct({col})"
+        elif pred is not None and name != "median" and (
+                name in builtins.SIZE_ONLY
+                or not isinstance(arg, A.NamedField)):
+            # COUNT(f), SUM(f.x), SUM(f.x * 2) over a FILTER bag
+            args = [repr(name), self._expr_in(None, pred, src)]
+            if not isinstance(arg, A.NamedField):
+                args.append(self._expr_in(
+                    None, _strip(arg, {rel, bname}), src))
+            return f"{self.rt('filter_aggregate')}({', '.join(args)})"
         raise CodegenUnsupported(
-            f"aggregate {e.name} with {len(e.args)} args")
-
-    def _bag_refs_in(self, e: A.Expr) -> set[str]:
-        """Base names of tuple-derefs (`b.field`) in the expression."""
-        import dataclasses
-        found: set[str] = set()
-
-        def walk(node):
-            if isinstance(node, A.DerefTuple) and \
-                    isinstance(node.base, A.NamedField):
-                found.add(node.base.name)
-                return
-            if dataclasses.is_dataclass(node) and \
-                    not isinstance(node, type):
-                for f in dataclasses.fields(node):
-                    v = getattr(node, f.name)
-                    if dataclasses.is_dataclass(v) and \
-                            not isinstance(v, type):
-                        walk(v)
-                    elif isinstance(v, (list, tuple)):
-                        for x in v:
-                            if dataclasses.is_dataclass(x) and \
-                                    not isinstance(x, type):
-                                walk(x)
-
-        walk(e)
-        return found
+            f"{e.name} over nested bag(s) {sorted(bags)}: only COUNT of "
+            "a DISTINCT bag, and fields of one FILTER bag, fuse")
 
     def op_join(self, op: A.Join) -> None:
         if op.window is not None:
@@ -883,18 +664,13 @@ class _Emitter:
         self.lines.append(f"{v} = {self._df(op.rel)}.distinct()")
 
     def op_window(self, op: A.Window) -> None:
-        """WINDOW … RANGE over a BOUNDED batch source collapses to a
-        single arrival-time window spanning the whole input — engine
-        batch parity (executor.op_window → stream_exec.apply_window:
-        with no declared TIMESTAMP field every row is stamped with
-        the same batch `current_timestamp`, so one window holds the
-        full relation and downstream JOIN/GROUP/FILTER see plain
-        batch semantics; ref SparksCompileIt runs these scripts on
-        bounded files the same way). The generated code therefore
-        aliases the input DataFrame. ROWS (count) windows and true
-        unbounded streams need the engine's stateful runtime
-        (rows_window_stream / applyInPandasWithState) and are not
-        expressible as standalone batch code."""
+        """WINDOW … RANGE over a BOUNDED batch source is one
+        arrival-time window spanning the whole input (engine parity:
+        with no TIMESTAMP field, stream_exec.apply_window stamps every
+        row with the same batch timestamp; ref SparksCompileIt runs
+        these scripts on bounded files the same way), so the generated
+        code aliases the input. ROWS windows and unbounded streams need
+        the engine's stateful runtime."""
         if op.size[1] == "ROWS" or (op.slide and op.slide[1] == "ROWS"):
             raise CodegenUnsupported(
                 "ROWS Window (stateful count windows need the engine "
@@ -921,11 +697,10 @@ class _Emitter:
                    for p in op.params):
             raise CodegenUnsupported(
                 "STREAM THROUGH params must be plain literals")
-        self.rt_imports.add(
-            "from piglet_spark.datapipe.registry import datapipe_ops")
         v = _pyvar(op.out, self.vars)
         args = "".join(f", {p!r}" for p in op.params)
-        call = f"datapipe_ops()[{op.op_name!r}]({self._df(op.rel)}{args})"
+        call = (f"{self.rt('datapipe_ops')}()[{op.op_name!r}]"
+                f"({self._df(op.rel)}{args})")
         if op.schema is not None:
             names = [f.name for f in op.schema.fields]
             call += f".toDF(*{names!r})"
@@ -1000,20 +775,13 @@ class _Emitter:
 
     def op_accumulate(self, op: "A.Accumulate") -> None:
         """ACCUMULATE A GENERATE min(f), … — one global aggregation
-        row (df.agg with map-side partial aggregation)."""
+        row (df.agg with map-side partial aggregation), its generators
+        compiled like a grouped FOREACH's (executor op_accumulate)."""
         src = self._df(op.rel)
         v = _pyvar(op.out, self.vars)
-        aggs = []
-        for i, g in enumerate(op.gens):
-            e = g.expr
-            fn = _AGGS.get(e.name.lower()) \
-                if isinstance(e, A.FuncCall) else None
-            if fn is None or len(e.args) != 1:
-                raise CodegenUnsupported(
-                    "ACCUMULATE generators must be 1-arg aggregates")
-            name = self._gen_name(g, i)
-            aggs.append(f"{fn}({self.expr(e.args[0], src)})"
-                        f".alias({name!r})")
+        aggs = [f"{self._expr_in((op.rel, src, {}), g.expr, src)}"
+                f".alias({self._gen_name(g, i)!r})"
+                for i, g in enumerate(op.gens)]
         self.lines.append(f"{v} = {src}.agg({', '.join(aggs)})")
 
     def op_cross(self, op: A.Cross) -> None:
@@ -1053,12 +821,11 @@ class _Emitter:
                 or len(op.pred.args) != 2:
             raise CodegenUnsupported(
                 "SPATIAL_JOIN needs two inputs and a binary predicate")
-        fname = _SPATIAL_FNS.get(op.pred.name.lower())
-        if fname is None:
+        pname = op.pred.name.lower()
+        if pname not in builtins.SCALARS:
             raise CodegenUnsupported(
                 f"spatial predicate {op.pred.name!r}")
-        self.rt_imports.add(
-            "from piglet_spark.functions import spatial as _rt_sp")
+        self.rt("_rt_sp")
         cell, bsp_args = 1.0, None
         for part in op.partitioners or []:
             if part and part[0].lower() == "bsp":
@@ -1116,8 +883,8 @@ class _Emitter:
         self.lines += [
             f"{v} = ({lt}.join({rt}, on='__cell', how='inner')",
             "    .dropDuplicates(['__lid', '__rid']))",
-            f"{v} = {v}.filter(_rt_sp.{fname}(F.col('__lgeom'), "
-            f"F.col('__rgeom')))",
+            f"{v} = {v}.filter({self.rt('SCALARS')}[{pname!r}]("
+            "F.col('__lgeom'), F.col('__rgeom')))",
             f"{v} = {v}.drop('__cell', '__lid', '__rid', "
             f"'__lgeom', '__rgeom')",
         ]
@@ -1186,20 +953,9 @@ class _Emitter:
         func = (op.func or "PigStorage").split(".")[-1].lower()
         if func == "pigstorage":
             delim = str(op.func_args[0]) if op.func_args else ","
-            if self.rt_imports:
-                # the script used spatial/matrix builders: STObject /
-                # DenseMatrix text rendering lives in the runtime
-                # formatter (sources/storage.py), which the inline
-                # _pig_store helper doesn't carry
-                self.rt_imports.add(
-                    "from piglet_spark.sources.storage "
-                    "import pig_format_rows as _rt_fmt")
-                self.lines.append(
-                    f"_rt_fmt({src}, {delim!r}).write"
-                    f".mode('overwrite').text({op.path!r})")
-                return
             self.lines.append(
-                f"_pig_store({src}, {delim!r}, {op.path!r})")
+                f"{self.rt('pig_format_rows')}({src}, {delim!r}).write"
+                f".mode('overwrite').text({op.path!r})")
         elif func in ("parquetstorage", "binstorage"):
             self.lines.append(
                 f"{src}.write.mode('overwrite').parquet({op.path!r})")
@@ -1230,16 +986,9 @@ class _Emitter:
             src_rel, keys = self.groups[alias]
             src = self._df(src_rel)
             v = self.fresh()
-            bag = (f"F.collect_list(F.struct(*[F.col(_c) for _c in "
-                   f"{src}.columns])).alias({src_rel!r})")
-            if not keys:
-                gb = "F.lit('all').alias('group')"
-            elif len(keys) == 1:
-                gb = f"{self.expr(keys[0], src)}.alias('group')"
-            else:
-                parts = ", ".join(self.expr(k, src) for k in keys)
-                gb = f"F.struct({parts}).alias('group')"
-            self.lines.append(f"{v} = {src}.groupBy({gb}).agg({bag})")
+            self.lines.append(f"{v} = {src}.groupBy("
+                              f"{self._group_key(keys, src, 'group')})"
+                              f".agg({_bag(src, src_rel)})")
             self.vars[marker] = v
             return v
         if alias not in self.vars:
@@ -1252,9 +1001,5 @@ def to_code(ops: list[A.Op]) -> str:
     em = _Emitter()
     for op in ops:
         em.emit(op)
-    rt = ""
-    if em.rt_imports:
-        rt = ("# runtime-library linkage (spatial/matrix builders — "
-              "the sparklib-jar analogue)\n"
-              + "\n".join(sorted(em.rt_imports)) + "\n\n")
-    return _PROLOGUE + rt + "\n".join(em.lines) + "\n"
+    rt = "".join(f"\n{_RUNTIME[n]}" for n in sorted(em.runtime))
+    return _PROLOGUE + rt + "\n\n\n" + "\n".join(em.lines) + "\n"

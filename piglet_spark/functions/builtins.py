@@ -35,8 +35,9 @@ class AggSpec:
 
 def _round_scale(s) -> int:
     """ROUND's scale must be a literal int — silently rounding to 0
-    decimals for a column-valued scale was a wrong-result trap (r05)."""
-    if isinstance(s, int):
+    decimals for a column-valued scale was a wrong-result trap (r05).
+    A boolean is not a scale, though Python counts it as an int."""
+    if isinstance(s, int) and not isinstance(s, bool):
         return s
     raise ValueError(
         "ROUND scale must be an integer literal, got a "
@@ -74,10 +75,11 @@ def _array_avg(arr: Column) -> Column:
 def _array_median(arr: Column) -> Column:
     """Upper median of the non-null values (r05: nulls sort last, so a
     null-inclusive size skewed the index — [1, NULL, 2, 3] gave 3 where
-    the fused form gives 2)."""
+    the fused form gives 2). ``try_element_at``: an all-null bag gives
+    NULL under ANSI SQL too, not an index error."""
     vals = F.array_sort(_nonnull(arr))
-    return F.element_at(vals,
-                        (F.floor(F.size(vals) / 2) + 1).cast("int"))
+    return F.try_element_at(vals,
+                            (F.floor(F.size(vals) / 2) + 1).cast("int"))
 
 
 def _array_var(arr: Column) -> Column:
@@ -128,7 +130,7 @@ AGGREGATES: dict[str, AggSpec] = {
     # both forms skip nulls (collect_list drops them; the array form
     # filters)
     "median": AggSpec(
-        fused=lambda c: F.element_at(
+        fused=lambda c: F.try_element_at(
             F.array_sort(F.collect_list(c)),
             (F.floor(F.count(c) / 2) + 1).cast("int"),
         ),
@@ -175,6 +177,22 @@ SIZE_ONLY = frozenset(["count", "count_star", "isempty", "nonempty"])
 
 def is_aggregate(name: str) -> bool:
     return name.lower() in AGGREGATES
+
+
+def filter_aggregate(name: str, pred: Column,
+                     col: Optional[Column] = None) -> Column:
+    """Aggregate ``name`` over the rows of a nested ``FILTER`` bag, fused
+    into Catalyst partial aggregation as ``agg(when(pred, x))`` — no
+    per-group array. COUNT counts the kept tuples, null fields
+    included; ISEMPTY/NONEMPTY test that count; the value aggregates
+    fold ``col`` over the kept rows, skipping nulls as their array
+    folds do."""
+    if name in SIZE_ONLY:
+        kept = F.count(F.when(pred, F.lit(1)))
+        if name == "isempty":
+            return kept == 0
+        return kept > 0 if name == "nonempty" else kept
+    return AGGREGATES[name].fused(F.when(pred, col))
 
 
 # -------------------------------------------------------------- scalars

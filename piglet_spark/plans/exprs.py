@@ -10,6 +10,8 @@ registered one.
 from __future__ import annotations
 
 import dataclasses
+import inspect
+from collections.abc import Iterator
 from typing import Any, Callable, Optional
 
 from pyspark.sql import Column, DataFrame
@@ -163,7 +165,7 @@ def static_dtype(expr: A.Expr, ctx: Ctx) -> Optional[T.DataType]:
                 # type preservation)
                 return base.elementType[expr.field.name].dataType
             return None
-    except Exception:
+    except (S.UnknownFieldError, S.AmbiguousFieldError, KeyError):
         return None
     return None
 
@@ -178,6 +180,47 @@ def _priority(dt: T.DataType) -> int:
 
 def resolve_named(expr: A.NamedField, ctx: Ctx) -> str:
     return S.resolve_column(ctx.columns, expr.name, expr.lineage)
+
+
+def _children(e: A.Expr) -> Iterator[tuple[str, Any, list]]:
+    """(field name, value, value as a list) of each field of ``e`` that
+    holds an expression or a list/tuple holding one."""
+    for f in dataclasses.fields(e):
+        v = getattr(e, f.name)
+        items = list(v) if isinstance(v, (list, tuple)) else [v]
+        if any(isinstance(x, A.Expr) for x in items):
+            yield f.name, v, items
+
+
+def iter_expr(e: A.Expr,
+              prune: Callable[[A.Expr], bool] = lambda n: False
+              ) -> Iterator[A.Expr]:
+    """Every node of the expression tree rooted at ``e``, pre-order;
+    the subtree below a node for which ``prune`` holds is skipped."""
+    yield e
+    if not prune(e):
+        for _, _, items in _children(e):
+            for x in items:
+                if isinstance(x, A.Expr):
+                    yield from iter_expr(x, prune)
+
+
+def map_expr(e: A.Expr,
+             fn: Callable[[A.Expr], Optional[A.Expr]]) -> A.Expr:
+    """``e`` with every node for which ``fn`` returns a replacement
+    swapped for it, pre-order (a replaced node's subtree is not
+    visited). Unchanged subtrees are shared, not copied."""
+    new = fn(e)
+    if new is not None:
+        return new
+    kw = {}
+    for name, v, items in _children(e):
+        out = [map_expr(x, fn) if isinstance(x, A.Expr) else x
+               for x in items]
+        if any(a is not b for a, b in zip(items, out)):
+            kw[name] = type(v)(out) if isinstance(v, (list, tuple)) \
+                else out[0]
+    return dataclasses.replace(e, **kw) if kw else e
 
 
 def compile_expr(expr: A.Expr, ctx: Ctx) -> Column:
@@ -272,17 +315,11 @@ def compile_expr(expr: A.Expr, ctx: Ctx) -> Column:
     raise CompileError(f"cannot compile expression {expr!r}")
 
 
-def _is_nondeterministic(expr: Any) -> bool:
+def _is_nondeterministic(expr: A.Expr) -> bool:
     """Whether an expression (sub)tree contains a nondeterministic
     builtin call (RANDOM). User UDFs are assumed deterministic."""
-    if isinstance(expr, A.FuncCall) and expr.name.lower() == "random":
-        return True
-    if dataclasses.is_dataclass(expr):
-        return any(_is_nondeterministic(getattr(expr, f.name))
-                   for f in dataclasses.fields(expr))
-    if isinstance(expr, (list, tuple)):
-        return any(_is_nondeterministic(v) for v in expr)
-    return False
+    return any(isinstance(n, A.FuncCall) and n.name.lower() == "random"
+               for n in iter_expr(expr))
 
 
 def compile_deref(expr: A.DerefTuple, ctx: Ctx) -> Column:
@@ -445,6 +482,75 @@ def _is_str_lit(e: A.Expr, value: str) -> bool:
             and e.value == value)
 
 
+# builtins whose arguments after the first must be raw Python strings
+# (a regex, needle or JSONPath): a Column there would be resolved as a
+# column name or stringified
+_RAW_STR_TAIL = frozenset(["strsplit", "regex_extract", "indexof",
+                           "json_get"])
+
+
+def _check_arity(name: str, n: int) -> None:
+    """Raise CompileError, at build time, when a builtin scalar gets a
+    number of arguments its definition does not take."""
+    sig = inspect.signature(builtins.SCALARS[name])
+    try:
+        sig.bind(*range(n))
+        return
+    except TypeError:
+        pass
+    pos = [p for p in sig.parameters.values()
+           if p.kind in (p.POSITIONAL_ONLY, p.POSITIONAL_OR_KEYWORD)]
+    lo = sum(p.default is p.empty for p in pos)
+    hi = None if any(p.kind is p.VAR_POSITIONAL
+                     for p in sig.parameters.values()) else len(pos)
+    if hi is not None and n > hi:
+        want = f"at most {hi}" if lo < hi else str(hi)
+    else:
+        want = str(lo) if lo == hi else f"at least {lo}"
+    raise CompileError(f"{name.upper()} takes {want} argument(s), got {n}")
+
+
+def scalar_args(expr: A.FuncCall, compile_arg: Callable[[A.Expr], Any],
+                lit: Callable[[Any], Any] = F.lit,
+                raw: Callable[[Any], Any] = lambda v: v) -> list:
+    """The arguments of a call to ``builtins.SCALARS[name]`` — one rule
+    for the engine and for generated code (codegen passes source-text
+    callables). A matrix constructor's bag argument unrolls to its
+    elements: ``ddmatrix(2, 3, {v1, v2, ...})``. Number and boolean
+    literals pass ``raw`` (builders need Python values for ROUND's
+    scale, SUBSTRING's bounds, matrix dims). String literals pass
+    ``lit`` — a raw string would resolve as a column name — except the
+    tail of the ``_RAW_STR_TAIL`` builders. Every other argument goes
+    through ``compile_arg``. Arity, JSON_GET's literal path and ROUND's
+    integer literal scale are checked here, at build time."""
+    name = expr.name.lower()
+    args = list(expr.args)
+    if name.endswith("matrix") and len(args) == 3 and \
+            isinstance(args[2], A.BagCons):
+        args = args[:2] + args[2].exprs
+    _check_arity(name, len(args))
+    if name == "json_get" and not (isinstance(args[1], A.Literal)
+                                   and isinstance(args[1].value, str)):
+        raise CompileError("JSON_GET path must be a string literal")
+    if name == "round" and len(args) == 2:
+        scale = args[1]
+        try:
+            builtins._round_scale(
+                scale.value if isinstance(scale, A.Literal) else scale)
+        except ValueError as e:
+            raise CompileError(str(e)) from None
+
+    def conv(i: int, a: A.Expr):
+        if not isinstance(a, A.Literal):
+            return compile_arg(a)
+        if isinstance(a.value, str) and not (name in _RAW_STR_TAIL
+                                             and i >= 1):
+            return lit(a.value)
+        return raw(a.value)
+
+    return [conv(i, a) for i, a in enumerate(args)]
+
+
 def compile_func(expr: A.FuncCall, ctx: Ctx) -> Column:
     name = expr.name.lower()
 
@@ -537,43 +643,9 @@ def compile_func(expr: A.FuncCall, ctx: Ctx) -> Column:
             F.slice(F.reverse(F.array_sort(keyed)), 1, n),
             lambda s: s["_t"])
 
-    scalar = builtins.lookup_scalar(name)
-    if scalar is not None:
-        raw_args = list(expr.args)
-        # matrix constructors take the bag's elements directly:
-        # ddmatrix(2, 3, {v1, v2, ...}) (Language.md matrix constructor)
-        if name.endswith("matrix") and len(raw_args) == 3 and \
-                isinstance(raw_args[2], A.BagCons):
-            raw_args = raw_args[:2] + raw_args[2].exprs
-        # number/bool literals pass through raw (builders need python
-        # ints for round scale / substring bounds / matrix dims).
-        # STRING literals become F.lit — otherwise F.concat/create_map
-        # would resolve them as column names — except the TAIL args of
-        # builders whose Spark function requires a raw regex/needle
-        # string; the first (haystack) arg is always lit-wrapped, or a
-        # literal haystack would resolve as a column name (r06 fuzzer:
-        # INDEXOF('', 'a') raised UNRESOLVED_COLUMN).
-        raw_str_tail = name in ("strsplit", "regex_extract", "indexof",
-                                "json_get")
-        if name == "json_get":
-            # the path drives get_json_object's JSONPath STRING —
-            # a Column here would stringify as "Column<...>" and
-            # build garbage; mirror codegen.py's literal-only rule
-            if len(raw_args) != 2 or \
-                    not isinstance(raw_args[1], A.Literal) or \
-                    not isinstance(raw_args[1].value, str):
-                raise CompileError(
-                    "JSON_GET path must be a string literal")
-
-        def conv(i, a):
-            if isinstance(a, A.Literal):
-                if isinstance(a.value, str) and not (raw_str_tail
-                                                     and i >= 1):
-                    return F.lit(a.value)
-                return a.value
-            return compile_expr(a, ctx)
-
-        return scalar(*[conv(i, a) for i, a in enumerate(raw_args)])
+    if name in builtins.SCALARS:
+        return builtins.SCALARS[name](
+            *scalar_args(expr, lambda a: compile_expr(a, ctx)))
 
     # user-registered function (DEFINE / embedded python / registry)
     fn = ctx.udfs.get(expr.name) or ctx.udfs.get(name)
@@ -590,111 +662,62 @@ def compile_func(expr: A.FuncCall, ctx: Ctx) -> Column:
     raise CompileError(f"unknown function {expr.name!r}{hint}")
 
 
-def _bag_bases_in(e, ctx: Ctx) -> set[str]:
+def _bag_bases_in(e: A.Expr, ctx: Ctx) -> set[str]:
     """Names of bag (array<struct>) columns dereferenced anywhere in
-    the expression tree (generic dataclass walk)."""
-    import dataclasses as _dc
-    found: set[str] = set()
-
-    def walk(node):
-        if isinstance(node, A.DerefTuple) and \
-                isinstance(node.base, A.NamedField):
-            try:
-                dt = static_dtype(node.base, ctx)
-            except Exception:
-                dt = None
+    the expression tree."""
+    found = set()
+    for n in iter_expr(e):
+        if isinstance(n, A.DerefTuple) and isinstance(n.base, A.NamedField):
+            dt = static_dtype(n.base, ctx)
             if isinstance(dt, T.ArrayType) and \
                     isinstance(dt.elementType, T.StructType):
-                found.add(node.base.name)
-            return
-        if _dc.is_dataclass(node) and not isinstance(node, type):
-            for f in _dc.fields(node):
-                v = getattr(node, f.name)
-                if _dc.is_dataclass(v) and not isinstance(v, type):
-                    walk(v)
-                elif isinstance(v, (list, tuple)):
-                    for item in v:
-                        if _dc.is_dataclass(item) and \
-                                not isinstance(item, type):
-                            walk(item)
-
-    walk(e)
+                found.add(n.base.name)
     return found
 
 
-def _nested_bag_refs(e, ctx: Ctx) -> Optional[set[str]]:
+def _nested_deref(n: A.Expr, bags: dict) -> Optional[str]:
+    """The nested-bag alias ``n`` dereferences (``f.x``), if any."""
+    if isinstance(n, A.DerefTuple) and isinstance(n.base, A.NamedField) \
+            and n.base.name in bags:
+        return n.base.name
+    return None
+
+
+def _nested_bag_refs(e: A.Expr, ctx: Ctx) -> Optional[set[str]]:
     """Nested-bag aliases referenced inside the expression tree —
     field derefs (``f.x``) of whole-tuple bags, or bare names of
     PROJECTED bags (``s`` in ``SUM(s * 2)``, an element-wise use).
     None if a reference isn't strippable to pre-group columns (a bare
     whole-tuple bag, or a deref of a projected bag)."""
-    import dataclasses as _dc
+    bags = ctx.nested_bags
     found: set[str] = set()
-    bad = False
-
-    def walk(node):
-        nonlocal bad
-        if isinstance(node, A.DerefTuple) and \
-                isinstance(node.base, A.NamedField) and \
-                node.base.name in ctx.nested_bags:
-            if ctx.nested_bags[node.base.name].proj is not None:
-                bad = True
-                return
-            found.add(node.base.name)
-            walk(node.field)
-            return
-        if isinstance(node, A.NamedField) and node.name in ctx.nested_bags:
-            if ctx.nested_bags[node.name].proj is None:
-                bad = True
-            else:
-                found.add(node.name)
-            return
-        if _dc.is_dataclass(node) and not isinstance(node, type):
-            for f in _dc.fields(node):
-                v = getattr(node, f.name)
-                if _dc.is_dataclass(v) and not isinstance(v, type):
-                    walk(v)
-                elif isinstance(v, (list, tuple)):
-                    for item in v:
-                        if _dc.is_dataclass(item) and \
-                                not isinstance(item, type):
-                            walk(item)
-
-    walk(e)
-    return None if bad else found
+    for n in iter_expr(e, lambda m: _nested_deref(m, bags) is not None):
+        deref = _nested_deref(n, bags)
+        name = deref or (n.name if isinstance(n, A.NamedField) else None)
+        if name not in bags:
+            continue
+        # a deref needs a whole-tuple bag, a bare name a projected one
+        if (bags[name].proj is None) != (deref is not None):
+            return None
+        found.add(name)
+    return found
 
 
-def _strip_nested_refs(e, bname: str, bag) -> A.Expr:
+def _strip_nested_refs(e: A.Expr, bname: str, bag) -> A.Expr:
     """Rewrite ``bname.field`` derefs (whole-tuple bags) or bare
     ``bname`` refs (projected bags) to plain pre-group field refs —
     the fused-aggregation view of the bag."""
-    import dataclasses as _dc
-    if isinstance(e, A.DerefTuple) and isinstance(e.base, A.NamedField) \
-            and e.base.name == bname:
-        f = e.field
-        if isinstance(f, A.PositionalField) and bag.whole_cols is not None:
-            return A.NamedField(name=bag.whole_cols[f.pos])
-        return f
-    if isinstance(e, A.NamedField) and e.name == bname \
-            and bag.proj is not None:
-        return A.NamedField(name=bag.proj)
-    if _dc.is_dataclass(e) and not isinstance(e, type):
-        kw, changed = {}, False
-        for f in _dc.fields(e):
-            v = getattr(e, f.name)
-            if _dc.is_dataclass(v) and not isinstance(v, type):
-                nv = _strip_nested_refs(v, bname, bag)
-                changed |= nv is not v
-                kw[f.name] = nv
-            elif isinstance(v, (list, tuple)):
-                nv = [(_strip_nested_refs(x, bname, bag)
-                       if _dc.is_dataclass(x) and not isinstance(x, type)
-                       else x) for x in v]
-                changed |= any(a is not b for a, b in zip(v, nv))
-                kw[f.name] = type(v)(nv) if isinstance(v, tuple) else nv
-        if changed:
-            return _dc.replace(e, **kw)
-    return e
+    def strip(n: A.Expr) -> Optional[A.Expr]:
+        if _nested_deref(n, {bname: bag}):
+            if isinstance(n.field, A.PositionalField) \
+                    and bag.whole_cols is not None:
+                return A.NamedField(name=bag.whole_cols[n.field.pos])
+            return n.field
+        if isinstance(n, A.NamedField) and n.name == bname \
+                and bag.proj is not None:
+            return A.NamedField(name=bag.proj)
+        return None
+    return map_expr(e, strip)
 
 
 def compile_aggregate(expr: A.FuncCall, ctx: Ctx) -> Column:
@@ -734,17 +757,8 @@ def compile_aggregate(expr: A.FuncCall, ctx: Ctx) -> Column:
                 pred = bag.filter_pred(ctx)
                 if pred is not None:
                     # FILTER-only bag → Catalyst partial aggregation
-                    # over when(pred, x); COUNT counts kept TUPLES
-                    # (the array form sizes the projected bag, null
-                    # field values included), the rest null-skip
-                    # exactly like their array folds.
-                    if name in ("count", "count_star"):
-                        return F.count(F.when(pred, F.lit(1)))
-                    if name == "isempty":
-                        return F.count(F.when(pred, F.lit(1))) == 0
-                    if name == "nonempty":
-                        return F.count(F.when(pred, F.lit(1))) > 0
-                    return spec.fused(F.when(pred, bag.src[fname]))
+                    return builtins.filter_aggregate(name, pred,
+                                                     bag.src[fname])
             et = (bag.src.schema[fname].dataType
                   if bag.proj is None and fname in bag.src.columns
                   else None)
@@ -778,12 +792,9 @@ def compile_aggregate(expr: A.FuncCall, ctx: Ctx) -> Column:
                         col = compile_expr(stripped, ctx)
                     finally:
                         ctx.in_agg = prev
-                    if name in ("count", "count_star"):
-                        return F.count(F.lit(1) if pred is None
-                                       else F.when(pred, F.lit(1)))
-                    if pred is not None:
-                        col = F.when(pred, col)
-                    return spec.fused(col)
+                    if pred is None:
+                        return spec.fused(col)
+                    return builtins.filter_aggregate(name, pred, col)
         prev, ctx.in_agg = ctx.in_agg, True
         try:
             col = compile_expr(arg, ctx)

@@ -3,12 +3,16 @@ engine's own results (ref api/PigletInterpreterAPI.createCodeFromInput,
 api/PigletInterpreterAPI.scala:30-49).
 """
 
+import inspect
+import math
+
 import pytest
 
 import piglet_spark as pg
 from piglet_spark.codegen import CodegenUnsupported
 
 from .test_reference_conformance import REF, needs_reference
+from .test_registry import _load_entry
 
 
 def _exec_code(spark, code):
@@ -57,7 +61,7 @@ def test_codegen_nested_filter_bag_matches_engine(spark, data_dir):
     code = eng.to_code(script)
     ns = _exec_code(spark, code)
     assert _rows(ns["U"]) == _rows(eng.df("U"))
-    assert "F.when" in code and "collect_list" not in code
+    assert "filter_aggregate(" in code and "collect_list" not in code
 
 
 def test_codegen_grouped_star_matches_engine(spark, data_dir):
@@ -404,3 +408,116 @@ def test_codegen_round_agg_arity_and_bool_scale(spark, sf_dir):
         eng.to_code(base +
                     "A = FOREACH G GENERATE group AS rf,"
                     " ROUND(AVG(L.l_quantity), true) AS x;\n")
+
+
+
+@pytest.mark.parametrize("call", ["ROUND({}, 6, 1)", "ROUND({}, true)"])
+@pytest.mark.parametrize("arg", ["AVG(L.l_quantity)", "l_quantity"])
+def test_round_arity_and_bool_scale_are_compile_errors(spark, sf_dir,
+                                                       call, arg):
+    """The engine refuses ROUND with 3 args or a boolean scale at build
+    time with a CompileError naming ROUND (not a raw TypeError or
+    AnalysisException), over an aggregate and over a plain field;
+    to_code refuses the same calls with CodegenUnsupported."""
+    from piglet_spark.plans.exprs import CompileError
+    load = f"L = LOAD '{sf_dir}/lineitem.parquet' USING ParquetStorage();\n"
+    if arg.startswith("AVG"):
+        script = load + ("G = GROUP L BY l_returnflag;\n"
+                         f"A = FOREACH G GENERATE {call.format(arg)} AS x;\n")
+    else:
+        script = load + f"A = FOREACH L GENERATE {call.format(arg)} AS x;\n"
+    eng = pg.PigEngine(spark)
+    with pytest.raises(CompileError, match="ROUND"):
+        eng.run(script)
+    with pytest.raises(CodegenUnsupported, match="ROUND"):
+        eng.to_code(script)
+
+def _pig_registry():
+    """name → {"script", "result"} of every `_pig(script, result)`
+    entry of the driver registry (`__spark_entry__.queries()`)."""
+    mod = _load_entry()
+    pig_code = mod._pig("", "").__code__
+    return {name: inspect.getclosurevars(fn).nonlocals
+            for name, fn in mod.queries().items()
+            if getattr(fn, "__code__", None) is pig_code}
+
+
+# Pig registry queries whose generated code runs and matches the
+# engine on rows and dtypes
+REGISTRY_SUPPORTED = {
+    "q2_min_bal_supplier", "q9_profit_nation_year", "q11_important_parts",
+    "q15_top_supplier", "q16_brand_size_suppliers",
+    "q20_promotion_suppliers", "q21_waiting_suppliers",
+    "spatial_join_grid", "events_props_json", "sample_op",
+    "q1_pricing_summary", "q3_top_revenue", "q5_region_revenue",
+    "filter_project", "group_having", "distinct_op", "order_limit_top",
+    "spatial_filter_pip", "bgp_filter_join", "cross_op", "split_into",
+    "nested_foreach_distinct", "events_hourly", "wordcount_flatten",
+    "selfjoin_lineage", "q6_forecast_revenue", "q10_returned_items",
+    "q4_semijoin_priority", "q7_volume_shipping", "q12_priority_lines",
+    "q18_large_orders", "q19_disjunctive_rev",
+    # ROUND(x, 2) kept its scale only once codegen called SCALARS
+    "q14_promo_revenue",
+    # emitted once aggregates came from builtins.AGGREGATES
+    "median_agg", "accumulate_op", "q8_market_share",
+    "q17_small_qty_revenue",
+}
+
+# query → substring of its CodegenUnsupported message
+REGISTRY_UNSUPPORTED = {
+    "cep_next_match_pooled": "operator SetCmd",
+    "cep_seq_match": "operator SetCmd",
+    "salted_join_agg": "JOIN USING 'salted(8)'",
+    "zip_index_stats": "operator Zip",
+    "rank_parts": "operator Rank",
+    "cube_rollup_grouping": "operator Cube",
+    "set_ops_combined": "operator Intersection",
+    "bgp_grouped_star": "operator Tuplify",
+    "tuplify_group": "operator Tuplify",
+    "cogroup_op": "operator CoGroup",
+    "q13_custdist_cogroup": "operator CoGroup",
+    "q22_no_order_customers": "operator Difference",
+}
+
+_PIG_REGISTRY = _pig_registry()
+
+
+def test_codegen_registry_partition_is_exhaustive():
+    assert REGISTRY_SUPPORTED | set(REGISTRY_UNSUPPORTED) == \
+        set(_PIG_REGISTRY)
+    assert not REGISTRY_SUPPORTED & set(REGISTRY_UNSUPPORTED)
+
+
+def _norm(v):
+    """Order-free comparable form of a value: floats to 9 significant
+    digits (generated and engine plans may sum in another order)."""
+    if isinstance(v, float):
+        return "nan" if math.isnan(v) else float(f"{v:.9g}")
+    if isinstance(v, (list, tuple)):
+        return tuple(_norm(x) for x in v)
+    if isinstance(v, dict):
+        return tuple(sorted((k, _norm(x)) for k, x in v.items()))
+    return v
+
+
+def _norm_rows(df):
+    return sorted((_norm(tuple(r)) for r in df.collect()), key=repr)
+
+
+@pytest.mark.parametrize("query", sorted(_PIG_REGISTRY))
+def test_codegen_registry_sweep(spark, sf_dir, query):
+    """Every Pig registry query either emits code whose result equals
+    the engine's on sorted rows and dtypes, or refuses with its pinned
+    reason."""
+    q = _PIG_REGISTRY[query]
+    eng = pg.PigEngine(spark, params={"sf": sf_dir})
+    if query in REGISTRY_UNSUPPORTED:
+        with pytest.raises(CodegenUnsupported) as ei:
+            eng.to_code(q["script"])
+        assert REGISTRY_UNSUPPORTED[query] in str(ei.value)
+        return
+    ns = _exec_code(spark, eng.to_code(q["script"]))
+    eng.run(q["script"])
+    got, want = ns[q["result"]], eng.df(q["result"])
+    assert got.dtypes == want.dtypes
+    assert _norm_rows(got) == _norm_rows(want)

@@ -167,18 +167,22 @@ U = FOREACH G {{
 def test_nested_foreach_composite_expr_over_filter_bag(spark, data_dir):
     """SUM over an EXPRESSION of filtered-bag fields rewrites to
     agg(when(pred, expr)) — nesting the bag's collect_list inside the
-    aggregate is illegal in Spark (NESTED_AGGREGATE_FUNCTION)."""
+    aggregate is illegal in Spark (NESTED_AGGREGATE_FUNCTION). ISEMPTY
+    over such an expression tests the rows the FILTER keeps, not the
+    group's rows."""
     df = run(spark, f"""
 A = LOAD '{data_dir}/t.csv' USING PigStorage(',') AS (f1:int, f2:int, f3:int);
 G = GROUP A BY f1;
 U = FOREACH G {{
     f = FILTER A BY f3 >= 4;
-    GENERATE group AS f1, SUM(f.f2 * 10 + f.f3) AS s;
+    g = FILTER A BY f3 >= 5;
+    GENERATE group AS f1, SUM(f.f2 * 10 + f.f3) AS s,
+             ISEMPTY(g.f2 * 10) AS e;
 }};
 """, "U")
-    # group 1: only (1,2,4) passes → 24; group 4: (4,5,6) → 56;
-    # group 7: (7,8,9) → 89
-    assert rows(df) == [(1, 24), (4, 56), (7, 89)]
+    # group 1: only (1,2,4) passes → 24, and nothing passes f3 >= 5;
+    # group 4: (4,5,6) → 56; group 7: (7,8,9) → 89
+    assert rows(df) == [(1, 24, True), (4, 56, False), (7, 89, False)]
 
 
 def test_join_lineage(spark, data_dir):
@@ -969,6 +973,31 @@ X = FOREACH H {{ vs = B.v; GENERATE group AS k, SUM(vs) AS s; }};
     line = sorted(r["value"] for r in pig_format_rows(
         env["M"].select("k", "s"), ",").collect())
     assert line == ["a,6", "b,5"]
+
+
+def test_median_all_null_group_is_null_under_ansi(spark, tmp_path):
+    """MEDIAN of an all-null group is NULL with ANSI SQL on, in the
+    fused form and in the bag (array) form — not an
+    INVALID_ARRAY_INDEX_IN_ELEMENT_AT error from indexing the empty
+    array of non-null values."""
+    p = tmp_path / "med.csv"
+    p.write_text("a,\na,\nb,3\nb,5\nb,\n")
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        eng = pg.PigEngine(spark, options={"piglet.ansi": True})
+        env = eng.run(f"""
+A = LOAD '{p}' USING PigStorage(',') AS (k:chararray, v:int);
+G = GROUP A BY k;
+M = FOREACH G GENERATE group AS k, MEDIAN(A.v) AS med;
+B = FOREACH G GENERATE group AS k, A AS bag;
+N = FOREACH B GENERATE k, MEDIAN(bag.v) AS med;
+""")
+        for alias in ("M", "N"):
+            got = sorted(tuple(r) for r in env[alias].collect())
+            assert got == [("a", None), ("b", 5)], alias
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
 def test_strsplit_honors_limit(spark, tmp_path):
